@@ -450,7 +450,7 @@ def plan_audit(df: DataFrame, python_ok: bool = False) -> dict:
     * ``row_python_stages`` (``BatchEvalPython``) — row-at-a-time
       Python; 10-100x slower than Arrow-batched, never acceptable.
     * ``arrow_python_stages`` — Arrow-batched Python (pandas_udf /
-      InPandas).  Legitimate for kernels with no JVM twin (codecs,
+      InPandas / MapInArrow).  Legitimate for kernels with no JVM twin (codecs,
       FFT); flagged so the reader can check each one is deliberate.
       Suppressed from ``findings`` when ``python_ok=True``.
     * ``single_partition_exchanges`` — global funnels.  Benign only as
@@ -493,7 +493,9 @@ def plan_audit(df: DataFrame, python_ok: bool = False) -> dict:
         "broadcast_nested_loop_joins": plan.count("BroadcastNestedLoopJoin"),
         "row_python_stages": plan.count("BatchEvalPython"),
         "arrow_python_stages": (
-            plan.count("ArrowEvalPython") + plan.count("InPandas")
+            plan.count("ArrowEvalPython")
+            + plan.count("InPandas")
+            + plan.count("MapInArrow")
         ),
         "single_partition_exchanges": plan.count("Exchange SinglePartition"),
         "unguarded_rank_funnels": _count_unguarded_rank_funnels(plan),

@@ -100,7 +100,7 @@ def load_acquisition(
     meta = load_meta(folder, sensor)
     raw = decode_dat(spark, os.path.join(folder, f"{sensor}.dat"), meta.params)
     enriched = tm.attach_literals(
-        tm.to_absolute_time(sanitize_columns(raw.drop("_file")), meta.start_ns),
+        tm.to_absolute_time(sanitize_columns(raw), meta.start_ns),
         alias=meta.alias,
     )
     return enriched, meta
@@ -137,8 +137,9 @@ def process_acquisition(
     rms_out = rms.withColumns({k: F.lit(v) for k, v in parts.items()})
 
     # Both sinks and the empty-check (main.py:154-156) consume the same
-    # decode->enrich lineage; without caching, the mapInPandas .dat
-    # decode would run 3x (enriched write, RMS count, RMS write).
+    # decode->enrich lineage; without caching, the mapInArrow .dat
+    # decode (one task per packet-aligned range, spread over every
+    # core) would run 3x (enriched write, RMS count, RMS write).
     # Persist the shared ancestor once (spills to disk if the
     # acquisition exceeds executor memory) and the tiny RMS aggregate,
     # so decode and the RMS agg each execute exactly once.
@@ -150,7 +151,10 @@ def process_acquisition(
         if n_rms == 0:
             # main.py:154-156: no full 1 s window -> RMS table not written
             return {"rms_rows": 0, "rms_written": False, "meta": meta}
-        tm.write_hive_partitioned(rms_out, f"{out_root}/{sensor}_rms")
+        # at most one row per second of acquisition, so one file: the
+        # global orderBy in tumbling_rms would otherwise write one small
+        # file per shuffle partition
+        tm.write_hive_partitioned(rms_out.coalesce(1), f"{out_root}/{sensor}_rms")
         return {"rms_rows": n_rms, "rms_written": True, "meta": meta}
     finally:
         rms_out.unpersist()

@@ -10,11 +10,12 @@ here).
 
 Scale design: fixed packet length means any multiple of it is a clean
 framing boundary, so files decode as packet-aligned BYTE RANGES — a
-``mapInPandas`` kernel (numpy ``frombuffer``, zero-copy reshape) per
-range, ranged reads (local seek / ``pyarrow.fs`` object-store GET),
-no shuffle of sample data; parallel across acquisitions AND within a
-large file (one 1-hour 96M-sample acquisition is ~10 ranges, so a
-single hot file can never serialize a stage).
+``mapInArrow`` kernel (numpy ``frombuffer``, zero-copy reshape, Arrow
+record batches out) per range, ranged reads (local seek /
+``pyarrow.fs`` object-store GET), no shuffle of sample data.  Ranges
+are sized from the session's ``defaultParallelism``, so one file
+spreads over every core, and never fall below ``RANGE_FLOOR_BYTES`` (a
+small file stays one range) nor exceed ``split_bytes``.
 Per-sample timestamps are derived from packet timestamps (the packet
 stamp is the time of its last sample [inferred from the missing-core
 converter's per-sample Time output, main.py:84-101]) so clock drift
@@ -27,10 +28,10 @@ from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 # on-wire sample dtypes (TypeConversion in the missing stdatalog_core;
 # SURVEY §1.2 [inferred] int8..float64 family)
@@ -46,6 +47,11 @@ _NP_DTYPES = {
     "double": np.float64,
     "float64": np.float64,
 }
+
+# Smallest byte range a file is cut into (rounded down to whole
+# packets): a range costs one Python-worker round trip, so files up to
+# this size decode as a single range.
+RANGE_FLOOR_BYTES = 1 << 20
 
 
 def np_dtype(name: str) -> np.dtype:
@@ -155,7 +161,6 @@ def decode_schema(params: DecodeParams) -> StructType:
     return StructType(
         [StructField("Time", DoubleType())]
         + [StructField(name, DoubleType()) for name in params.axis_names]
-        + [StructField("_file", StringType())]
     )
 
 
@@ -200,95 +205,106 @@ def decode_dat(
 ) -> DataFrame:
     """Distributed ``.dat`` scan decoded over PACKET-ALIGNED byte
     ranges: packets are fixed-length (``params.packet_len``), so any
-    multiple of it is a clean framing boundary — a large file splits
-    into ``split_bytes``-sized ranges decoded in parallel instead of
-    serializing on one whole-file task (the reference decodes one file
-    per process, main.py:84-85; a 1-hour 96M-sample acquisition here
-    is ~10 ranges across the cluster, and a multi-GB file can never
-    bottleneck a stage).  Per-packet timestamps make every range
-    self-contained; the spts==0 stampless format gets its time grid
-    from the range's global packet offset instead.
+    multiple of it is a clean framing boundary and a file splits into
+    ranges decoded in parallel instead of serializing on one whole-file
+    task (the reference decodes one file per process, main.py:84-85).
+    A file of ``p`` packets is cut into ranges of
+    ``ceil(p / defaultParallelism)`` packets, clamped to at least
+    ``RANGE_FLOOR_BYTES`` and at most ``split_bytes``, so one file fills
+    every core while a small one stays a single range.  Per-packet
+    timestamps make every range self-contained; the spts==0 stampless
+    format gets its time grid from the range's global packet offset
+    instead.
 
-    Output: relative ``Time`` (float64 s) + one double column per axis
-    + ``_file`` provenance.  Downstream enrichment (sanitize/abs-time/
-    alias) stays lazy on top.  ``chunk_rows`` bounds the per-yield
-    Arrow batch so a range never materializes as one pandas frame.
-    ``split_bytes=None`` falls back to one-task-per-file via
+    Output: relative ``Time`` (float64 s) + one double column per axis,
+    emitted by a ``mapInArrow`` kernel as Arrow record batches of at
+    most ``chunk_rows`` rows, so a range never materializes as one
+    batch.  Downstream enrichment (sanitize/abs-time/alias) stays lazy
+    on top.  ``split_bytes=None`` falls back to one-task-per-file via
     binaryFile content rows (no seekable reads needed).
 
     The listing pass projects binaryFile's (path, length) only —
     content is never read twice; range tasks fetch their own bytes
     with ranged reads (local seek or ``pyarrow.fs`` for object
-    stores).  The tiny (path, start) frame repartitions so ranges
-    spread across the cluster rather than inheriting the listing's
-    single task."""
+    stores).  The tiny (path, start, length) range frame is dealt
+    round-robin over ``defaultParallelism`` partitions: AQE never
+    coalesces a repartition by explicit count, round-robin cannot
+    collide the way hashing (path, start) does, and Spark sorts the
+    input first, so a retried task gets the same ranges."""
     schema = decode_schema(params)
+    arrow_schema = pa.schema([(f.name, pa.float64()) for f in schema.fields])
     plen = params.packet_len
 
-    def _decode_buf(fpath, content, base_packet: int):
-        samples, ts, leftover = frame_packets(content, params)
-        if leftover:
-            # trailing partial packet: legal mid-stream (file cut);
-            # decoded rows are unaffected
-            pass
+    def _decode_buf(content: bytes, base_packet: int) -> Iterator[pa.RecordBatch]:
+        # a trailing partial packet is legal mid-stream (file cut) and
+        # leaves the decoded rows unaffected
+        samples, ts, _leftover = frame_packets(content, params)
         n = len(samples)
         if n == 0:
             return
-        if ts.size == 0 and params.samples_per_ts == 0:
+        if params.samples_per_ts == 0:
             # stampless wire format: the k/odr grid must use the
             # GLOBAL sample index, not the range-local one
-            t = (
-                np.arange(base_packet, base_packet + n, dtype=np.float64)
-                / params.odr
-            )
+            t = np.arange(base_packet, base_packet + n, dtype=np.float64) / params.odr
         else:
             t = sample_times(ts, params, n)
+        cols = [t, *np.ascontiguousarray(samples.T)]
         for s in range(0, n, chunk_rows):
-            e = min(s + chunk_rows, n)
-            out = {"Time": t[s:e]}
-            for d, name in enumerate(params.axis_names):
-                out[name] = samples[s:e, d]
-            out["_file"] = fpath
-            yield pd.DataFrame(out)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c[s : s + chunk_rows]) for c in cols], schema=arrow_schema
+            )
 
     if split_bytes is None:
 
-        def _decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                for fpath, content in zip(pdf["path"], pdf["content"]):
-                    yield from _decode_buf(fpath, bytes(content), 0)
+        def _decode(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for batch in it:
+                for content in batch.column("content").to_pylist():
+                    yield from _decode_buf(content, 0)
 
         return (
             spark.read.format("binaryFile")
             .load(path)
-            .select("path", "content")
-            .mapInPandas(_decode, schema)
+            .select("content")
+            .mapInArrow(_decode, schema)
         )
 
-    per = max(int(split_bytes) // plen, 1) * plen
+    par = spark.sparkContext.defaultParallelism
+    packets = F.ceil(F.col("length") / F.lit(plen))
+    per = F.least(
+        F.lit(max(int(split_bytes) // plen, 1)),
+        F.greatest(
+            F.lit(max(RANGE_FLOOR_BYTES // plen, 1)), F.ceil(packets / F.lit(par))
+        ),
+    ).cast("long")
     files = spark.read.format("binaryFile").load(path).select("path", "length")
     ranges = (
-        files.select(
+        files.select("path", packets.alias("_packets"), per.alias("_per"))
+        .select(
             "path",
+            "_per",
             F.explode(
                 F.sequence(
-                    F.lit(0),
+                    F.lit(0).cast("long"),
                     F.greatest(
-                        F.ceil(F.col("length") / F.lit(per)).cast("long")
-                        - F.lit(1),
+                        F.ceil(F.col("_packets") / F.col("_per")) - F.lit(1),
                         F.lit(0),
-                    ),
+                    ).cast("long"),
                 )
             ).alias("_ri"),
         )
-        .select("path", (F.col("_ri") * F.lit(per)).alias("_start"))
-        .repartition(F.col("path"), F.col("_start"))
+        .select(
+            "path",
+            (F.col("_ri") * F.col("_per") * F.lit(plen)).alias("_start"),
+            (F.col("_per") * F.lit(plen)).alias("_len"),
+        )
+        .repartition(par)
     )
 
-    def _decode_ranges(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for fpath, start in zip(pdf["path"], pdf["_start"]):
-                buf = _read_range(str(fpath), int(start), per)
-                yield from _decode_buf(fpath, buf, int(start) // plen)
+    def _decode_ranges(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
+            cols = (batch.column(c).to_pylist() for c in ("path", "_start", "_len"))
+            for fpath, start, length in zip(*cols):
+                buf = _read_range(fpath, start, length)
+                yield from _decode_buf(buf, start // plen)
 
-    return ranges.mapInPandas(_decode_ranges, schema)
+    return ranges.mapInArrow(_decode_ranges, schema)

@@ -171,9 +171,7 @@ class Acquisition:
                 replace(meta.params, sensitivity=1.0) if raw_data else meta.params
             )
             df = sanitize_columns(
-                decode_dat(
-                    self.spark, os.path.join(self.folder, f"{name}.dat"), params
-                ).drop("_file")
+                decode_dat(self.spark, os.path.join(self.folder, f"{name}.dat"), params)
             )
             if absolute_time:
                 df = tm.to_absolute_time(df, meta.start_ns)

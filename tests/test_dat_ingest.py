@@ -264,10 +264,12 @@ def test_process_acquisition_decodes_once(spark, tmp_path, monkeypatch):
     """The flagship conversion path must execute the .dat decode exactly
     once.  Three actions consume the decode lineage (enriched write, RMS
     empty-check count, RMS write — main.py:121-156); without the persist
-    in process_acquisition the mapInPandas decode would run 3x.  An
+    in process_acquisition the mapInArrow decode would run 3x.  An
     accumulator ticks once per (partition, execution) of a stage grafted
-    directly above the decode; one pass == one tick per partition."""
-    write_acquisition(str(tmp_path / "G"))
+    directly above the decode; one pass == one tick per partition, and
+    each packet-aligned range lands in its own partition."""
+    from gcf_corima_parquet_converter_spark.sources.dat import RANGE_FLOOR_BYTES
+
     acc = spark.sparkContext.accumulator(0)
     real_decode = acq.decode_dat
 
@@ -276,7 +278,7 @@ def test_process_acquisition_decodes_once(spark, tmp_path, monkeypatch):
 
         def tick(it):
             # tick once per NON-EMPTY partition: the ranged decode
-            # repartitions over shuffle.partitions, so empty partitions
+            # repartitions over defaultParallelism, so empty partitions
             # exist and must not count as decode work
             first = True
             for pdf in it:
@@ -288,11 +290,26 @@ def test_process_acquisition_decodes_once(spark, tmp_path, monkeypatch):
         return df.mapInPandas(tick, df.schema)
 
     monkeypatch.setattr(acq, "decode_dat", counting_decode)
-    res = acq.process_acquisition(spark, str(tmp_path / "G"), str(tmp_path / "outG"))
-    assert res is not None and res["rms_written"]
-    # one small .dat file -> one packet-aligned range -> one non-empty
-    # decode partition; a second lineage execution would double it
-    assert acc.value == 1
+    par, plen = spark.sparkContext.defaultParallelism, P.packet_len
+    # a small file below the range floor, then one above it
+    for name, dat_kw in (("G", {}), ("H", {"n_seconds": 40, "odr": 26667})):
+        write_acquisition(str(tmp_path / name), **dat_kw)
+        acc.value = 0
+        res = acq.process_acquisition(
+            spark, str(tmp_path / name), str(tmp_path / f"out{name}")
+        )
+        assert res is not None and res["rms_written"]
+        # the range rule, re-derived: ceil(packets / parallelism)
+        # packets a range, never below the floor
+        packets = -(-(tmp_path / name / f"{SENSOR}.dat").stat().st_size // plen)
+        per = max(RANGE_FLOOR_BYTES // plen, -(-packets // par))
+        n_ranges = -(-packets // per)
+        if dat_kw:
+            assert 1 < n_ranges <= par
+        else:
+            assert n_ranges == 1
+        # a second lineage execution would double the ticks
+        assert acc.value == n_ranges
 
 
 def test_decode_dat_ranged_split_parity(spark, tmp_path):
@@ -325,6 +342,27 @@ def test_decode_dat_ranged_split_parity(spark, tmp_path):
     np.testing.assert_array_equal(
         odd["A_x [g]"].to_numpy(), whole["A_x [g]"].to_numpy()
     )
+
+
+def test_decode_dat_ranges_fill_every_partition(spark, tmp_path):
+    """A file cut into at least defaultParallelism ranges decodes on
+    every partition: the range frame must not be coalesced by AQE or
+    hash-collide into a few partitions, which would serialize one
+    file's decode on a single task."""
+    from gcf_corima_parquet_converter_spark.sources.dat import decode_dat
+
+    write_acquisition(str(tmp_path / "Q"))
+    path = str(tmp_path / "Q" / f"{SENSOR}.dat")
+    par = spark.sparkContext.defaultParallelism
+    size = (tmp_path / "Q" / f"{SENSOR}.dat").stat().st_size
+    assert size // (P.packet_len * 4) >= par
+    parts = (
+        decode_dat(spark, path, P, split_bytes=P.packet_len * 4)
+        .select(F.spark_partition_id().alias("pid"))
+        .distinct()
+        .count()
+    )
+    assert parts == par
 
 
 def test_decode_dat_ranged_handles_percent_encoded_paths(spark, tmp_path):

@@ -29,7 +29,7 @@ from gcf_corima_parquet_converter_spark.operators import scale as SC
 PYTHON_ALLOWED = {
     "q31_media_decode": "Pillow decode kernel (mapInPandas)",
     "q42_frame_sample": "frame-sampling kernel (mapInPandas)",
-    "q32_hsd_pipeline": ".dat packet framing (mapInPandas)",
+    "q32_hsd_pipeline": ".dat packet framing (mapInArrow)",
     "q62_pack_sequences": "greedy per-worker packing scan (mapInPandas)",
     "q73_compression_quality": "zlib has no JVM twin (ArrowEvalPython)",
     "q87_bpe_tokenize": "ranked-merge loop has no JVM twin (ArrowEvalPython)",
@@ -159,7 +159,7 @@ def test_plan_invariants(spark, sf_dir, name):
     assert "CartesianProduct" not in plan, f"{name}: unkeyed join"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
     if name not in PYTHON_ALLOWED:
-        for marker in ("ArrowEvalPython", "InPandas"):
+        for marker in ("ArrowEvalPython", "InPandas", "MapInArrow"):
             assert marker not in plan, f"{name}: unexpected Python stage"
     n_single = plan.count("Exchange SinglePartition")
     assert n_single <= SINGLE_PARTITION_ALLOWED.get(name, 0), (
