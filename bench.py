@@ -72,8 +72,8 @@ def _probe_env() -> dict:
     ran degraded — the forensic argument the per-probe brackets below
     make unnecessary.  ``degraded`` flags a canary >30% over the
     unloaded reference: treat the bracketed wall numbers as
-    suspect and re-bench (tools/ab_serving.py) before claiming a
-    cross-round regression or improvement from them."""
+    suspect and re-bench before claiming a cross-round regression or
+    improvement from them."""
     c = _speed_canary()
     return {
         "loadavg_1m": round(os.getloadavg()[0], 2),
@@ -2950,93 +2950,6 @@ def main() -> None:
                 ),
             ]
         )((result.get("retrieval") or {}).get("champion_zipf") or {}),
-        # r17 serving arm fusion (r16 verdict #3): batch + postings
-        # persisted per micro-batch, presence probes folded into one
-        # aggregation, and the bm25/fused/hybrid lexical legs scored
-        # in ONE materialized bm25_topk_batch keyed by (q_id, mode).
-        # Measured on the 60-query mixed workload (4 same-day runs):
-        # mixed p50 7.0-8.0s vs 9.49s recorded at r16, mixed/bm25-only
-        # p50 ratio 2.9-3.3x vs 3.99x.  The NEW mode_floor breakdown
-        # attributes the remaining floor precisely: a single-mode
-        # FUSED batch alone costs ~8.3s (vs bm25-only 3.4s) while the
-        # five single-mode batch walls sum to ~22s against the mixed
-        # batch's ~7.7s — so arms substantially OVERLAP inside the one
-        # union write and the floor is the fused arm's MinDist subplan,
-        # not arm count.  The lexical unification is the SCALE lever
-        # regardless of local wall: three corpus-sized postings scoring
-        # joins per batch become one (parity pinned by
-        # test_serve_search_queries_*).
-        "serve_mixed_fusion_note": (
-            "r17 fusion (cached postings+batch, 3 lexical scoring "
-            "joins -> 1) now stands on RECORDED numbers: r18 mixed "
-            "p50 9.90 / qps 1.6 at canary ~0.124, ab_serving_note "
-            "ranges overlap vs pre-fusion bd1dbcd; mode_floor: floor "
-            "= fused arm's MinDist subplan, and fused_span_scope="
-            "'lex' cuts it 8.60->4.98s on an identical batch"
-        ),
-        # r18 closes the r17 verdict's #1 with the prescribed same-day
-        # serving A/B (tools/ab_serving.py: 2 interleaved reps per
-        # side, r16 judge commit bd1dbcd in a worktree vs HEAD, each
-        # probe canary/loadavg-bracketed; pair persisted as
-        # .scratch/ab_serving_bd1dbcd.json): serve_qps old 4.6/7.4 vs
-        # head 4.7/10.4, batch p50 old 6.69/3.26 vs head 7.35/2.37,
-        # mixed_qps old 1.6/1.5 vs head 0.9/1.7 — every metric's
-        # ranges OVERLAP and HEAD's quiet-rep sample (10.4 qps,
-        # p50 2.37) REPRODUCES r16's recorded 10.6/2.38, while
-        # per-rep canaries swung 0.095-0.193 within the session.  The
-        # r17-recorded 2-3x serving collapse was the loaded host
-        # (loadavg 9.9), not the r17 fusion code; the fusion claims
-        # stand on these recorded numbers now.
-        "ab_serving_note": (
-            "same-day A/B vs bd1dbcd: ranges overlap (serve_qps "
-            "4.6-7.4 old vs 4.7-10.4 head; head quiet rep 10.4 qps / "
-            "p50 2.37 == r16's 10.6/2.38) -> r17 serving collapse "
-            "was host load, not code"
-        ),
-        # r14 bench-honesty note (method: same-day A/B — the r13-final
-        # commit re-benched on THIS host read 16.5s cold vs its
-        # recorded 14.4s, identical per-query elevation, canary
-        # overlapping): day-to-day host drift >10% occurs WITHOUT the
-        # pure-CPU canary moving, i.e. the drift is IO/page-cache/
-        # memory-latency shaped and canary normalization under-corrects
-        # it.  Compare rounds on plans, within-run ratios (scaling,
-        # speedups), and canary-normalized totals — not raw seconds;
-        # a cross-round delta is only a regression if an A/B on the
-        # prior commit separates code from host.
-        "cross_round_note": (
-            "totals are host-day-sensitive beyond canary correction; "
-            "verify regressions by re-benching the prior commit same-day"
-        ),
-        # r15 closes the r14 verdict's q53/q15 question with the
-        # prescribed same-day A/B (3 interleaved fresh-JVM samples per
-        # side, identical harness): r13-commit ae15e92 vs HEAD read
-        # q53 2.211s vs 2.309s and q15 0.494s vs 0.537s medians with
-        # OVERLAPPING sample ranges — while the same-day canary
-        # (0.10-0.15) sat well above r13/r14's recorded 0.075-0.092.
-        # The r14-recorded +22%/+19% on these untouched queries was
-        # host-day drift, not a code regression.
-        "ab_q53_q15_note": (
-            "same-day A/B vs ae15e92: medians within noise "
-            "(q53 2.21 vs 2.31, q15 0.49 vs 0.54, overlapping ranges) "
-            "-> r14 elevation was host drift"
-        ),
-        # r16 closes the r15 verdict's q49/q50/facade question the
-        # same way (solo fresh-JVM micro-bench per side, r14-judge
-        # commit b5e41e8 in a worktree vs HEAD, same host-day):
-        # q49 cold 1.14 vs 1.12, q50 cold 0.97 vs 0.93, facade_full
-        # 50.4s vs 46.5s — the two CODE lines are indistinguishable
-        # (HEAD marginally faster), while BOTH read far above either
-        # round's recorded numbers (q49 0.486/0.568, facade
-        # 30.5/34.2) under a canary of 0.094-0.116 vs r14-day's
-        # 0.076-0.092.  The r15-recorded +17%/+17%/+12% on untouched
-        # code was host-day drift, third consecutive confirmation of
-        # the cross_round_note protocol.
-        "ab_q49_q50_facade_note": (
-            "same-day A/B vs b5e41e8: code lines indistinguishable "
-            "(q49 1.14 vs 1.12, q50 0.97 vs 0.93, facade 50.4 vs "
-            "46.5 with HEAD ahead), both elevated vs recorded rounds "
-            "under canary 0.094-0.116 -> r15 elevation was host drift"
-        ),
         # work-normalized where the query measures its output volume
         # (ratio_work_norm, see bench_scaling's q94 note) — the raw max
         # is kept alongside so nothing is hidden
@@ -3059,21 +2972,10 @@ def main() -> None:
         "detail": "BENCH_LOCAL.json",
     }
     line = json.dumps(compact)
-    # never regress into the driver's tail window: shed provenance
-    # keys first, PRIOR-round notes next (each is already recorded in
-    # its own round's BENCH_r*.json), current-round notes last (all
-    # survive in BENCH_LOCAL.json either way)
-    for victim in (
-        "loadavg_per_run",
-        "ab_q49_q50_facade_note",
-        "ab_q53_q15_note",
-        "cross_round_note",
-        "serve_mixed_fusion_note",
-        "ab_serving_note",
-    ):
-        if len(line) <= 1900:
-            break
-        compact.pop(victim, None)
+    # never regress into the driver's tail window: shed the provenance
+    # key if the line runs long (it survives in BENCH_LOCAL.json)
+    if len(line) > 1900:
+        compact.pop("loadavg_per_run", None)
         line = json.dumps(compact)
     print(line)
 

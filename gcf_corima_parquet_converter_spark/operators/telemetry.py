@@ -35,6 +35,12 @@ from pyspark.sql import Column, DataFrame, Window
 from ..schema.sanitize import sanitize_columns
 
 NS_PER_S = 1_000_000_000
+# an RMS bucket counts only if its samples span this much of the second
+# (main.py:148-158)
+MIN_SPAN_FRAC = 0.999
+# the reference's output layout (main.py:107-131)
+PARTITION_COLS = ("alias", "year", "month", "day")
+MAX_RECORDS_PER_FILE = 50_000_000
 
 __all__ = [
     "sanitize_columns",
@@ -76,14 +82,11 @@ def _rms(col: str | Column) -> Column:
 def tumbling_rms(
     df: DataFrame,
     value_cols: Sequence[str],
-    time_col: str = "Time",
     group_cols: Sequence[str] = (),
-    bucket_ns: int = NS_PER_S,
-    min_span_frac: float = 0.999,
     rename: dict[str, str] | None = None,
-    with_magnitude: bool = True,
 ) -> DataFrame:
-    """Tumbling-window RMS over complete windows only (W1+A1+J1+A2-A5).
+    """1-second tumbling-window RMS over complete windows only
+    (W1+A1+J1+A2-A5) of int64 ns ``Time``.
 
     One groupBy produces span (completeness), per-column RMS and the
     bucket-start timestamp; the reference's isin() semi-join collapses
@@ -92,26 +95,21 @@ def tumbling_rms(
     ``Time`` (bucket start, int64 ns), plus ``group_cols``.
     """
     rename = rename or {}
-    bucket = (F.col(time_col) - (F.col(time_col) % F.lit(int(bucket_ns)))) / F.lit(
-        int(bucket_ns)
-    )
+    bucket = (F.col("Time") - (F.col("Time") % F.lit(NS_PER_S))) / F.lit(NS_PER_S)
     out_names = [rename.get(c, f"rms_{c}") for c in value_cols]
     aggs = [_rms(c).alias(n) for c, n in zip(value_cols, out_names)]
-    aggs.append((F.max(time_col) - F.min(time_col)).alias("_span_ns"))
-    res = (
+    aggs.append((F.max("Time") - F.min("Time")).alias("_span_ns"))
+    return (
         df.withColumn("_bucket", bucket.cast("long"))
         .groupBy(*group_cols, "_bucket")
         .agg(*aggs)
-        .where(F.col("_span_ns") >= F.lit(float(min_span_frac) * bucket_ns))
+        .where(F.col("_span_ns") >= F.lit(MIN_SPAN_FRAC * NS_PER_S))
         .drop("_span_ns")
-    )
-    if with_magnitude:
-        res = res.withColumn(
+        .withColumn(
             "rms_mod",
             F.sqrt(sum((F.col(n) * F.col(n) for n in out_names), F.lit(0.0))),
         )
-    return (
-        res.withColumn("Time", (F.col("_bucket") * F.lit(int(bucket_ns))).cast("long"))
+        .withColumn("Time", (F.col("_bucket") * F.lit(NS_PER_S)).cast("long"))
         .drop("_bucket")
         .orderBy(*group_cols, "Time")
     )
@@ -149,24 +147,17 @@ def label_samples(
     )
 
 
-def with_date_parts(df: DataFrame, time_col: str = "Time") -> DataFrame:
+def with_date_parts(df: DataFrame) -> DataFrame:
     """Derive alias-layout partition keys year/month/day from int64 ns
-    time (F6; reference derives them from start_time, main.py:127-129).
+    ``Time`` (F6; reference derives them from start_time, main.py:127-129).
     """
-    ts = F.timestamp_seconds(F.col(time_col) / F.lit(NS_PER_S))
+    ts = F.timestamp_seconds(F.col("Time") / F.lit(NS_PER_S))
     return df.withColumns(
         {"year": F.year(ts), "month": F.month(ts), "day": F.dayofmonth(ts)}
     )
 
 
-def write_hive_partitioned(
-    df: DataFrame,
-    root: str,
-    partition_cols: Sequence[str] = ("alias", "year", "month", "day"),
-    time_col: str = "Time",
-    mode: str = "overwrite",
-    max_records_per_file: int = 50_000_000,
-) -> None:
+def write_hive_partitioned(df: DataFrame, root: str) -> None:
     """Hive-layout parquet sink (S7/S8): ``root/alias=…/year=…/month=…/day=…``.
 
     SNAPPY + dictionary encoding are Spark parquet defaults; rows are
@@ -177,11 +168,11 @@ def write_hive_partitioned(
     global sort: no extra shuffle beyond the partitionBy write.
     """
     out = df
-    if not set(partition_cols) <= set(df.columns):
-        out = with_date_parts(df, time_col)
+    if not set(PARTITION_COLS) <= set(df.columns):
+        out = with_date_parts(df)
     (
-        out.sortWithinPartitions(*partition_cols, time_col)
-        .write.mode(mode)
+        out.sortWithinPartitions(*PARTITION_COLS, "Time")
+        .write.mode("overwrite")
         # dynamic: overwrite ONLY the partitions present in df.  Static
         # overwrite (the default) clears the whole root first — writing
         # acquisition B would delete acquisition A's alias/date
@@ -189,8 +180,8 @@ def write_hive_partitioned(
         # idempotence: re-processing the same acquisition rewrites
         # exactly its own partition (main.py:121-131 deterministic path).
         .option("partitionOverwriteMode", "dynamic")
-        .option("maxRecordsPerFile", max_records_per_file)
-        .partitionBy(*partition_cols)
+        .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
+        .partitionBy(*PARTITION_COLS)
         .parquet(root)
     )
 

@@ -2667,8 +2667,8 @@ def q78(spark, sf_dir):
 # ===================================== length bucketing (r4)
 # -- q76: token-length buckets + the per-bin padding bill
 #    (operators/pipeline.py: length_buckets).  Oracle-backed; graded
-#    locally by tests/test_queries_oracle.py (driver window is full —
-#    see __spark_entry__ demotion note).
+#    locally by tests/test_queries_oracle.py (outside the driver window,
+#    __spark_entry__.GRADED; see COVERAGE.md "Graded window").
 @query(
     "q76_length_buckets",
     r"""

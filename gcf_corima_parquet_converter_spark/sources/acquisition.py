@@ -43,9 +43,10 @@ def required_files(sensor: str) -> set[str]:
 
 def readiness(folder: str, sensor: str = "iis3dwb_acc") -> tuple[bool, set[str]]:
     """Readiness/atomicity gate (S3, main.py:23-26,43-47): all required
-    files present, else the caller soft-skips and retries later."""
+    files present, else the caller soft-skips and retries later.  Names
+    compare case-sensitively, exactly as the loader opens them."""
     try:
-        present = {n.lower() for n in os.listdir(folder)}
+        present = set(os.listdir(folder))
     except FileNotFoundError:
         present = set()
     missing = required_files(sensor) - present

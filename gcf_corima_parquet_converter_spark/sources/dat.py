@@ -52,6 +52,9 @@ _NP_DTYPES = {
 # packets): a range costs one Python-worker round trip, so files up to
 # this size decode as a single range.
 RANGE_FLOOR_BYTES = 1 << 20
+# Most rows in one emitted Arrow record batch, so a range never
+# materializes as one batch.
+CHUNK_ROWS = 262_144
 
 
 def np_dtype(name: str) -> np.dtype:
@@ -200,7 +203,6 @@ def decode_dat(
     spark: SparkSession,
     path: str,
     params: DecodeParams,
-    chunk_rows: int = 262_144,
     split_bytes: int | None = 64 << 20,
 ) -> DataFrame:
     """Distributed ``.dat`` scan decoded over PACKET-ALIGNED byte
@@ -218,10 +220,10 @@ def decode_dat(
 
     Output: relative ``Time`` (float64 s) + one double column per axis,
     emitted by a ``mapInArrow`` kernel as Arrow record batches of at
-    most ``chunk_rows`` rows, so a range never materializes as one
-    batch.  Downstream enrichment (sanitize/abs-time/alias) stays lazy
-    on top.  ``split_bytes=None`` falls back to one-task-per-file via
-    binaryFile content rows (no seekable reads needed).
+    most ``CHUNK_ROWS`` rows.  Downstream enrichment (sanitize/abs-time/
+    alias) stays lazy on top.  ``split_bytes=None`` falls back to
+    one-task-per-file via binaryFile content rows (no seekable reads
+    needed).
 
     The listing pass projects binaryFile's (path, length) only —
     content is never read twice; range tasks fetch their own bytes
@@ -249,9 +251,9 @@ def decode_dat(
         else:
             t = sample_times(ts, params, n)
         cols = [t, *np.ascontiguousarray(samples.T)]
-        for s in range(0, n, chunk_rows):
+        for s in range(0, n, CHUNK_ROWS):
             yield pa.RecordBatch.from_arrays(
-                [pa.array(c[s : s + chunk_rows]) for c in cols], schema=arrow_schema
+                [pa.array(c[s : s + CHUNK_ROWS]) for c in cols], schema=arrow_schema
             )
 
     if split_bytes is None:

@@ -31,37 +31,19 @@ def test_corpus_count_matches_coverage_doc():
 
 
 def test_window_ordering_is_exactly_50_oracle_backed():
-    ordered = list(E.queries())
     oracle = E.oracle_sql()
-    assert len(ordered) == len(Q.QUERIES)
-    tail = [*E._DEMOTED_REDUNDANT, *E._ROWS_ONLY_TAIL]
-    # tail lists stay exact: every name real, none duplicated
-    assert len(tail) == len(set(tail))
-    missing = [t for t in tail if t not in Q.QUERIES]
-    assert not missing, missing
-    # the driver grades the FIRST 50 — every slot must be oracle-backed
-    window = ordered[:50]
-    assert all(name in oracle for name in window), [
-        n for n in window if n not in oracle
-    ]
-    # the head is the non-tail set: fewer than 50 silently grades tail
-    # entries (a rotation bug); MORE than 50 is the documented
-    # "created with the window full" state — each overflow query sits
-    # just outside the window as a next-rotation promotion candidate
-    # and MUST be recorded by name in COVERAGE.md so nothing waits
-    # unrecorded
-    non_tail = [n for n in ordered if n not in set(tail)]
-    assert len(non_tail) >= 50, (
-        f"{len(non_tail)} non-tail queries; rotate the window in "
-        "__spark_entry__ (promote/demote) until at least 50 remain"
-    )
-    doc = open(_COVERAGE, encoding="utf-8").read()
-    for name in non_tail[50:]:
-        assert name in doc, (
-            f"{name} sits outside the graded window but is not recorded "
-            "in COVERAGE.md as a promotion candidate"
-        )
-    # demoted queries keep their oracles (they are re-verified locally
-    # every round); rows-only tail entries have none by definition
-    assert all(n in oracle for n in E._DEMOTED_REDUNDANT)
-    assert all(n not in oracle for n in E._ROWS_ONLY_TAIL)
+    # GRADED is the driver's window: 50 unique, registered, oracle-backed
+    assert len(E.GRADED) == 50
+    assert len(set(E.GRADED)) == 50
+    assert [n for n in E.GRADED if n not in Q.QUERIES] == []
+    assert [n for n in E.GRADED if n not in oracle] == []
+    qs = E.queries()
+    ordered = list(qs)
+    # the driver grades the FIRST 50 entries, so those must be GRADED
+    assert ordered[:50] == list(E.GRADED)
+    # every registered query is served exactly once
+    assert sorted(ordered) == sorted(Q.QUERIES)
+    assert all(qs[n] is Q.QUERIES[n] for n in ordered)
+    # rows-only queries (no oracle) all sort after the oracle-backed ones
+    backed = [n in oracle for n in ordered]
+    assert backed == sorted(backed, reverse=True)

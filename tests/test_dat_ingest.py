@@ -2,6 +2,8 @@
 carry, spts=0, readiness gate, end-to-end Hive-layout outputs."""
 
 import glob
+import json
+import os
 import struct
 
 import numpy as np
@@ -87,13 +89,40 @@ def test_decode_dat_distributed(spark, tmp_path):
     np.testing.assert_allclose(pdf["Time"], t, atol=1e-12)
 
 
-def test_readiness_gate(tmp_path):
+def test_readiness_gate(spark, tmp_path):
     write_acquisition(str(tmp_path / "B"), incomplete=True)
     ready, missing = acq.readiness(str(tmp_path / "B"))
     assert not ready and missing == {f"{SENSOR}.dat"}
     write_acquisition(str(tmp_path / "C"))
     ready, missing = acq.readiness(str(tmp_path / "C"))
     assert ready and not missing
+    # the gate checks the exact names the loader opens: an upper-case
+    # sensor is complete and loads ...
+    upper = str(tmp_path / "U")
+    write_acquisition(upper)
+    os.rename(
+        os.path.join(upper, f"{SENSOR}.dat"), os.path.join(upper, "IIS3DWB_ACC.dat")
+    )
+    cfg_path = os.path.join(upper, "device_config.json")
+    with open(cfg_path) as f:
+        cfg = json.load(f)
+    for comp in cfg["device"]["components"]:
+        if SENSOR in comp:
+            comp["IIS3DWB_ACC"] = comp.pop(SENSOR)
+    with open(cfg_path, "w") as f:
+        json.dump(cfg, f)
+    assert acq.readiness(upper, "IIS3DWB_ACC") == (True, set())
+    enriched, _meta = acq.load_acquisition(spark, upper, "IIS3DWB_ACC")
+    assert enriched.count() > 0
+    # ... while a mis-cased metadata file the loader cannot open is missing
+    mixed = str(tmp_path / "M")
+    write_acquisition(mixed)
+    os.rename(
+        os.path.join(mixed, "acquisition_info.json"),
+        os.path.join(mixed, "Acquisition_Info.json"),
+    )
+    assert acq.readiness(mixed) == (False, {"acquisition_info.json"})
+    assert acq.load_acquisition(spark, mixed) is None
 
 
 def test_load_acquisition_enriched(spark, tmp_path):
