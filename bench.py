@@ -779,32 +779,23 @@ SCALING_QUERIES = HEADLINE + [
     "q94_interval_join_binned",
     "q104_bloom_blocklist",
     "q105_bloom_ngram_decontaminate",
-    # r13: the lexical-retrieval flagship (inline index + BM25)
-    "q113_bm25_topk",
     # r13: decade rows for the r12/r13-promoted window newcomers whose
-    # scale posture is newest — span-level decontamination, the
-    # drop->strip->semantic pipeline capstone, the one-pass datasheet
-    "q106_contaminated_spans",
+    # scale posture is newest — the drop->strip->semantic pipeline
+    # capstone and the one-pass datasheet
     "q111_decontamination_pipeline",
     "q112_corpus_profile",
     # r14 (r13 verdict #4): decade rows for the freshly-promoted
-    # lexical-retrieval window queries — phrase search, batch BM25,
-    # collocations (whose bigram pair table is the novel growth term;
-    # its output is LIMIT 30 so the raw ratio IS the work ratio),
-    # hybrid RRF, and the new retrieval-eval capstone
-    "q114_phrase_search",
-    "q115_bm25_batch",
+    # lexical-retrieval window queries — collocations (whose bigram
+    # pair table is the novel growth term; its output is LIMIT 30 so
+    # the raw ratio IS the work ratio) and hybrid RRF
     "q116_collocations",
     "q117_hybrid_rrf",
-    "q118_retrieval_eval",
     # r15: decade rows for the round's new families — the stupid-
     # backoff LM (the 2n-1-lookups-per-position join is the novel
-    # growth term), its grouped per-language variant (adds the group
-    # key to every join), and the CCNet gate capstone (LM + exact
+    # growth term) and the CCNet gate capstone (LM + exact
     # percentile + filter, exchange-reused)
     "q124_ngram_lm_score",
     "q126_lm_quality_gate",
-    "q127_perlang_lm_score",
     # r16: decade rows for the round's new families — the batched
     # positional pass (one term join + per-row induction fold; the
     # collect_list of (ti, positions) structs per (q_id, doc) is the
@@ -1191,7 +1182,7 @@ def bench_retrieval(spark) -> dict:
     index actually pay for itself?  Over the sf1 documents corpus
     (50k docs, ~2.7M postings) the same 3-term BM25 top-10 runs (a)
     INLINE — index derived from text, re-derived per consumer (the
-    q113 composition), and (b) PERSISTED — load_postings'
+    q122 composition), and (b) PERSISTED — load_postings'
     partition-pruned scan + the one-row stats artifact.  The index
     builds once into .scratch/ and is reused across rounds; build time
     reported the round it happens.  Best-of-2 per path, same JVM."""

@@ -180,7 +180,6 @@ def bloom_decontaminate(
     fpp: float = 0.01,
     expected_items: int | None = None,
     bloom: dict | None = None,
-    persist_corpus: bool = False,
     advise: bool = True,
     strategy: str = "union",
 ) -> DataFrame:
@@ -209,10 +208,8 @@ def bloom_decontaminate(
     FALSE for a non-deterministic frame (``sample()`` without a seed,
     ``limit`` without an order, a source mutating between scans),
     where the branches can disagree and drop or duplicate rows
-    relative to the single-pass anti-join.  For such inputs pass
-    ``persist_corpus=True`` (pins one materialization both branches
-    read; unpersist is the caller's job via the returned frame's
-    lineage — or persist upstream yourself).
+    relative to the single-pass anti-join.  For such inputs persist
+    the corpus upstream, so both branches read one materialization.
 
     Measured regime (bench ``membership``): on a single JVM the plain
     anti-join WINS (~0.5-0.6x at 4-8M rows) — a local shuffle is
@@ -253,8 +250,6 @@ def bloom_decontaminate(
         raise ValueError(f"strategy must be 'union' or 'hits', got {strategy!r}")
     if advise:
         _advise_if_antijoin_cheaper(corpus, blocklist, "bloom_decontaminate")
-    if persist_corpus:
-        corpus = corpus.persist()
     block_keys = blocklist.select(F.col(bcol).alias(key_col)).distinct()
     if bloom is None:
         bloom = bloom_build(

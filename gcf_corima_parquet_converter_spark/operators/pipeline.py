@@ -1110,7 +1110,6 @@ def budget_select(
     budget: int,
     id_col: str,
     out_col: str = "cum_tokens",
-    materialize: str = "checkpoint",
 ) -> DataFrame:
     """Greedy token-budget selection: take documents best-score-first
     until the budget is spent (the deterministic "best N tokens" cut a
@@ -1124,9 +1123,7 @@ def budget_select(
     through one reducer.
     """
     order = [F.col(score_col).desc(), F.col(id_col).asc()]
-    cum = global_running_sum(
-        df, order, token_col, out_col=out_col, materialize=materialize
-    )
+    cum = global_running_sum(df, order, token_col, out_col=out_col)
     return cum.filter(F.col(out_col) <= budget)
 
 

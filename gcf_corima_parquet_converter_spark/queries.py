@@ -112,12 +112,12 @@ def shared_index(docs: DataFrame, analyzer: str = "keep") -> DataFrame:
     time) and is recomputed from parquet on every invocation; it is
     the inline-build mirror of the persisted-artifact serving path.
 
-    NOT for single-consumer searches (q114/q120/q129/q130/q132/q134/
-    q135/q137/q140): there the planner pushes the query's term filter
-    below the index groupBy, pruning collect_list work for
-    non-matching terms — materializing the FULL positional index costs
-    more than it saves (measured regressions 1.4->2.9 s, 2.5->3.9 s at
-    sf1; see OPTIMIZATION_r18.md)."""
+    NOT for single-consumer searches (q132/q134/q135/q137/q142):
+    there the planner pushes the query's term filter below the index
+    groupBy, pruning collect_list work for non-matching terms —
+    materializing the FULL positional index costs more than it saves
+    (measured regressions 1.4->2.9 s, 2.5->3.9 s at sf1; see
+    OPTIMIZATION_r18.md)."""
     return R.inverted_index(docs, analyzer=analyzer).localCheckpoint(
         eager=False
     )
@@ -956,50 +956,6 @@ def q27(spark, sf_dir):
     )
 
 
-# -- q28: exact n-gram Jaccard via inverted-index join (the no-cross-join
-#    formulation; oracle mirrors it in SQL on a bounded doc subset)
-@query(
-    "q28_ngram_jaccard_pairs",
-    r"""
-    WITH docs AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-      FROM documents WHERE doc_id <= 150),
-    sh_raw AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, greatest(len(toks)-2, 1)+1),
-                    i -> array_to_string(toks[CAST(i AS INT):CAST(i+2 AS INT)], ' ')))
-               AS shingle
-      FROM docs),
-    sh AS (SELECT DISTINCT doc_id, shingle FROM sh_raw WHERE length(shingle) > 0),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    common AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id)
-    SELECT c.id_a, c.id_b, c.n_common,
-           sa.n_sh AS n_a, sb.n_sh AS n_b
-    FROM common c
-    JOIN sizes sa ON c.id_a = sa.doc_id
-    JOIN sizes sb ON c.id_b = sb.doc_id
-    WHERE c.n_common >= 0.02 * (sa.n_sh + sb.n_sh - c.n_common)
-    ORDER BY id_a, id_b
-    """,
-)
-def q28(spark, sf_dir):
-    d = T(spark, sf_dir, "documents").where(F.col("doc_id") <= 150)
-    return (
-        D.ngram_jaccard_pairs(d, "doc_id", "text", n=3, threshold=0.02)
-        .select(
-            F.col("id_a"),
-            F.col("id_b"),
-            "n_common",
-            "n_a",
-            "n_b",
-        )
-        .orderBy("id_a", "id_b")
-    )
-
-
 # -- q29: embedding cosine near-dup pairs, bounded brute force (oracle);
 #    the scale path (LSH-bucketed blocking) is exercised in tests
 @query(
@@ -1730,38 +1686,6 @@ def q54(spark, sf_dir):
     return spark.sql(_Q54_SQL)
 
 
-# -- q56: batched multi-query top-k — the ANN serving shape (broadcast
-#    query batch, one corpus scan, two-phase per-query ranking so the
-#    global rank never sees the whole scored corpus).
-@query(
-    "q56_batch_topk",
-    """
-    WITH q AS (SELECT vec_id AS q_id,
-                      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-               FROM embeddings WHERE vec_id < 5),
-    s AS (SELECT q.q_id, e.vec_id,
-                 CAST(floor(list_dot_product(
-                      list_transform(e.embedding, x -> CAST(x AS DOUBLE)), q.qv
-                    )*1000000 + 0.5) AS BIGINT) AS sim_fx
-          FROM embeddings e CROSS JOIN q),
-    r AS (SELECT *, row_number() OVER (PARTITION BY q_id
-                                       ORDER BY sim_fx DESC, vec_id) AS rn
-          FROM s)
-    SELECT q_id, vec_id, sim_fx FROM r WHERE rn <= 5
-    ORDER BY q_id, sim_fx DESC, vec_id
-    """,
-)
-def q56(spark, sf_dir):
-    e = T(spark, sf_dir, "embeddings")
-    qs = e.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    topk = S.batch_cosine_topk(e, qs, k=5)
-    return topk.select(
-        "q_id", "vec_id", F.col("sim_fx").cast("long").alias("sim_fx")
-    ).orderBy("q_id", F.desc("sim_fx"), "vec_id")
-
-
 # -- q57: hopping (sliding) windows — 10-minute windows every 5 minutes,
 #    each event lands in exactly width/slide = 2 windows.  The oracle
 #    reproduces Spark's epoch-aligned window starts with an explicit
@@ -1991,40 +1915,6 @@ def q98(spark, sf_dir):
         .select("vec_id", "lang", "n_chars", "sim_fx")
         .orderBy(F.desc("sim_fx"), "vec_id")
     )
-
-
-# -- q99: KEYED heavy hitters through the shard->merge path — two half
-#    sketches (even/odd event ids) combined with topk_merge, graded
-#    against the exact per-group GROUP BY top-3 (k-boundary counts are
-#    tie-free at both graded SFs; within-top ties re-sort (count, item)
-#    identically on both engines).  Stronger than q91: it grades the
-#    MERGE operator, i.e. the persisted-artifact contract itself.
-@query(
-    "q99_heavy_hitters_merged",
-    """
-    WITH c AS (
-      SELECT event_type, user_id % 7 AS item,
-             CAST(COUNT(*) AS BIGINT) AS est_count
-      FROM events WHERE user_id IS NOT NULL GROUP BY 1, 2)
-    SELECT event_type, item, est_count FROM c
-    QUALIFY ROW_NUMBER() OVER (PARTITION BY event_type
-                               ORDER BY est_count DESC, item) <= 3
-    ORDER BY event_type, est_count DESC, item
-    """,
-)
-def q99(spark, sf_dir):
-    e = T(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
-    b = e.select(
-        "event_type", (F.col("user_id") % 7).alias("item"), "event_id"
-    )
-    s1 = K.topk_shard_sketch(
-        b.where(F.col("event_id") % 2 == 0), ["event_type"], "item", 64
-    )
-    s2 = K.topk_shard_sketch(
-        b.where(F.col("event_id") % 2 == 1), ["event_type"], "item", 64
-    )
-    merged = K.topk_merge(s1.unionByName(s2), ["event_type"], 64)
-    return K.topk_estimate(merged, ["event_type"], k=3)
 
 
 # ===================================== reference pipeline, end to end
@@ -2429,7 +2319,7 @@ def q70(spark, sf_dir):
 
 
 # ===================================== connected-components dedup resolution
-# -- q71: union-find over the exact n-gram-Jaccard pair graph of q28
+# -- q71: union-find over the exact n-gram-Jaccard pair graph
 #    (operators/dedup.py: dedup_components — distributed min-label
 #    propagation + pointer jumping).  The oracle resolves the same pair
 #    graph with a recursive-CTE transitive closure: comp = min id
@@ -2554,11 +2444,10 @@ def q74(spark, sf_dir):
     )
 
 
-# Shared fixture for the duplicate-span queries (q75/q78): docs plus
-# mutants sharing a 12-token prefix, so every mutant pair carries a
-# known [0,12) span.  ONE definition each for the Spark corpus and the
-# oracle CTE chain — a fixture tweak cannot silently diverge the two
-# queries.
+# Fixture for the duplicate-span query (q75): docs plus mutants
+# sharing a 12-token prefix, so every mutant pair carries a known
+# [0,12) span.  ONE definition each for the Spark corpus and the
+# oracle CTE chain — a fixture tweak cannot silently diverge the two.
 _SPAN_FIXTURE_CTES = r"""WITH docs AS (
       SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
       FROM documents
@@ -2625,42 +2514,6 @@ def q75(spark, sf_dir):
     return (
         D.duplicate_spans(corpus, "doc_id", "text", width=8, min_docs=2)
         .orderBy("doc_id", "span_start")
-    )
-
-
-# -- q78: the strip REWRITE of q75's span detection, value-compared:
-#    per-doc text with duplicated spans removed (dedup.py:
-#    strip_duplicate_spans).  The oracle rebuilds each doc from its
-#    kept (pos, token) pairs; the Spark side re-joins tokens with
-#    single spaces for the same normalization, and fully-stripped /
-#    null / empty docs drop on both sides.
-@query(
-    "q78_strip_duplicate_spans",
-    _SPAN_FIXTURE_CTES
-    + """,
-    spans AS (SELECT doc_id, min(pos) AS s, max(pos) + 8 AS e FROM isl GROUP BY doc_id, g),
-    tok_pos AS (
-      SELECT c.doc_id, unnest(range(1, len(c.toks)+1)) AS i, c.toks AS toks
-      FROM corpus c),
-    toks AS (SELECT doc_id, i - 1 AS pos, toks[CAST(i AS INT)] AS tok FROM tok_pos),
-    kept AS (
-      SELECT t.doc_id, t.pos, t.tok FROM toks t
-      WHERE NOT EXISTS (SELECT 1 FROM spans s
-                        WHERE s.doc_id = t.doc_id AND t.pos >= s.s AND t.pos < s.e))
-    SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS text
-    FROM kept GROUP BY doc_id ORDER BY doc_id
-    """,
-)
-def q78(spark, sf_dir):
-    corpus = _span_mutant_corpus(spark, sf_dir)
-    stripped = D.strip_duplicate_spans(corpus, "doc_id", "text", width=8, min_docs=2)
-    # normalize untouched docs the same way the rewrite normalizes
-    # touched ones (single-space joins), so both sides compare equal
-    norm = F.array_join(X.tokens("text"), " ")
-    return (
-        stripped.select("doc_id", norm.alias("text"))
-        .where(F.length("text") > 0)
-        .orderBy("doc_id")
     )
 
 
@@ -2993,56 +2846,6 @@ def q87(spark, sf_dir):
     )
 
 
-# -- q88: histogram-sketch percentiles (operators/sketches.py:
-#    histogram_shard_sketch + histogram_percentiles).  p50/p90 of order
-#    totals per priority from a 256-bin fixed-grid sketch; the oracle
-#    reproduces the estimator exactly (width_bucket + per-group
-#    cumulative walk + left-edge formula — integer counts and exact
-#    binary grid constants, so the doubles agree bit-for-bit).  The
-#    bin-width error bound vs TRUE percentiles is pinned in
-#    test_sketches.py.  Oracle-backed; graded locally (window full).
-@query(
-    "q88_histogram_percentiles",
-    """
-    WITH h AS (
-      -- DuckDB has no width_bucket; this CASE is Spark's exact formula
-      -- (floor((v - lo) / ((hi - lo) / n)) + 1, 0/n+1 under/overflow)
-      SELECT o_orderpriority,
-             CASE WHEN o_totalprice < 0.0 THEN 0
-                  WHEN o_totalprice >= 600000.0 THEN 257
-                  ELSE CAST(FLOOR(o_totalprice / (600000.0 / 256)) AS BIGINT) + 1
-             END AS b,
-             COUNT(*) AS n
-      FROM orders GROUP BY 1, 2),
-    c AS (
-      SELECT o_orderpriority, b,
-             SUM(n) OVER (PARTITION BY o_orderpriority ORDER BY b) AS cum,
-             SUM(n) OVER (PARTITION BY o_orderpriority) AS total
-      FROM h),
-    p AS (
-      SELECT o_orderpriority, CAST(0.5 AS DOUBLE) AS q, MIN(b) AS b
-      FROM c WHERE cum >= 0.5 * total GROUP BY o_orderpriority
-      UNION ALL
-      SELECT o_orderpriority, CAST(0.9 AS DOUBLE), MIN(b)
-      FROM c WHERE cum >= 0.9 * total GROUP BY o_orderpriority)
-    SELECT o_orderpriority, q,
-           LEAST(GREATEST(0.0 + (b - 1) * (600000.0 / 256), 0.0), 600000.0)
-             AS value
-    FROM p ORDER BY o_orderpriority, q
-    """,
-)
-def q88(spark, sf_dir):
-    from .operators import sketches as K
-
-    o = T(spark, sf_dir, "orders")
-    sk = K.histogram_shard_sketch(
-        o, ["o_orderpriority"], "o_totalprice", 0.0, 600_000.0, 256
-    )
-    return K.histogram_percentiles(
-        sk, ["o_orderpriority"], [0.5, 0.9], 0.0, 600_000.0, 256
-    ).orderBy("o_orderpriority", "q")
-
-
 # -- q89: corpus snapshot diff (operators/pipeline.py: corpus_diff) —
 #    the release audit: which content digests were added / removed /
 #    retained between two snapshots.  Digest-only full-outer join
@@ -3097,25 +2900,6 @@ def q90(spark, sf_dir):
         fx(F.col("duration_s"), 1_000_000).alias("duration_fx"),
         fx(mean_rms, 1_000_000).alias("mean_rms_fx"),
     ).orderBy("media_id")
-
-
-# -- q91: heavy hitters (operators/sketches.py: heavy_hitters) — the
-#    frequency member of the mergeable-sketch family via Spark 4's
-#    approx_top_k aggregate trio.  5 distinct event types << max_items,
-#    so the sketch is a complete counting map and the oracle is the
-#    exact GROUP BY top-k (counts are tie-free at the graded SFs; the
-#    operator re-sorts (est_count desc, item) so order is engine-
-#    independent regardless).
-@query(
-    "q91_heavy_hitters",
-    """
-    SELECT event_type AS item, CAST(COUNT(*) AS BIGINT) AS est_count
-    FROM events GROUP BY 1 ORDER BY est_count DESC, item LIMIT 3
-    """,
-)
-def q91(spark, sf_dir):
-    e = T(spark, sf_dir, "events")
-    return K.heavy_hitters(e, [], "event_type", k=3, max_items=64)
 
 
 # -- q92: corpus snapshot upsert (operators/pipeline.py:
@@ -3629,7 +3413,7 @@ def q105(spark, sf_dir):
 
 
 # ============================ span-level decontamination (r11)
-# Shared fixture for q106/q107: benchmark = every 50th doc; corpus =
+# Fixture for q109: benchmark = every 50th doc; corpus =
 # other docs (<=300) plus PLANTED contaminated docs that quote each
 # benchmark doc's 12-token prefix and append a unique token — so every
 # planted doc carries a known [0, ~12) contaminated span and organic
@@ -3688,59 +3472,6 @@ def _contam_fixture(spark, sf_dir):
     return base.unionByName(plant), bench
 
 
-# -- q106: span-level contamination detection (pipeline.
-#    contaminated_spans): corpus token spans exactly matching an
-#    8-token benchmark window, islands-merged — the "strip the quoted
-#    window, keep the doc" rule's detection half.  Corpus text never
-#    shuffles; only (id, pos, md5) triples move.
-@query(
-    "q106_contaminated_spans",
-    _CONTAM_FIXTURE_CTES
-    + """
-    SELECT doc_id, min(pos) AS span_start, max(pos) + 8 AS span_end
-    FROM isl GROUP BY doc_id, g ORDER BY doc_id, span_start
-    """,
-)
-def q106(spark, sf_dir):
-    corpus, bench = _contam_fixture(spark, sf_dir)
-    return P.contaminated_spans(
-        corpus, bench, "doc_id", "text", width=8
-    ).orderBy("doc_id", "span_start")
-
-
-# -- q107: the strip REWRITE (pipeline.strip_contaminated_spans,
-#    sharing dedup.apply_span_strip with q78): per-doc text with the
-#    benchmark-matching spans removed.  Same normalization contract as
-#    q78 — both sides re-join kept tokens with single spaces; docs
-#    stripped to nothing drop on both sides.
-@query(
-    "q107_strip_contaminated_spans",
-    _CONTAM_FIXTURE_CTES
-    + """,
-    spans AS (SELECT doc_id, min(pos) AS s, max(pos) + 8 AS e FROM isl GROUP BY doc_id, g),
-    tok_pos AS (
-      SELECT c.doc_id, unnest(range(1, len(c.toks)+1)) AS i, c.toks AS toks
-      FROM corpus c),
-    toksf AS (SELECT doc_id, i - 1 AS pos, toks[CAST(i AS INT)] AS tok FROM tok_pos),
-    kept AS (
-      SELECT t.doc_id, t.pos, t.tok FROM toksf t
-      WHERE NOT EXISTS (SELECT 1 FROM spans s
-                        WHERE s.doc_id = t.doc_id AND t.pos >= s.s AND t.pos < s.e))
-    SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS text
-    FROM kept GROUP BY doc_id ORDER BY doc_id
-    """,
-)
-def q107(spark, sf_dir):
-    corpus, bench = _contam_fixture(spark, sf_dir)
-    stripped = P.strip_contaminated_spans(corpus, bench, "doc_id", "text", width=8)
-    norm = F.array_join(X.tokens("text"), " ")
-    return (
-        stripped.select("doc_id", norm.alias("text"))
-        .where(F.length("text") > 0)
-        .orderBy("doc_id")
-    )
-
-
 # ================================== hits-strategy decontamination (r12)
 # -- q108: q104's fingerprint-blocklist decontamination executed by the
 #    r12 hits strategy (membership.bloom_decontaminate strategy="hits"
@@ -3787,7 +3518,7 @@ def q108(spark, sf_dir):
 #    audit half of the span-decontamination family: which benchmark
 #    document each contaminated corpus doc quotes (bench ids survive
 #    the window join), how many width-token windows match, and the
-#    quoted region's bounds.  Same window kernel as q106/q75; the
+#    quoted region's bounds.  Same window kernel as q111/q75; the
 #    oracle re-derives the attribution join over the shared fixture
 #    CTEs.
 @query(
@@ -3816,54 +3547,19 @@ def q109(spark, sf_dir):
     ).orderBy("doc_id", "bench_id")
 
 
-# ======================================= semantic decontamination (r12)
-# -- q110: embedding-space decontamination (pipeline.
-#    semantic_decontaminate) — the paraphrase rule the n-gram tier
-#    can't catch: drop corpus vectors within cosine >= 0.9 of any
-#    benchmark vector.  Fixture plants exact benchmark copies (cos=1)
-#    under new ids so true contamination exists; the broadcast path is
-#    EXACT, so the oracle is a NOT-EXISTS over the same dot products.
-@query(
-    "q110_semantic_decontaminate",
-    """
-    WITH bench AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings WHERE vec_id % 25 = 0),
-    base AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings WHERE vec_id % 25 <> 0),
-    plant AS (SELECT vec_id + 1000000 AS vec_id, v FROM bench),
-    corpus AS (SELECT * FROM base UNION ALL SELECT * FROM plant)
-    SELECT c.vec_id FROM corpus c
-    WHERE NOT EXISTS (SELECT 1 FROM bench b
-                      WHERE list_dot_product(c.v, b.v) >= 0.9)
-    ORDER BY c.vec_id
-    """,
-)
-def q110(spark, sf_dir):
-    e = T(spark, sf_dir, "embeddings")
-    bench = e.where(F.col("vec_id") % 25 == 0).select("vec_id", "embedding")
-    base = e.where(F.col("vec_id") % 25 != 0).select("vec_id", "embedding")
-    plant = bench.select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
-    )
-    corpus = base.unionByName(plant)
-    clean = P.semantic_decontaminate(corpus, bench, threshold=0.9)
-    return clean.select("vec_id").orderBy("vec_id")
-
-
 # ================================== decontamination capstone (r12)
 # -- q111: the decontamination TIER composed end-to-end on one corpus,
-#    every stage oracle-proven individually elsewhere: (1) heavy-
-#    contamination DROP — docs sharing >= 10 distinct 4-grams with the
-#    benchmark union (q52's gram kernel, the whole-doc rule); (2) span
-#    STRIP on the survivors — exact 8-token benchmark windows removed,
-#    doc kept (q106/q107); (3) SEMANTIC drop — survivors whose
-#    embedding is cosine >= 0.9 to any benchmark embedding (q110's
-#    paraphrase rule; docs without embeddings pass).  Fixture plants
-#    one doc per class from the real tables: verbatim bench copies
-#    (die at 1), 12-token quotes + unique tail (stripped at 2, tail
-#    survives), clean-text docs carrying bench embeddings (die at 3).
+#    every stage unit-tested individually (tests/test_pipeline_ops.py):
+#    (1) heavy-contamination DROP — docs sharing >= 10 distinct 4-grams
+#    with the benchmark union (q52's gram kernel, the whole-doc rule);
+#    (2) span STRIP on the survivors — exact 8-token benchmark windows
+#    removed, doc kept (strip_contaminated_spans); (3) SEMANTIC drop —
+#    survivors whose embedding is cosine >= 0.9 to any benchmark
+#    embedding (semantic_decontaminate's paraphrase rule; docs without
+#    embeddings pass).  Fixture plants one doc per class from the real
+#    tables: verbatim bench copies (die at 1), 12-token quotes + unique
+#    tail (stripped at 2, tail survives), clean-text docs carrying
+#    bench embeddings (die at 3).
 #    100 TB shape: bench grams/windows/vectors all broadcast; corpus
 #    text shuffles only as (id, pos, hash) triples in stage 2.
 @query(
@@ -4103,134 +3799,11 @@ _BM25_SQL_STATS = """
 """
 
 
-# -- q113: single-query BM25 top-10 (retrieval.bm25_topk).  Scores =
-#    exact integer sums of per-(doc, term) fixed-point contributions;
-#    rank ties broken by doc_id in BOTH engines, so the row set and
-#    ordering are fully deterministic.
-@query(
-    "q113_bm25_topk",
-    "WITH " + _BM25_SQL_STATS + """,
-    tf AS (
-      SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-      FROM pos WHERE term IN ('spark', 'window', 'merge')
-      GROUP BY doc_id, term
-    ),
-    idf AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
-    contrib AS (
-      SELECT tf.doc_id,
-             (1.0 + (stats.n_docs - idf.df + 0.5) / (idf.df + 0.5))
-             * (tf.tf * 2.2
-                / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / stats.avgdl))) AS c
-      FROM tf JOIN idf USING (term) JOIN dl USING (doc_id) CROSS JOIN stats
-    ),
-    scores AS (
-      SELECT doc_id,
-             CAST(SUM(CAST(floor(c * 1000000 + 0.5) AS BIGINT)) AS BIGINT) AS score_fx
-      FROM contrib GROUP BY doc_id
-    )
-    SELECT CAST(row_number() OVER (ORDER BY score_fx DESC, doc_id) AS INT)
-             AS rank,
-           doc_id, score_fx
-    FROM scores ORDER BY score_fx DESC, doc_id LIMIT 10
-    """,
-)
-def q113(spark, sf_dir):
-    d = T(spark, sf_dir, "documents")
-    idx = shared_index(d)  # r18: multi-consumer index, see shared_index
-    out = R.bm25_topk(
-        idx, ["spark", "window", "merge"], k=10, idf="rational",
-        scale=1_000_000,
-    )
-    return out.select(
-        "rank", "doc_id", fx("score", 1_000_000).alias("score_fx")
-    ).orderBy("rank")
-
-
-# -- q114: exact phrase search via positional adjacency
-#    (retrieval.phrase_search) — anchor positions explode, each later
-#    term is an equi-join on doc_id + a JVM array_contains(p + offset)
-#    predicate; the oracle re-derives matches from zipped
-#    unnest-with-ordinality positions.
-@query(
-    "q114_phrase_search",
-    "WITH " + _BM25_SQL_STATS + """,
-    m AS (
-      SELECT a.doc_id, a.p
-      FROM pos a JOIN pos b ON b.doc_id = a.doc_id AND b.p = a.p + 1
-      WHERE a.term = 'spark' AND b.term = 'window'
-    )
-    SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matches,
-           CAST(MIN(p) AS INT) AS first_pos
-    FROM m GROUP BY doc_id ORDER BY doc_id
-    """,
-)
-def q114(spark, sf_dir):
-    d = T(spark, sf_dir, "documents")
-    idx = R.inverted_index(d)
-    return R.phrase_search(idx, "spark window").orderBy("doc_id")
-
-
-# -- q115: batched BM25 — every query scored in ONE postings pass
-#    (retrieval.bm25_topk_batch): exploded query terms broadcast into
-#    the postings join, one (q_id, doc) aggregation, one per-query
-#    top-k window.  The oracle replays the same math from a VALUES
-#    query table.
-@query(
-    "q115_bm25_batch",
-    "WITH " + _BM25_SQL_STATS + """,
-    q(q_id, term) AS (
-      VALUES (1, 'spark'), (1, 'window'), (2, 'merge'), (2, 'batch'),
-             (2, 'join'), (3, 'vector')
-    ),
-    tf AS (
-      SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-      FROM pos WHERE term IN (SELECT term FROM q)
-      GROUP BY doc_id, term
-    ),
-    idf AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
-    contrib AS (
-      SELECT q.q_id, tf.doc_id,
-             (1.0 + (stats.n_docs - idf.df + 0.5) / (idf.df + 0.5))
-             * (tf.tf * 2.2
-                / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / stats.avgdl))) AS c
-      FROM tf JOIN q USING (term) JOIN idf USING (term)
-        JOIN dl USING (doc_id) CROSS JOIN stats
-    ),
-    scores AS (
-      SELECT q_id, doc_id,
-             CAST(SUM(CAST(floor(c * 1000000 + 0.5) AS BIGINT)) AS BIGINT) AS score_fx
-      FROM contrib GROUP BY q_id, doc_id
-    ),
-    ranked AS (
-      SELECT q_id, doc_id, score_fx,
-             CAST(row_number() OVER (
-               PARTITION BY q_id ORDER BY score_fx DESC, doc_id) AS INT)
-               AS rank
-      FROM scores
-    )
-    SELECT q_id, rank, doc_id, score_fx
-    FROM ranked WHERE rank <= 5 ORDER BY q_id, rank
-    """,
-)
-def q115(spark, sf_dir):
-    d = T(spark, sf_dir, "documents")
-    idx = shared_index(d)  # r18: multi-consumer index, see shared_index
-    qs = spark.createDataFrame(
-        [(1, ["spark", "window"]), (2, ["merge", "batch", "join"]),
-         (3, ["vector"])],
-        "q_id long, terms array<string>",
-    )
-    out = R.bm25_topk_batch(idx, qs, k=5, idf="rational", scale=1_000_000)
-    return out.select(
-        "q_id", "rank", "doc_id", fx("score", 1_000_000).alias("score_fx")
-    ).orderBy("q_id", "rank")
-
-
 # -- q116: bigram collocation mining (text.collocations) — the phrase-
 #    discovery pass a tokenizer/vocab build runs: adjacent pairs
 #    co-occurring far above chance, ranked by the log-free PMI ratio
 #    (lift; rank-equivalent to PMI since log is monotone — the same
-#    rational dodge as q113's idf).  Bigrams derive narrowly from two
+#    rational dodge as BM25's idf).  Bigrams derive narrowly from two
 #    shifted slices of each token array (no positional self-join); the
 #    oracle zips two shifted unnests.  Ties broken by (w1, w2) in both
 #    engines; lift's one double division has an identical IEEE shape.
@@ -4286,7 +3859,7 @@ def q116(spark, sf_dir):
 
 # -- q117: hybrid retrieval via reciprocal-rank fusion
 #    (retrieval.rrf_fuse, Cormack et al. 2009) — the capstone tying the
-#    lexical tier (q113's BM25) to the vector tier (q25's cosine):
+#    lexical tier (q122's BM25) to the vector tier (q25's cosine):
 #    both top-50 lists fuse score-calibration-free as
 #    sum(1/(60+rank)).  Each 1/(60+rank) contribution fixes to an
 #    exact integer before the cross-list sum; both engines rank every
@@ -4385,20 +3958,10 @@ def q117(spark, sf_dir):
     ).orderBy("rank")
 
 
-# -- q118: retrieval evaluation (retrieval.retrieval_eval) — grade the
-#    BM25 rankings against term-containment qrels: per-query recall@10,
-#    reciprocal rank, nDCG@10.  The eval tier's float parity rests on
-#    three dodges: gains are exact integer shifts (2^rel - 1), the
-#    nDCG discounts 1/log2(r+1) are DRIVER-side fixed-point constants
-#    (ndcg_discounts_fx — log2 is libm-dependent, so the table is
-#    computed once in Python and inlined into BOTH engines), and each
-#    metric is one correctly-rounded division of exact integers, then
-#    fixed-pointed for the graded hash.  qrels: a doc is relevant only
-#    when it matches ALL the query's terms with total tf >= 4, GRADED
-#    by total term frequency (capped at 8) — so partial and weak
-#    matches are retrieved-but-irrelevant and the ideal (rel-ordered)
-#    ranking disagrees with the dl-normalized BM25 order:
-#    recall/rr/ap/ndcg all genuinely vary.
+# Shared by the retrieval-eval oracles (q121, q123, q133, q141): the
+# nDCG@10 discounts 1/log2(r+1) as DRIVER-side fixed-point constants
+# (retrieval.ndcg_discounts_fx — log2 is libm-dependent), so both
+# engines multiply by the same integers.
 _NDCG_DISC_10 = R.ndcg_discounts_fx(10, 10**9)
 
 
@@ -4407,154 +3970,6 @@ def _sql_disc_case(col: str) -> str:
         f"WHEN {i + 1} THEN {d}" for i, d in enumerate(_NDCG_DISC_10)
     )
     return f"CASE {col} {whens} END"
-
-
-@query(
-    "q118_retrieval_eval",
-    "WITH " + _BM25_SQL_STATS + f""",
-    q(q_id, term) AS (
-      VALUES (1, 'spark'), (1, 'window'), (2, 'merge'), (2, 'batch'),
-             (2, 'join'), (3, 'vector')
-    ),
-    tf AS (
-      SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-      FROM pos WHERE term IN (SELECT term FROM q)
-      GROUP BY doc_id, term
-    ),
-    idf AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
-    contrib AS (
-      SELECT q.q_id, tf.doc_id,
-             (1.0 + (stats.n_docs - idf.df + 0.5) / (idf.df + 0.5))
-             * (tf.tf * 2.2
-                / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / stats.avgdl))) AS c
-      FROM tf JOIN q USING (term) JOIN idf USING (term)
-        JOIN dl USING (doc_id) CROSS JOIN stats
-    ),
-    scores AS (
-      SELECT q_id, doc_id,
-             CAST(SUM(CAST(floor(c * 1000000 + 0.5) AS BIGINT)) AS BIGINT)
-               AS score_fx
-      FROM contrib GROUP BY q_id, doc_id
-    ),
-    ranked AS (
-      SELECT q_id, doc_id,
-             CAST(row_number() OVER (
-               PARTITION BY q_id ORDER BY score_fx DESC, doc_id) AS INT)
-               AS rank
-      FROM scores
-    ),
-    nt AS (SELECT q_id, count(*) AS n_terms FROM q GROUP BY q_id),
-    matched AS (
-      SELECT q.q_id, tf.doc_id,
-             CAST(count(DISTINCT tf.term) AS INT) AS m,
-             CAST(SUM(tf.tf) AS BIGINT) AS tfs
-      FROM tf JOIN q USING (term) GROUP BY q.q_id, tf.doc_id
-    ),
-    qrels AS (
-      SELECT matched.q_id, doc_id, CAST(least(tfs, 8) AS INT) AS rel
-      FROM matched JOIN nt USING (q_id)
-      WHERE m = n_terms AND tfs >= 4
-    ),
-    j AS (
-      SELECT r.q_id, r.rank, qr.rel
-      FROM ranked r
-      LEFT JOIN qrels qr ON qr.q_id = r.q_id AND qr.doc_id = r.doc_id
-      WHERE r.rank <= 10
-    ),
-    jc AS (
-      SELECT q_id, rank, rel,
-             SUM(CASE WHEN rel IS NOT NULL THEN 1 ELSE 0 END)
-               OVER (PARTITION BY q_id ORDER BY rank) AS cum
-      FROM j
-    ),
-    perres AS (
-      SELECT q_id,
-             CAST(SUM(CASE WHEN rel IS NOT NULL THEN 1 ELSE 0 END)
-               AS BIGINT) AS n_hits,
-             MIN(CASE WHEN rel IS NOT NULL THEN rank END) AS first_rel,
-             CAST(SUM(CASE WHEN rel IS NOT NULL THEN
-                    (CAST((1 << rel) - 1 AS BIGINT))
-                    * ({_sql_disc_case('rank')})
-                  ELSE 0 END) AS BIGINT) AS dcg_fx,
-             CAST(SUM(CASE WHEN rel IS NOT NULL THEN
-                    CAST(floor(CAST(cum AS DOUBLE)
-                         * CAST(1000000000 AS DOUBLE)
-                         / CAST(rank AS DOUBLE) + 0.5) AS BIGINT)
-                  ELSE 0 END) AS BIGINT) AS ap_fx9
-      FROM jc GROUP BY q_id
-    ),
-    ideal AS (
-      SELECT q_id, rel,
-             row_number() OVER (
-               PARTITION BY q_id ORDER BY rel DESC, doc_id) AS ir
-      FROM qrels
-    ),
-    perrel AS (
-      SELECT q_id, CAST(count(*) AS BIGINT) AS n_rel,
-             CAST(SUM(CASE WHEN ir <= 10 THEN
-                    (CAST((1 << rel) - 1 AS BIGINT))
-                    * ({_sql_disc_case('ir')})
-                  ELSE 0 END) AS BIGINT) AS idcg_fx
-      FROM ideal GROUP BY q_id
-    )
-    SELECT perrel.q_id, n_rel,
-           COALESCE(n_hits, CAST(0 AS BIGINT)) AS n_hits,
-           CAST(COALESCE(first_rel, 0) AS INT) AS first_rel_rank,
-           CAST(floor(CAST(COALESCE(n_hits, 0) AS DOUBLE)
-                / CAST(n_rel AS DOUBLE) * 1000000 + 0.5) AS BIGINT)
-             AS recall_fx,
-           CAST(floor(COALESCE(CAST(1.0 AS DOUBLE) / first_rel, 0.0)
-                * 1000000 + 0.5) AS BIGINT) AS rr_fx,
-           CAST(floor(CAST(COALESCE(ap_fx9, 0) AS DOUBLE)
-                / CAST(1000000000 AS DOUBLE) / CAST(n_rel AS DOUBLE)
-                * 1000000 + 0.5) AS BIGINT) AS ap_fx,
-           CAST(floor(CAST(COALESCE(dcg_fx, 0) AS DOUBLE)
-                / CAST(idcg_fx AS DOUBLE) * 1000000 + 0.5) AS BIGINT)
-             AS ndcg_fx
-    FROM perrel LEFT JOIN perres USING (q_id)
-    ORDER BY q_id
-    """,
-)
-def q118(spark, sf_dir):
-    d = T(spark, sf_dir, "documents")
-    idx = shared_index(d)  # r18: multi-consumer index, see shared_index
-    qs = spark.createDataFrame(
-        [(1, ["spark", "window"]), (2, ["merge", "batch", "join"]),
-         (3, ["vector"])],
-        "q_id long, terms array<string>",
-    )
-    results = R.bm25_topk_batch(idx, qs, k=10, idf="rational", scale=10**6)
-    qterms = qs.select("q_id", F.explode("terms").alias("term"))
-    nt = qs.select("q_id", F.size("terms").alias("n_terms"))
-    matched = (
-        idx.join(F.broadcast(qterms), "term")
-        .groupBy("q_id", "doc_id")
-        .agg(
-            F.countDistinct("term").cast("int").alias("m"),
-            F.sum("tf").alias("tfs"),
-        )
-    )
-    qrels = (
-        matched.join(F.broadcast(nt), "q_id")
-        .where((F.col("m") == F.col("n_terms")) & (F.col("tfs") >= 4))
-        .select(
-            "q_id", "doc_id",
-            F.least(F.col("tfs"), F.lit(8)).cast("int").alias("rel"),
-        )
-    )
-    ev = R.retrieval_eval(results, qrels, k=10)
-    return ev.select(
-        "q_id",
-        "n_rel",
-        "n_hits",
-        F.coalesce(F.col("first_rel_rank"), F.lit(0)).cast("int").alias(
-            "first_rel_rank"
-        ),
-        fx("recall", 10**6).alias("recall_fx"),
-        fx("rr", 10**6).alias("rr_fx"),
-        fx("ap", 10**6).alias("ap_fx"),
-        fx("ndcg", 10**6).alias("ndcg_fx"),
-    ).orderBy("q_id")
 
 
 # -- q119: pseudo-relevance-feedback query expansion
@@ -4664,47 +4079,6 @@ def q119(spark, sf_dir):
     ).orderBy("rank")
 
 
-# -- q120: phrase-match snippet hydration (retrieval.snippets) — the
-#    display step of the search stack: phrase_search's (doc, first
-#    position) matches hydrate a +-3-token keyword-in-context window
-#    from the documents table (text touched only AFTER matching, k
-#    rows).  Registers just outside the graded window (created with
-#    the window full — the standing next-rotation promotion protocol);
-#    oracle-verified locally by driver_sim/test_queries_oracle.
-@query(
-    "q120_phrase_snippets",
-    "WITH " + _BM25_SQL_STATS + """,
-    m AS (
-      SELECT a.doc_id, a.p
-      FROM pos a JOIN pos b ON b.doc_id = a.doc_id AND b.p = a.p + 1
-      WHERE a.term = 'spark' AND b.term = 'window'
-    ),
-    fm AS (
-      SELECT doc_id, CAST(MIN(p) AS INT) AS first_pos
-      FROM m GROUP BY doc_id
-    ),
-    sn AS (
-      SELECT fm.doc_id, fm.first_pos,
-             CAST(greatest(1, first_pos - 3) AS INT) AS snippet_start,
-             array_to_string(
-               t[greatest(1, first_pos - 3):least(len(t), first_pos + 4)],
-               ' ') AS snippet
-      FROM fm JOIN toks USING (doc_id)
-    )
-    SELECT doc_id, first_pos, snippet_start, snippet
-    FROM sn ORDER BY doc_id
-    """,
-)
-def q120(spark, sf_dir):
-    d = T(spark, sf_dir, "documents")
-    idx = R.inverted_index(d)
-    m = R.phrase_search(idx, "spark window")
-    out = R.snippets(d, m, width=3, match_len=2)
-    return out.select(
-        "doc_id", "first_pos", "snippet_start", "snippet"
-    ).orderBy("doc_id")
-
-
 # -- q121: paired system comparison (retrieval.eval_compare) — a real
 #    IR ablation run end-to-end: BM25 WITH length normalization
 #    (b=0.75) vs WITHOUT (b=0) on the same queries and tf-graded
@@ -4712,7 +4086,7 @@ def q120(spark, sf_dir):
 #    only the dcg side differs).  One hash-graded row: per-system
 #    mean nDCG, mean paired delta, and win/tie/loss counts at 1e-6
 #    precision.  Registers just outside the graded window (created
-#    with it full — next-rotation promotion candidate, like q120).
+#    with it full — next-rotation promotion candidate).
 @query(
     "q121_eval_compare_bm25_b",
     "WITH " + _BM25_SQL_STATS + f""",
@@ -4984,8 +4358,8 @@ def q122(spark, sf_dir):
 #    them, snippets hydrate the fused page (text touched only AFTER
 #    ranking, k rows), and retrieval_eval grades the fused ranking
 #    against tf-graded qrels — all composed into a single returned
-#    plan.  Every stage already has a graded SQL twin (q113/q114/
-#    q117/q118/q120); here they chain.
+#    plan.  Each stage has a unit-tested operator (tests/
+#    test_retrieval.py); here they chain.
 @query(
     "q123_search_capstone",
     "WITH " + _BM25_SQL_STATS + f""",
@@ -5307,78 +4681,6 @@ def q124(spark, sf_dir):
     ).orderBy("doc_id")
 
 
-# -- q125: ANN recall evaluation (similarity.ann_eval) — the
-#    measurement half of the ANN tier, the similarity twin of q118's
-#    retrieval_eval (ANN-benchmarks methodology, Aumüller et al.
-#    2018).  Ground truth = full-64-dim brute-force cosine top-10;
-#    the evaluated "approximate" ranker = the same scorer over only
-#    the first 16 dims (a real cheap-ranker baseline: truncated-
-#    projection scoring), so recall < 1 is observable and the eval
-#    numbers carry information.  Both rankings score fixed-point with
-#    id tie-breaks, so ranks are bit-identical across engines; every
-#    eval metric is integer counts and single correctly-rounded IEEE
-#    divisions.
-@query(
-    "q125_ann_recall_eval",
-    """
-    WITH qv AS (
-      SELECT vec_id AS q_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings WHERE vec_id IN (0, 7, 21)
-    ),
-    corpus AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings
-    ),
-    exact AS (
-      SELECT * FROM (
-        SELECT q.q_id, c.vec_id,
-               row_number() OVER (PARTITION BY q.q_id ORDER BY
-                 CAST(floor(list_dot_product(c.v, q.v)*1000000 + 0.5)
-                      AS BIGINT) DESC, c.vec_id) AS rank
-        FROM corpus c CROSS JOIN qv q)
-      WHERE rank <= 10
-    ),
-    approx AS (
-      SELECT * FROM (
-        SELECT q.q_id, c.vec_id,
-               row_number() OVER (PARTITION BY q.q_id ORDER BY
-                 CAST(floor(list_dot_product(c.v[1:16], q.v[1:16])*1000000
-                            + 0.5) AS BIGINT) DESC, c.vec_id) AS rank
-        FROM corpus c CROSS JOIN qv q)
-      WHERE rank <= 10
-    )
-    SELECT e.q_id,
-           CAST(count(*) AS BIGINT) AS n_exact,
-           CAST(sum(CASE WHEN a.rank IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_hits,
-           CAST(sum(CASE WHEN a.rank IS NOT NULL THEN 1 ELSE 0 END)
-                AS DOUBLE) / CAST(count(*) AS DOUBLE) AS recall,
-           CAST(min(a.rank) AS INTEGER) AS first_hit_rank,
-           COALESCE(1.0 / CAST(min(a.rank) AS DOUBLE), 0.0) AS rr,
-           CAST(max(CASE WHEN e.rank = 1 AND a.rank = 1 THEN 1 ELSE 0 END)
-                AS INTEGER) AS top1_hit
-    FROM exact e LEFT JOIN approx a
-      ON e.q_id = a.q_id AND e.vec_id = a.vec_id
-    GROUP BY e.q_id ORDER BY e.q_id
-    """,
-)
-def q125(spark, sf_dir):
-    e = T(spark, sf_dir, "embeddings")
-    qs = e.where(F.col("vec_id").isin(0, 7, 21)).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    exact = S.batch_cosine_topk(e, qs, k=10)
-    approx = S.batch_cosine_topk(
-        e.withColumn("embedding", F.slice("embedding", 1, 16)),
-        qs.withColumn("q_vec", F.slice("q_vec", 1, 16)),
-        k=10,
-    )
-    return S.ann_eval(approx, exact, k=10, score_col="sim_fx").orderBy(
-        "q_id"
-    )
-
-
 # -- q126: LM-perplexity quality gate — the full CCNet recipe (Wenzek
 #    et al. 2020): train the n-gram LM on the corpus (q124's scorer,
 #    shared SQL twin), score every document, drop the worst quartile
@@ -5419,98 +4721,6 @@ def q126(spark, sf_dir):
         scored, "lm_fx", q=0.25, keep="above", exact=True
     )
     return kept.orderBy("doc_id")
-
-
-# -- q127: PER-LANGUAGE LM scoring (text.ngram_lm_train/score with
-#    group_cols) — the actual CCNet deployment (Wenzek et al. 2020
-#    trains one LM per language and scores each document against its
-#    own): all models train in ONE pass (the group is just more
-#    groupBy key), all lookups resolve through ONE equi-join keyed by
-#    (lang, order, gram), and the global one-row total becomes a
-#    per-language totals join.  Same exact fixed-point arithmetic as
-#    q124, now per group.
-@query(
-    "q127_perlang_lm_score",
-    r"""
-    WITH toks AS (
-      SELECT doc_id, lang, string_split_regex(trim(text), '\s+') AS t
-      FROM documents WHERE text IS NOT NULL AND trim(text) <> ''
-    ),
-    ptab AS (
-      SELECT doc_id, lang,
-             list_concat(list_concat(['<s>', '<s>'], t), ['</s>']) AS pt
-      FROM toks
-    ),
-    allg AS (
-      SELECT lang, o.k AS ord,
-             unnest(list_transform(generate_series(1, len(pt) - o.k + 1),
-                    i -> array_to_string(pt[i : i + o.k - 1], chr(31))))
-               AS gram
-      FROM ptab CROSS JOIN (VALUES (1), (2), (3)) AS o(k)
-    ),
-    cnt AS (
-      SELECT lang, ord, gram, CAST(count(*) AS BIGINT) AS c
-      FROM allg GROUP BY lang, ord, gram
-    ),
-    n1 AS (SELECT lang, CAST(SUM(c) AS BIGINT) AS n
-           FROM cnt WHERE ord = 1 GROUP BY lang),
-    posn AS (
-      SELECT doc_id, lang, pt, unnest(generate_series(3, len(pt) - 1)) AS p
-      FROM ptab
-    ),
-    keys AS (
-      SELECT doc_id, lang, p,
-             array_to_string(pt[p-2:p], chr(31)) AS k_tri,
-             array_to_string(pt[p-2:p-1], chr(31)) AS k_ctx2,
-             array_to_string(pt[p-1:p], chr(31)) AS k_bi,
-             pt[p-1] AS k_ctx1,
-             pt[p] AS k_uni
-      FROM posn
-    ),
-    sc AS (
-      SELECT k.doc_id, k.lang,
-             CASE WHEN tri.c IS NOT NULL AND ctx2.c IS NOT NULL
-                  THEN CAST(tri.c AS DOUBLE) / CAST(ctx2.c AS DOUBLE)
-                  ELSE 0.4 * (
-                    CASE WHEN bi.c IS NOT NULL AND ctx1.c IS NOT NULL
-                         THEN CAST(bi.c AS DOUBLE) / CAST(ctx1.c AS DOUBLE)
-                         ELSE 0.4 * COALESCE(
-                                 CAST(COALESCE(uni.c, 0) AS DOUBLE)
-                                 / CAST(n1.n AS DOUBLE), 0.0)
-                    END)
-             END AS s
-      FROM keys k
-      LEFT JOIN cnt tri  ON tri.lang = k.lang AND tri.ord = 3
-                        AND tri.gram = k.k_tri
-      LEFT JOIN cnt ctx2 ON ctx2.lang = k.lang AND ctx2.ord = 2
-                        AND ctx2.gram = k.k_ctx2
-      LEFT JOIN cnt bi   ON bi.lang = k.lang AND bi.ord = 2
-                        AND bi.gram = k.k_bi
-      LEFT JOIN cnt ctx1 ON ctx1.lang = k.lang AND ctx1.ord = 1
-                        AND ctx1.gram = k.k_ctx1
-      LEFT JOIN cnt uni  ON uni.lang = k.lang AND uni.ord = 1
-                        AND uni.gram = k.k_uni
-      LEFT JOIN n1       ON n1.lang = k.lang
-    )
-    SELECT doc_id, lang, CAST(count(*) AS BIGINT) AS n_tokens,
-           CAST(floor(SUM(CAST(floor(s * 1000000 + 0.5) AS BIGINT))
-                / 1000000.0 / count(*) * 1000000 + 0.5) AS BIGINT)
-             AS lm_fx
-    FROM sc GROUP BY doc_id, lang ORDER BY doc_id
-    """,
-)
-def q127(spark, sf_dir):
-    d = T(spark, sf_dir, "documents")
-    # r18: materialize the per-language model once (the q124 note).
-    model = X.ngram_lm_train(
-        d, n=3, id_col="doc_id", group_cols=["lang"]
-    ).localCheckpoint(eager=False)
-    out = X.ngram_lm_score(
-        d, model, n=3, scale=1_000_000, group_cols=["lang"]
-    )
-    return out.select(
-        "doc_id", "lang", "n_tokens", fx("lm_score", 1_000_000).alias("lm_fx")
-    ).orderBy("doc_id")
 
 
 # -- q128: ANN ablation — the decision step of the ANN tier's
@@ -5613,108 +4823,11 @@ def q128(spark, sf_dir):
     return R.eval_compare(ev_a, ev_b, metric="recall")
 
 
-# -- q129: ordered proximity search (retrieval.proximity_search) — the
-#    sequential-dependence-model window feature (Metzler & Croft 2005)
-#    relaxing q114's exact adjacency to gaps <= slop+1.  EXISTENCE
-#    semantics by backward induction (a greedy chain would miss valid
-#    matches — pinned by test); the Spark side runs it as packed-array
-#    filter/exists expressions with zero explodes, the oracle replays
-#    the same induction in position-row space (per-step DISTINCT
-#    continuation joins).
-@query(
-    "q129_proximity_search",
-    "WITH " + _BM25_SQL_STATS + """,
-    t3 AS (SELECT doc_id, p FROM pos WHERE term = 'merge'),
-    t2 AS (
-      SELECT DISTINCT a.doc_id, a.p
-      FROM pos a JOIN t3 b
-        ON b.doc_id = a.doc_id AND b.p > a.p AND b.p <= a.p + 3
-      WHERE a.term = 'window'
-    ),
-    t1 AS (
-      SELECT DISTINCT a.doc_id, a.p
-      FROM pos a JOIN t2 b
-        ON b.doc_id = a.doc_id AND b.p > a.p AND b.p <= a.p + 3
-      WHERE a.term = 'spark'
-    )
-    SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matches,
-           CAST(MIN(p) AS INT) AS first_pos
-    FROM t1 GROUP BY doc_id ORDER BY doc_id
-    """,
-)
-def q129(spark, sf_dir):
-    d = T(spark, sf_dir, "documents")
-    idx = R.inverted_index(d)
-    return R.proximity_search(
-        idx, "spark window merge", slop=2
-    ).orderBy("doc_id")
-
-
-# -- q130: minimum covering span (retrieval.min_span) — the classic
-#    unordered proximity feature (MinDist family, Tao & Zhai 2007):
-#    shortest window containing every query term in any order, with
-#    the earliest such window's start for snippet hydration.  Spark
-#    runs the standard sweep as ONE aggregate fold over the per-doc
-#    sorted union of positions (packed arrays, zero explodes); the
-#    oracle replays it in position-row space: every candidate window
-#    END joins each term's latest preceding position, LEAST of those
-#    is the window start, rank (span, start, end) picks the answer.
-@query(
-    "q130_min_span",
-    "WITH " + _BM25_SQL_STATS + """,
-    cand AS (
-      SELECT DISTINCT doc_id, p FROM pos
-      WHERE term IN ('spark', 'window', 'merge')
-    ),
-    l1 AS (
-      SELECT c.doc_id, c.p, MAX(q.p) AS l
-      FROM cand c JOIN pos q
-        ON q.doc_id = c.doc_id AND q.term = 'spark' AND q.p <= c.p
-      GROUP BY c.doc_id, c.p
-    ),
-    l2 AS (
-      SELECT c.doc_id, c.p, MAX(q.p) AS l
-      FROM cand c JOIN pos q
-        ON q.doc_id = c.doc_id AND q.term = 'window' AND q.p <= c.p
-      GROUP BY c.doc_id, c.p
-    ),
-    l3 AS (
-      SELECT c.doc_id, c.p, MAX(q.p) AS l
-      FROM cand c JOIN pos q
-        ON q.doc_id = c.doc_id AND q.term = 'merge' AND q.p <= c.p
-      GROUP BY c.doc_id, c.p
-    ),
-    spans AS (
-      SELECT l1.doc_id, l1.p,
-             l1.p - LEAST(l1.l, l2.l, l3.l) + 1 AS span,
-             LEAST(l1.l, l2.l, l3.l) AS start
-      FROM l1
-      JOIN l2 ON l2.doc_id = l1.doc_id AND l2.p = l1.p
-      JOIN l3 ON l3.doc_id = l1.doc_id AND l3.p = l1.p
-    ),
-    ranked AS (
-      SELECT doc_id, span, start,
-             row_number() OVER (
-               PARTITION BY doc_id ORDER BY span, start, p
-             ) AS rn
-      FROM spans
-    )
-    SELECT doc_id, CAST(span AS INT) AS min_span,
-           CAST(start AS INT) AS first_pos
-    FROM ranked WHERE rn = 1 ORDER BY doc_id
-    """,
-)
-def q130(spark, sf_dir):
-    d = T(spark, sf_dir, "documents")
-    idx = R.inverted_index(d)
-    return R.min_span(idx, "spark window merge").orderBy("doc_id")
-
-
 # -- q131: proximity-evidence ranked retrieval — the SDM insight
 #    (Metzler & Croft 2005: term-proximity evidence improves
 #    bag-of-words ranking) assembled ONLY from principled published
-#    pieces already graded here: BM25 top-50 (q113) + a MinDist
-#    tightness ranking (q130's min_span, asc) fused calibration-free
+#    pieces already graded here: BM25 top-50 (q122) + a MinDist
+#    tightness ranking (min_span, asc) fused calibration-free
 #    by reciprocal-rank fusion (Cormack 2009, q117's combiner).  No
 #    invented scoring formula — proximity enters as a RANKING, not a
 #    hand-weighted boost.
@@ -5823,8 +4936,8 @@ def q131(spark, sf_dir):
     ).orderBy("rank")
 
 
-# -- q132: analyzer-composed proximity (r15 verdict #7) — q129/q130
-#    grade the raw-token path; proximity_search/min_span take
+# -- q132: analyzer-composed proximity (r15 verdict #7) — q131 grades
+#    min_span on the raw-token path; proximity_search/min_span take
 #    caller-provided terms, so an ANALYZED index needs analyze_terms
 #    at the call site (the same same-analyzer contract bm25 has,
 #    graded for BM25 by q122).  Over q122's deterministically-noised
@@ -5834,9 +4947,9 @@ def q131(spark, sf_dir):
 #    terms), the ordered slop-2 chain left-joins on top — one plan
 #    grades both operators on the analyzed stream.  The oracle
 #    replays the analyzer in DuckDB (q122's CTE) then re-derives
-#    MinDist in position-row space (q130's latest-preceding-position
-#    joins) and the ordered chain by backward induction (q129's
-#    per-step DISTINCT continuation joins).
+#    MinDist in position-row space (latest-preceding-position
+#    joins) and the ordered chain by backward induction (per-step
+#    DISTINCT continuation joins).
 @query(
     "q132_analyzed_proximity",
     "WITH " + _Q122_STATS + """,
@@ -5946,10 +5059,10 @@ def q132(spark, sf_dir):
 
 
 # -- q133: corpus-mean eval summaries graded in-plan (r15 verdict #8)
-#    — the per-query eval rows are driver-graded (q118-family, q125)
+#    — the per-query eval rows are driver-graded (q141, q128)
 #    but retrieval_eval_summary / ann_eval_summary rode only bench
 #    assertions.  This composes BOTH summaries over their graded
-#    per-query producers (q118's BM25-vs-mined-qrels eval; q125's
+#    per-query producers (the BM25-vs-mined-qrels eval; the
 #    truncated-vs-exact ANN eval) and unions them into one row set
 #    (kind column — q112's pattern).  Hash contract: each summary
 #    mean is SUM(per-query fx)/scale/n re-fixed at 1e6 — the oracle
@@ -6199,13 +5312,13 @@ def q133(spark, sf_dir):
 
 
 # -- q134: BATCHED positional search (retrieval.positional_search_batch)
-#    — q129's ordered-proximity semantics for a whole query batch in
+#    — proximity_search's ordered semantics for a whole query batch in
 #    ONE set-based pass (one broadcast term join + a per-row backward-
 #    induction fold over packed arrays), per-row slop, phrase rows as
 #    slop=0, a repeated-term query exercising the ordinal slots.  The
 #    oracle replays the induction in position-row space GENERICALLY: a
 #    recursive CTE walks term ordinals from last to first, the
-#    recursion's UNION dedupe being exactly q129's per-step DISTINCT.
+#    recursion's UNION dedupe being exactly the per-step DISTINCT.
 @query(
     "q134_positional_search_batch",
     "WITH RECURSIVE " + _BM25_SQL_STATS + """,
@@ -6255,10 +5368,10 @@ def q134(spark, sf_dir):
 
 
 # -- q135: BATCHED minimum covering span (retrieval.min_span_batch) —
-#    q130's MinDist for a whole query batch: the fixed-slot sweep
+#    min_span's MinDist for a whole query batch: the fixed-slot sweep
 #    becomes an array-state fold (array_repeat(0, n_terms) latest-
 #    position slots updated by an index-aware transform), duplicate
-#    terms collapse per query.  The oracle generalizes q130's
+#    terms collapse per query.  The oracle generalizes q132's
 #    position-row recipe: per (query, candidate end) each term's
 #    latest preceding position aggregates in ONE grouped join (no
 #    per-term CTE), COUNT(*)==n_terms keeps full-coverage ends, and
@@ -6335,7 +5448,7 @@ def q135(spark, sf_dir):
 #    (Cormack et al. 2009).  Queries are document-anchored (q_id =
 #    vec_id: each query carries that document's embedding as its
 #    dense arm and a term list as its lexical arm).  Every piece is
-#    individually graded (q113/q122 BM25, q25/q133 cosine, q117/q131
+#    individually graded (q122 BM25, q25/q133 cosine, q117/q131
 #    RRF); this composes them ACROSS tiers in one plan.  The dense
 #    arm's rank derivation rides batch_cosine_topk's two-phase
 #    guard; the fusion window is bounded by contract (top-20 lists).
@@ -6690,60 +5803,6 @@ def q139(spark, sf_dir):
     ).orderBy("q_id", "rank")
 
 
-# -- q140: the PERSISTED fuzzy path graded end-to-end (r16 verdict #4,
-#    the q122 grade-the-artifact precedent): write_fuzzy_vocab builds
-#    the variant-bucket artifact on disk, fuzzy_match_terms answers
-#    through it (static vbucket partition filters + ONE variant
-#    equi-join — the path serving actually uses, retrieval.py), and
-#    fuzzy_best_match's Norvig pick (dist asc -> df desc -> term asc)
-#    is graded in the same frame as an is_best flag.  The oracle IS
-#    q137's brute-force levenshtein cross-product plus the pick
-#    window: ground truth by exhaustive comparison, the artifact
-#    algorithm under test.
-@query(
-    "q140_fuzzy_vocab_search",
-    "WITH " + _BM25_SQL_STATS + """,
-    vocab AS (
-      SELECT term, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
-      FROM pos GROUP BY term
-    ),
-    q(q_term) AS (VALUES ('spak'), ('windo'), ('merge'), ('joinn')),
-    cand AS (
-      SELECT q.q_term, v.term,
-             CAST(levenshtein(q.q_term, v.term) AS INT) AS dist, v.df
-      FROM q JOIN vocab v ON levenshtein(q.q_term, v.term) <= 2
-    )
-    SELECT q_term, term, dist, df,
-           CAST((row_number() OVER (
-              PARTITION BY q_term ORDER BY dist, df DESC, term)) = 1
-             AS INT) AS is_best
-    FROM cand ORDER BY q_term, term
-    """,
-)
-def q140(spark, sf_dir):
-    import tempfile
-
-    d = T(spark, sf_dir, "documents")
-    idx = R.inverted_index(d)
-    root = tempfile.mkdtemp(prefix="fuzzy_vocab_q140_") + "/fz"
-    R.write_fuzzy_vocab(idx, root, max_edits=2, n_buckets=8)
-    exp = R.fuzzy_match_terms(
-        spark, root, ["spak", "windo", "merge", "joinn"], max_edits=2
-    )
-    best = R.fuzzy_best_match(exp).withColumnRenamed("term", "_bt")
-    return (
-        exp.join(F.broadcast(best), "q_term", "left")
-        .select(
-            "q_term",
-            "term",
-            "dist",
-            "df",
-            (F.col("term") == F.col("_bt")).cast("int").alias("is_best"),
-        )
-        .orderBy("q_term", "term")
-    )
-
-
 # -- q141: the SERVING capstone (r16 verdict #6) — the offline twin of
 #    serve_search_queries' full recipe, composed into ONE graded plan
 #    the way q123 composed the search stack: typo'd queries spelling-
@@ -6754,11 +5813,11 @@ def q140(spark, sf_dir):
 #    postings/stats), a dense cosine arm answers the same
 #    document-anchored queries (q136's shape, two-phase top-k), RRF
 #    fuses the arms, and retrieval_eval grades the fused rankings
-#    per query against index-mined qrels (q118's kernel) — eval
+#    per query against index-mined qrels (q133's kernel) — eval
 #    columns ride every result row.  A query whose corrected terms
 #    mine no qrels reports an all-zero eval row (ungraded, not
 #    failed).  The oracle replays each stage with its already-graded
-#    SQL twin (q138 correction, q139 champions, q136 dense+RRF, q118
+#    SQL twin (q138 correction, q139 champions, q136 dense+RRF, q133
 #    eval), chained.
 @query(
     "q141_serving_capstone",
@@ -7054,12 +6113,12 @@ def q141(spark, sf_dir):
 
 
 # -- q142: the INCREMENTAL fuzzy artifact graded end-to-end (r17 —
-#    the q140 grade applied to the append lifecycle): the variant
-#    artifact builds from HALF the corpus (write_fuzzy_vocab), the
-#    other half's vocabulary appends under its own epoch
-#    (fuzzy_vocab_append), and fuzzy_match_terms answers through the
-#    merged artifact — the cross-epoch df SUM and the Norvig best
-#    pick are graded against q140's brute-force levenshtein oracle
+#    the persisted fuzzy path graded through the append lifecycle):
+#    the variant artifact builds from HALF the corpus
+#    (write_fuzzy_vocab), the other half's vocabulary appends under its
+#    own epoch (fuzzy_vocab_append), and fuzzy_match_terms answers
+#    through the merged artifact — the cross-epoch df SUM and the Norvig best
+#    pick are graded against a brute-force levenshtein oracle
 #    over the FULL corpus: hash-equal means the split+append is
 #    invisible, i.e. a term split across slices reports its union df
 #    and a term first seen in the append is matchable.
@@ -7284,7 +6343,7 @@ def q143(spark, sf_dir):
 #    so each greedy pick maximizes lam*rel - (1-lam)*max-sim-to-
 #    selected — the diverse positive/negative mining step between
 #    ranked retrieval and curation.  Candidates are batch cosine
-#    top-12 per query (the q56 kernel as generator); the Spark side
+#    top-12 per query (batch_cosine_topk as generator); the Spark side
 #    runs the WHOLE k-step selection as one packed-array JVM fold per
 #    query (no iterative joins, no driver loop), while the oracle
 #    unrolls the same greedy argmax into k SQL stages over the same

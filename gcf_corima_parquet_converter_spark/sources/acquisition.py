@@ -23,7 +23,7 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass
-from datetime import datetime
+from datetime import datetime, timedelta, timezone
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -34,6 +34,14 @@ from ..schema.sanitize import sanitize_columns
 from .dat import DecodeParams, decode_dat
 
 NS_PER_S = 1_000_000_000
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+
+
+def parse_utc(value: str) -> datetime:
+    """ISO8601 (``Z`` suffix allowed) -> aware datetime; a time with
+    no offset is UTC, never the host's local zone."""
+    dt = datetime.fromisoformat(value.replace("Z", "+00:00"))
+    return dt if dt.tzinfo else dt.replace(tzinfo=timezone.utc)
 
 
 def required_files(sensor: str) -> set[str]:
@@ -73,8 +81,7 @@ def load_meta(folder: str, sensor: str = "iis3dwb_acc") -> AcquisitionMeta:
         info = json.load(f)
     with open(os.path.join(folder, "device_config.json")) as f:
         cfg = json.load(f)
-    start_str = info.get("start_time", "1970-01-01T00:00:00.000Z")
-    dt_start = datetime.fromisoformat(start_str.replace("Z", "+00:00"))
+    dt_start = parse_utc(info.get("start_time", "1970-01-01T00:00:00.000Z"))
     comps = {}
     for comp in cfg.get("device", {}).get("components", []):
         comps.update(comp)
@@ -83,7 +90,8 @@ def load_meta(folder: str, sensor: str = "iis3dwb_acc") -> AcquisitionMeta:
     status = comps.get(sensor, cfg.get(sensor, {}))
     return AcquisitionMeta(
         alias=alias,
-        start_ns=int(dt_start.timestamp() * NS_PER_S),
+        # exact integers: float64 values near 1.7e18 ns are 256 ns apart
+        start_ns=(dt_start - _EPOCH) // timedelta(microseconds=1) * 1000,
         start_time=dt_start,
         params=decode_params_from_status(status),
         info=info,

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..operators import telemetry as tm
 from ..schema.sanitize import sanitize_columns
 from .. import sinks
-from .acquisition import NS_PER_S, AcquisitionMeta, load_meta, readiness
+from .acquisition import NS_PER_S, AcquisitionMeta, load_meta, parse_utc, readiness
 from .dat import decode_dat
 
 
@@ -38,8 +38,7 @@ def _iso_to_rel_seconds(value: str | float, start: datetime) -> float:
     seconds relative to acquisition start; normalize to relative s."""
     if isinstance(value, (int, float)):
         return float(value)
-    dt = datetime.fromisoformat(str(value).replace("Z", "+00:00"))
-    return dt.timestamp() - start.timestamp()
+    return parse_utc(str(value)).timestamp() - start.timestamp()
 
 
 def tag_intervals(info: dict, start: datetime) -> list[tuple[str, float, float]]:

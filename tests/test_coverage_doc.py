@@ -4,14 +4,13 @@ to a stale corpus count).  These assertions make the drift a test
 failure instead of a judge finding."""
 
 import os
+import re
 
 import __spark_entry__ as E
 from gcf_corima_parquet_converter_spark import queries as Q
 
-_COVERAGE = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "COVERAGE.md",
-)
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_COVERAGE = os.path.join(_ROOT, "COVERAGE.md")
 
 
 def test_corpus_count_matches_coverage_doc():
@@ -47,3 +46,25 @@ def test_window_ordering_is_exactly_50_oracle_backed():
     # rows-only queries (no oracle) all sort after the oracle-backed ones
     backed = [n in oracle for n in ordered]
     assert backed == sorted(backed, reverse=True)
+
+
+def test_referenced_queries_are_registered():
+    """Every full query name the docs, bench and plan tooling mention
+    is registered: a stale name in bench.py's scaling list would only
+    surface as a swallowed KeyError inside the bench probe."""
+    files = [
+        "COVERAGE.md",
+        "PLANS.md",
+        "bench.py",
+        "tools/gen_plans.py",
+        "perfbench/workloads.py",
+        "tests/test_plan_invariants.py",
+    ]
+    name = re.compile(r"\bq\d+_[a-z0-9_]*[a-z0-9]\b")
+    stale = {}
+    for rel in files:
+        text = open(os.path.join(_ROOT, rel), encoding="utf-8").read()
+        missing = sorted(set(name.findall(text)) - set(Q.QUERIES))
+        if missing:
+            stale[rel] = missing
+    assert stale == {}, f"unregistered query names: {stale}"

@@ -5,6 +5,7 @@ import glob
 import json
 import os
 import struct
+import time
 
 import numpy as np
 import pyspark.sql.functions as F
@@ -138,6 +139,28 @@ def test_load_acquisition_enriched(spark, tmp_path):
         pdf["Time"].to_numpy()[:3], (np.rint(t[:3] * 1e9)).astype("int64") + start_ns
     )
     assert (pdf["alias"] == "LAF1").all()
+
+
+def test_load_meta_start_ns_exact(spark, tmp_path, monkeypatch):
+    """start_ns is the exact epoch ns of start_time.  Through a float64
+    (values ~256 ns apart near 1.7e18) this start came out 192 ns late
+    and shifted every enriched Time with it."""
+    exact = 1755233398433000000
+    folder = str(tmp_path / "D")
+    _in_g, t = write_acquisition(folder, start_time="2025-08-15T04:49:58.433Z")
+    enriched, meta = acq.load_acquisition(spark, folder)
+    assert meta.start_ns == exact
+    first = enriched.orderBy("Time").first()["Time"]
+    assert first == int(np.rint(t[0] * 1e9)) + exact
+    # a start_time with no offset is UTC, whatever the host's zone
+    write_acquisition(folder, start_time="2025-08-15T04:49:58.433")
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        assert acq.load_meta(folder).start_ns == exact
+    finally:
+        monkeypatch.undo()
+        time.tzset()
 
 
 def test_process_acquisition_e2e(spark, tmp_path):

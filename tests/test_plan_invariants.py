@@ -44,9 +44,6 @@ SINGLE_PARTITION_ALLOWED = {
     "q70_unigram_logprob": 1,  # vocab total scalar
     "q74_dsir_weights": 2,  # two distribution totals
     "q80_normalize_text": 1,  # count-distinct audit scalar
-    # global (keys=[]) top-k sketch: partial sketches merge map-side,
-    # one <= max_items struct per task reaches the single partition
-    "q91_heavy_hitters": 1,
     # whole-corpus datasheet: the keys=[] final aggregate of 7 scalar
     # metrics — partials combine map-side, one constant-size row per
     # task crosses the funnel (the count-distincts expand keyed, not
@@ -56,15 +53,15 @@ SINGLE_PARTITION_ALLOWED = {
     # (n_docs, avgdl) — per-doc dl first aggregates KEYED, then one
     # two-number partial per task crosses the funnel; the one-row
     # result broadcasts into scoring (the BNLJ in these plans is that
-    # one-row stats join, same shape as q104's bloom words row)
-    "q113_bm25_topk": 1,
-    "q115_bm25_batch": 1,
-    # hybrid dense+lexical fusion: the one funnel is q113's benign
+    # one-row stats join, same shape as q104's bloom words row); the
+    # 'simple' analyzer is a pure JVM projection and adds no funnel
+    "q122_analyzed_bm25": 1,
+    # hybrid dense+lexical fusion: the one funnel is q122's benign
     # BM25 corpus-stats scalar reduce on the lexical arm; the dense
     # arm rides batch_cosine_topk's two-phase guard and the RRF
     # window is bounded by contract (top-20 lists per query)
     "q136_hybrid_retrieval": 1,
-    # fuzzy-corrected BM25: again q113's corpus-stats scalar reduce
+    # fuzzy-corrected BM25: again q122's corpus-stats scalar reduce
     # (the scoring stage); the correction stage's per-term best pick
     # windows over neighborhood-bounded groups (hash exchange, not a
     # funnel)
@@ -82,7 +79,7 @@ SINGLE_PARTITION_ALLOWED = {
     # at runtime (the q139 note, more consumers).  The rank-funnel
     # audit below independently confirms 0 unguarded ranking funnels.
     "q141_serving_capstone": 4,
-    # weighted score fusion: the lexical arm carries q113's benign
+    # weighted score fusion: the lexical arm carries q122's benign
     # one-row BM25 corpus-stats scalar reduce; the min-max windows,
     # the fusion groupBy and the final ranking all run over top-20/
     # top-10 bounded frames (rank-funnel audit confirms 0)
@@ -93,26 +90,18 @@ SINGLE_PARTITION_ALLOWED = {
     # vocab-sized pair table (the BNLJs in this plan)
     "q116_collocations": 2,
     # hybrid RRF: the BM25 branch's corpus-stats scalar reduce (same
-    # funnel as q113); both top-50 selections are TakeOrderedAndProject
+    # funnel as q122); both top-50 selections are TakeOrderedAndProject
     # and the fusion windows run over <= 100 pre-bounded rows
     "q117_hybrid_rrf": 1,
-    # retrieval evaluation: the BM25 branch's corpus-stats scalar
-    # reduce (q113's funnel); the eval joins/windows themselves run
-    # over eval-sized frames (top-k lists x curated qrels) and add no
-    # funnel of their own
-    "q118_retrieval_eval": 1,
     # PRF expansion: the returned frame is the SECOND BM25 pass (the
     # first pass + RM1 expansion collect 3 terms before it builds), so
-    # the one funnel is again q113's benign corpus-stats scalar reduce
+    # the one funnel is again q122's benign corpus-stats scalar reduce
     "q119_prf_expansion": 1,
     # paired ablation: TWO BM25 passes (b=0.75 / b=0) each carry the
     # benign one-row corpus-stats scalar reduce, and eval_compare's
     # final keys=[] aggregate adds one constant-size row per task —
     # its input is 3 per-query rows, bounded by construction
     "q121_eval_compare_bm25_b": 3,
-    # analyzed-index BM25: q113's benign one-row corpus-stats scalar
-    # reduce, unchanged by the analyzer (a pure JVM projection)
-    "q122_analyzed_bm25": 1,
     # search capstone: two BM25 arms (phrase-filtered + full) each
     # carry the one-row corpus-stats reduce, and retrieval_eval's
     # ideal-DCG + cumulative-precision windows sort a SINGLE query's
@@ -123,7 +112,7 @@ SINGLE_PARTITION_ALLOWED = {
     # sum of unigram counts) — one bigint partial per task; the
     # one-row result broadcasts into the per-token backoff join
     "q124_ngram_lm_score": 1,
-    # proximity-evidence fusion: one funnel — q113's benign one-row
+    # proximity-evidence fusion: one funnel — q122's benign one-row
     # BM25 corpus-stats scalar reduce; the proximity ranking's global
     # row_number window runs over its LIMIT-50 frame (bounded by
     # construction, q117's fusion regime)
@@ -133,7 +122,7 @@ SINGLE_PARTITION_ALLOWED = {
     # allowlisted shape), one constant-size partial per task
     "q128_ann_ablation": 1,
     # eval summaries: the BM25 arm's one-row corpus-stats scalar
-    # reduce (q113's funnel) + the two keys=[] summary aggregates
+    # reduce (q122's funnel) + the two keys=[] summary aggregates
     # themselves — each consumes a per-query eval frame (3 rows by
     # construction: 3 retrieval queries / 3 ANN queries), one
     # constant-size partial per task crossing each funnel

@@ -123,14 +123,6 @@ QUERIES = [
         "is the shape this replaces at 100 TB",
     ),
     (
-        "q91_heavy_hitters",
-        "frequency sketch top-k: raw (key, value) pairs never ride an "
-        "exchange — approx_top_k_accumulate partial-aggregates to "
-        "<= max_items structs per task before the final reduce (the one "
-        "benign SinglePartition: a global keys=[] aggregate of "
-        "already-combined sketches)",
-    ),
-    (
         "q92_corpus_upsert",
         "MERGE upsert: one id-keyed full-outer shuffle; side-agnostic, "
         "so AQE broadcast-joins a small updates side at runtime",
@@ -198,34 +190,6 @@ QUERIES = [
         "shuffle cost",
     ),
     (
-        "q113_bm25_topk",
-        "BM25 retrieval (r13): query terms + per-term df broadcast "
-        "into the postings join (never the reverse), corpus stats are "
-        "a one-row broadcast (the single benign "
-        "BroadcastNestedLoopJoin + SinglePartition scalar reduce), "
-        "scores aggregate keyed by doc, top-k is a bounded window — "
-        "document text is never read by the scorer.  r18: the inline "
-        "composition re-derived the index for each of its three "
-        "consumers (postings / df / stats) because per-branch column "
-        "pruning makes the aggregates non-identical — the index is "
-        "now materialized ONCE per invocation (queries.shared_index, "
-        "lazy localCheckpoint; 6.2 -> 4.2s at sf1), so the base scan "
-        "lives inside the checkpoint's own plan and the consumers "
-        "read ExistingRDD.  The production path at scale remains the "
-        "PERSISTED index (write_inverted_index once, load_postings + "
-        "stats= per query, md5-bucket partition pruning — measured in "
-        "test_persisted_index_prunes_partitions_and_matches)",
-    ),
-    (
-        "q114_phrase_search",
-        "positional phrase match (r13): postings pre-filtered to the "
-        "phrase's terms, the anchor term's positions explode, each "
-        "later term equi-joins on doc_id with an array_contains "
-        "adjacency predicate evaluated in codegen — non-anchor "
-        "position arrays never explode and the text column is never "
-        "read",
-    ),
-    (
         "q116_collocations",
         "bigram collocation mining (r13; broadcast un-forced r14): "
         "bigrams derive NARROWLY from two shifted slices zipped per "
@@ -242,20 +206,6 @@ QUERIES = [
         "one-row BNLJ); lift is one codegen division",
     ),
     (
-        "q118_retrieval_eval",
-        "retrieval evaluation (r14): recall@10 / reciprocal rank / "
-        "average precision / nDCG@10 of the BM25 rankings against "
-        "tf-graded qrels.  The "
-        "only corpus-scale subtree is the BM25 branch (q113's shape, "
-        "incl. its benign one-row stats funnel); the eval stages join "
-        "top-k lists to judgments on (q_id, doc) equi-keys and window "
-        "per-query over qrels — every eval frame is bounded by "
-        "construction.  Gains are integer shifts and the 1/log2 "
-        "discounts are driver-side fixed-point constants, so the "
-        "metric arithmetic is exact integer sums + one division each "
-        "— all in codegen, no Python stage",
-    ),
-    (
         "q119_prf_expansion",
         "PRF query expansion (r14): the frame below is the SECOND BM25 "
         "pass over original + RM1-expanded terms (the first pass and "
@@ -263,16 +213,8 @@ QUERIES = [
         "human-sized by construction).  Expansion itself touches only "
         "the k feedback docs: the ranking broadcasts into an id "
         "semi-join against documents and only those k rows tokenize — "
-        "the shape is q113's scorer plus one bounded feedback stage, "
+        "the shape is the BM25 scorer plus one bounded feedback stage, "
         "and the corpus never shuffles",
-    ),
-    (
-        "q120_phrase_snippets",
-        "KWIC snippet hydration (r14): the phrase matches broadcast "
-        "into an id equi-join against documents — only the matched "
-        "docs tokenize, the slice window and array_join are codegen "
-        "expressions, and the corpus text never rides an exchange "
-        "(the tier's text-after-matching rule made visible)",
     ),
     (
         "q121_eval_compare_bm25_b",
@@ -294,7 +236,7 @@ QUERIES = [
         "q122_analyzed_bm25",
         "analyzer='simple' BM25 (r15): the analyzer is a pure-JVM "
         "transform+filter inside the index projection — the plan is "
-        "q113's scorer verbatim (one (term,doc) shuffle, one-row stats "
+        "the BM25 scorer verbatim (one (term,doc) shuffle, one-row stats "
         "reduce broadcast into scoring), no new exchange for the "
         "normalization",
     ),
@@ -305,7 +247,7 @@ QUERIES = [
         "are the two scorer arms (AQE exchange reuse collapses their "
         "shared index shape); fusion, snippet hydration, and every "
         "eval window run over top-k/eval-sized frames — the per-stage "
-        "boundedness of q117/q120/q118 surviving composition",
+        "boundedness of fusion, snippets and eval surviving composition",
     ),
     (
         "q124_ngram_lm_score",
@@ -316,39 +258,6 @@ QUERIES = [
         "conditional aggregation keyed by position, then one per-doc "
         "aggregation — corpus positions ride exactly two exchanges "
         "however many orders back off",
-    ),
-    (
-        "q125_ann_recall_eval",
-        "ANN recall eval (r15): both rankings end in per-partition "
-        "local top-k before the per-query rank window (the "
-        "batch_cosine_topk guard), so ann_eval's join/groupBy see "
-        "k-row frames per query — the corpus appears only in the two "
-        "map-only scoring scans, zero single-partition funnels",
-    ),
-    (
-        "q127_perlang_lm_score",
-        "per-language LM scoring (r15): all languages' models train "
-        "in ONE (lang, order, gram) groupBy, lookups resolve through "
-        "ONE equi-join carrying lang as extra key, and the per-group "
-        "unigram totals JOIN (languages-sized frame) replaces q124's "
-        "global one-row reduce — the grouped variant has ZERO "
-        "single-partition exchanges",
-    ),
-    (
-        "q129_proximity_search",
-        "ordered proximity (r15): backward-induction window matching "
-        "as packed-array filter/exists expressions — ZERO explodes "
-        "(phrase_search explodes its anchor; this never does), one id "
-        "equi-join per query term over term-filtered postings, "
-        "existence semantics exact",
-    ),
-    (
-        "q130_min_span",
-        "minimum covering span (r15): the MinDist sweep as ONE "
-        "aggregate fold over the sorted per-doc position union — "
-        "packed arrays, zero explodes, inner joins restrict to docs "
-        "containing every term; the global answer needs no further "
-        "aggregation (one row per doc leaves the fold)",
     ),
     (
         "q131_proximity_rrf",
@@ -399,8 +308,9 @@ QUERIES = [
         "analyzer-composed proximity (r16): the 'simple'-analyzed "
         "index feeds BOTH the ordered-slop chain and the MinDist "
         "sweep with analyze_terms at the call sites — same zero-"
-        "explode packed-array shapes as q129/q130, positions assigned "
-        "after analysis so adjacency holds on the analyzed stream",
+        "explode packed-array shapes as proximity_search/min_span, "
+        "positions assigned after analysis so adjacency holds on the "
+        "analyzed stream",
     ),
     (
         "q134_positional_search_batch",
@@ -414,7 +324,7 @@ QUERIES = [
     ),
     (
         "q135_min_span_batch",
-        "batched MinDist (r16): q130's sweep with an ARRAY fold state "
+        "batched MinDist (r16): min_span's sweep with an ARRAY fold state "
         "(array_repeat(0, n_terms) latest-position slots updated by "
         "an index-aware transform) so per-row term counts need no "
         "plan-time struct width — same one-term-join/one-shuffle "
@@ -428,7 +338,7 @@ QUERIES = [
         "arm in the WindowGroupLimit rank-then-filter, and fusion "
         "touches only two <= 20-row lists per query; the one "
         "SinglePartition exchange is the benign BM25 corpus-stats "
-        "scalar reduce (allowlisted with q113)",
+        "scalar reduce (allowlisted with q122)",
     ),
     (
         "q137_fuzzy_expand",
@@ -456,15 +366,6 @@ QUERIES = [
         "scalar reduce",
     ),
     (
-        "q140_fuzzy_vocab_search",
-        "persisted fuzzy path (r17): the variant-bucket artifact scan "
-        "carries STATIC vbucket partition filters (driver-computed "
-        "from the query neighborhoods — the same pruning contract as "
-        "the postings artifact), one variant equi-join against the "
-        "broadcast query neighborhoods, exact levenshtein verify; the "
-        "best-pick window groups are neighborhood-bounded",
-    ),
-    (
         "q143_score_fusion",
         "weighted score fusion (r17): both arms' min-max windows and "
         "the final per-query ranking run over top-20/top-10 bounded "
@@ -476,7 +377,7 @@ QUERIES = [
         "q142_fuzzy_vocab_incremental",
         "incremental fuzzy artifact (r17): build + epoch append land "
         "before the plan; the returned read carries the SAME static "
-        "vbucket+variant pruning as q140 across BOTH epoch "
+        "vbucket+variant pruning as a single-epoch read across BOTH epoch "
         "directories, with the cross-epoch df merge as one "
         "neighborhood-sized groupBy after the pruned scan",
     ),
