@@ -1748,8 +1748,6 @@ def compact_dedup_indexes(
     readers see old-or-new, never a mix); the maintenance stream keeps
     appending DURING the fold (its epochs stay visible through the
     epochs union) and resumes with its EXISTING checkpoint afterwards.
-    A legacy flat-append index directory is migrated in place on its
-    first compaction.
 
     DELETION (merge-on-compact, mirroring ``similarity.ivf_compact``):
     when documents are purged from the corpus their index rows must go
@@ -1764,7 +1762,7 @@ def compact_dedup_indexes(
     query-time overlay that makes the deletion logically immediate.
 
     Returns per-index ``{"version", "epochs_folded", "rows":
-    distinct_rows, "migrated", "files_before"}``."""
+    distinct_rows, "manifest", "files_before"}``."""
     import pyspark.sql.functions as F  # noqa: F811 (module-level alias)
 
     from .manifest import compact_artifact
@@ -1817,11 +1815,10 @@ def load_dedup_index(spark, path: str):
     """Read a persisted dedup index (digest or band — the artifacts
     ``streaming.ingest.maintain_dedup_indexes`` grows) through its
     manifest: folded base version ∪ live streamed epochs, with
-    replayed-folded epochs filtered; a legacy flat-append directory
-    reads as-is.  The ``epoch`` bookkeeping column is dropped — the
-    consumers (``exact_dedup_incremental``'s anti-join,
-    ``minhash_dedup_incremental``'s band equi-join) see index rows
-    only."""
+    replayed-folded epochs filtered.  The ``epoch`` bookkeeping column
+    is dropped — the consumers (``exact_dedup_incremental``'s
+    anti-join, ``minhash_dedup_incremental``'s band equi-join) see
+    index rows only."""
     from .manifest import read_artifact
 
     return read_artifact(spark, path, drop_epoch=True)

@@ -10,7 +10,12 @@ Layout under an artifact root::
     <root>/epochs/epoch=<B>/...            streaming appends (shared
                                            across versions)
 
-Why a manifest instead of a directory swap (``scale.atomic_swap_dir``):
+The manifest layout is the only artifact layout: reading or compacting
+a root without ``_manifests/`` raises ``ValueError`` asking for a
+rebuild, and :func:`write_epoch` refuses such a root unless it does not
+exist yet (then it initializes it).
+
+Why a manifest instead of swapping a rewritten directory in by rename:
 rename on object stores (GCS/S3) is copy+delete — non-atomic AND
 O(artifact bytes).  A manifest commit is ONE small-object PUT (atomic
 on every store), and the fold writes a NEW ``base/v<N+1>`` directory
@@ -95,6 +100,13 @@ def _delete(spark: SparkSession, path: str) -> None:
     fs.delete(hpath(path), True)
 
 
+def _not_versioned(root: str) -> ValueError:
+    return ValueError(
+        f"no manifest-versioned artifact at {root!r} (missing, or a "
+        "pre-manifest layout); rebuild it"
+    )
+
+
 def base_dir(root: str, version: int) -> str:
     return f"{root.rstrip('/')}/base/v{int(version)}"
 
@@ -104,10 +116,10 @@ def epochs_dir(root: str) -> str:
 
 
 def manifest_resolve(spark: SparkSession, root: str) -> dict | None:
-    """Return the artifact's current manifest, or ``None`` for a legacy
-    (pre-manifest) directory.  Resolution lists ``_manifests/`` and
-    takes the highest version that parses — a half-written newer file
-    (crash mid-PUT on a store without atomic create) falls back to the
+    """Return the artifact's current manifest, or ``None`` when the
+    root has none.  Resolution lists ``_manifests/`` and takes the
+    highest version that parses — a half-written newer file (crash
+    mid-PUT on a store without atomic create) falls back to the
     previous commit instead of failing the reader."""
     mdir = f"{root.rstrip('/')}/{_MANIFEST_DIR}"
     fs, hpath = _hadoop(spark, mdir)
@@ -234,9 +246,8 @@ def read_artifact(
     epochs not yet folded — lazy, partition-prunable on every partition
     column (a probe's ``centroid_id`` filter prunes both branches).
     Pass ``manifest`` to pin a snapshot already resolved; otherwise the
-    current manifest is resolved (one small-file read + one listing).
-    A legacy directory (no ``_manifests/``) reads as-is, so every
-    pre-manifest artifact keeps working unchanged.  ``drop_epoch=True``
+    current manifest is resolved (one small-file read + one listing);
+    a root without one raises ``ValueError``.  ``drop_epoch=True``
     removes the ``epoch`` bookkeeping column when present — the shared
     idiom of every row-consuming loader (``dedup.load_dedup_index``,
     ``sketches.load_sketch_shards``).
@@ -251,11 +262,7 @@ def read_artifact(
     root = root.rstrip("/")
     m = manifest if manifest is not None else manifest_resolve(spark, root)
     if m is None:
-        _recover_interrupted_swap(spark, root)
-        df = spark.read.parquet(root)
-        if drop_epoch and "epoch" in df.columns:
-            df = df.drop("epoch")
-        return df
+        raise _not_versioned(root)
     folded = set(m["folded_epochs"])
     watermark = int(m.get("folded_watermark", -1))
     parts = []
@@ -299,9 +306,7 @@ def write_epoch(
     Invariant kept here: every versioned artifact has a manifest
     BEFORE epochs land.  A fresh root is auto-initialized (version 0,
     no base — the maintenance-from-nothing birth path); a root that
-    already holds pre-manifest data refuses the write, because its
-    legacy readers scan the whole root and a nested ``epochs/`` tree
-    would break them — run ``compact_artifact`` once to migrate.
+    already holds data without a manifest refuses the write.
 
     Epoch-level commit: the ``_EPOCH_COMMITTED`` marker is PUT only
     after the data write succeeds, and on the overwrite (replay) path
@@ -320,11 +325,7 @@ def write_epoch(
     spark = df.sparkSession
     if manifest_resolve(spark, root) is None:
         if _exists(spark, root):
-            raise ValueError(
-                f"{root!r} is a legacy (pre-manifest) artifact; run "
-                "compact_artifact once to migrate it before appending "
-                "epochs"
-            )
+            raise _not_versioned(root)
         init_artifact(spark, root)
     marker = f"{epochs_dir(root)}/epoch={int(epoch_id)}/{_EPOCH_MARKER}"
     fs, hpath = _hadoop(spark, marker)
@@ -379,11 +380,7 @@ def compact_artifact(
     Epochs appended between 1 and 3 are simply not in ``E`` — readers
     of the new manifest still see them via the epochs union; the
     maintenance stream never pauses and resumes with its EXISTING
-    checkpoint.  A legacy (pre-manifest) directory is MIGRATED: its
-    fold is written as a fresh versioned tree and swapped in with
-    ``scale.atomic_swap_dir`` — the one remaining rename-based commit,
-    paid once per artifact, after which every future compaction is
-    manifest-committed.
+    checkpoint.  A root without a manifest raises ``ValueError``.
 
     ``align_manifest`` pins the fold to a SIBLING artifact's committed
     compaction: two artifacts that share epoch ids (an index's postings
@@ -399,17 +396,17 @@ def compact_artifact(
     before the manifest commit (lets a test inject a concurrent append
     or a crash into the commit window).
 
-    Returns ``{"version", "epochs_folded", "rows", "migrated",
-    "manifest"}`` (``rows`` is -1 when ``count_rows=False`` — the
-    count is a second full scan of the fold output, telemetry worth
-    skipping at 100 TB; ``manifest`` is the committed manifest dict,
-    the snapshot to pass as a sibling's ``align_manifest``).
+    Returns ``{"version", "epochs_folded", "rows", "manifest"}``
+    (``rows`` is -1 when ``count_rows=False`` — the count is a second
+    full scan of the fold output, telemetry worth skipping at 100 TB;
+    ``manifest`` is the committed manifest dict, the snapshot to pass
+    as a sibling's ``align_manifest``).
     """
     root = root.rstrip("/")
     keep_versions = max(2, int(keep_versions))
     m = manifest_resolve(spark, root)
     if m is None:
-        return _migrate_legacy(spark, root, fold_fn, partition_cols)
+        raise _not_versioned(root)
     version = int(m["version"])
     folded_prev = set(m["folded_epochs"])
     present = set(list_epochs(spark, root))
@@ -485,61 +482,6 @@ def compact_artifact(
         "version": new_version,
         "epochs_folded": len(to_fold),
         "rows": rows,
-        "migrated": False,
         "manifest": committed,
     }
 
-
-def _recover_interrupted_swap(spark: SparkSession, root: str) -> None:
-    """A legacy migration that died between ``atomic_swap_dir``'s two
-    renames leaves no live directory and the data parked at
-    ``<root>.compact.old`` — restore it BEFORE any read, so the
-    retried migration (and every plain legacy read) self-heals instead
-    of failing on the missing path."""
-    old = root + ".compact.old"
-    fs, hpath = _hadoop(spark, root)
-    if not fs.exists(hpath(root)) and fs.exists(hpath(old)):
-        if not fs.rename(hpath(old), hpath(root)):
-            raise IOError(
-                f"could not restore {old!r} over the missing {root!r}"
-            )
-
-
-def _migrate_legacy(
-    spark: SparkSession,
-    root: str,
-    fold_fn: Callable[[DataFrame], DataFrame],
-    partition_cols: tuple[str, ...],
-) -> dict:
-    """One-time migration of a pre-manifest artifact: fold everything
-    into a fresh versioned tree beside the live one, then swap it in.
-    The swap is the legacy commit (rename-atomic on HDFS/local only) —
-    on an object store, run the migration while writers are paused,
-    once; every compaction after it is manifest-committed."""
-    from .scale import atomic_swap_dir
-
-    _recover_interrupted_swap(spark, root)
-    df = spark.read.parquet(root)
-    n_epochs, wm = 0, -1
-    if "epoch" in df.columns:
-        epochs = [r[0] for r in df.select("epoch").distinct().collect()]
-        n_epochs = len(epochs)
-        wm = max((e for e in epochs if e is not None), default=-1)
-        df = df.drop("epoch")
-    folded = fold_fn(df)
-    tmp = root + ".migrate.tmp"
-    _delete(spark, tmp)
-    (
-        folded.withColumn("epoch", F.lit(-1))
-        .write.mode("overwrite")
-        .partitionBy("epoch", *partition_cols)
-        .parquet(base_dir(tmp, 1))
-    )
-    rows = spark.read.parquet(base_dir(tmp, 1)).count()
-    # the legacy epochs were folded into this base: the watermark
-    # carries their max id so a resumed stream's replay of the last
-    # pre-migration batch is filtered, not double-counted
-    committed = manifest_commit(spark, tmp, 1, [], folded_watermark=int(wm))
-    atomic_swap_dir(spark, root, tmp)
-    return {"version": 1, "epochs_folded": n_epochs, "rows": rows,
-            "migrated": True, "manifest": committed}

@@ -509,7 +509,8 @@ def bloom_artifact_load(
     spark: SparkSession, path: str, before_epoch: int | None = None
 ) -> dict | None:
     """Resolve the artifact and OR-merge base ∪ live epochs into one
-    in-memory filter (``None`` while the artifact is empty).
+    in-memory filter (``None`` while the artifact is empty; a root
+    without a manifest raises ``ValueError``).
 
     ``before_epoch=N`` merges only the folded base and epochs < N —
     what a foreachBatch gate must read while processing batch N, so a
@@ -517,9 +518,11 @@ def bloom_artifact_load(
     self-read would turn the replay into an empty overwrite)."""
     from . import manifest as M
 
-    df = None
+    m = M.manifest_resolve(spark, path)
+    if m is None:
+        raise M._not_versioned(path)
     try:
-        df = M.read_artifact(spark, path)
+        df = M.read_artifact(spark, path, manifest=m)
     except ValueError:
         return None  # versioned but empty: no base, no epochs yet
     if before_epoch is not None and "epoch" in df.columns:

@@ -635,45 +635,3 @@ def _count_unguarded_rank_funnels(plan: str) -> int:
             n_flagged += 1
     return n_flagged
 
-
-def atomic_swap_dir(spark: SparkSession, live: str, tmp: str) -> None:
-    """Swap a rewritten directory over a live one with rollback — the
-    rename-based commit now used ONLY by the one-time legacy migration
-    in ``operators.manifest`` (every steady-state compaction commits
-    via a manifest PUT instead): rename ``live`` →
-    ``<live>.compact.old``, rename ``tmp`` in, delete the old copy; if
-    the second rename fails the old tree is restored.
-
-    Crash recovery: a process that died BETWEEN the two renames leaves
-    no live directory and the data parked at ``<live>.compact.old`` —
-    the next call (the retried job) detects exactly that state and
-    restores the old tree before swapping, so the crash window costs a
-    retry, never the data.
-
-    Rename is atomic on HDFS and local filesystems — a reader sees the
-    old tree or the new one, never a mix.  Object stores emulate
-    rename as copy+delete, so there pause readers over the swap or
-    point a manifest at versioned directories instead."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-    fs = HPath(live).getFileSystem(hconf)
-    old = live + ".compact.old"
-    if not fs.exists(HPath(live)) and fs.exists(HPath(old)):
-        # a previous swap died between its two renames: restore first
-        if not fs.rename(HPath(old), HPath(live)):
-            raise IOError(
-                f"atomic_swap_dir: crash-recovery restore of {old} failed"
-            )
-    fs.delete(HPath(old), True)
-    if not fs.rename(HPath(live), HPath(old)):
-        raise IOError(f"atomic_swap_dir: could not move {live} aside")
-    try:
-        ok = fs.rename(HPath(tmp), HPath(live))
-    except Exception as e:  # missing tmp raises (not returns false) on some FS
-        fs.rename(HPath(old), HPath(live))  # roll the live tree back
-        raise IOError(f"atomic_swap_dir: swap failed; {live} restored") from e
-    if not ok:
-        fs.rename(HPath(old), HPath(live))  # roll the live tree back
-        raise IOError(f"atomic_swap_dir: swap failed; {live} restored")
-    fs.delete(HPath(old), True)

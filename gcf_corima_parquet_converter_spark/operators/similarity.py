@@ -378,8 +378,8 @@ def ivf_load(spark, path: str) -> tuple[DataFrame, np.ndarray]:
     directories (PartitionFilters in the plan).  The read resolves the
     artifact's manifest (``operators.manifest.read_artifact``): folded
     base version ∪ live streamed epochs, with already-folded epoch ids
-    filtered out so a replayed micro-batch can never double-count; a
-    legacy pre-manifest artifact reads as-is.  The ``epoch`` partition
+    filtered out so a replayed micro-batch can never double-count.
+    The ``epoch`` partition
     column rides along and is ignored by the probes."""
     from .manifest import read_artifact
 
@@ -428,8 +428,6 @@ def ivf_compact(
     fold) and resumes with its EXISTING checkpoint — a replayed
     micro-batch that re-materializes a folded epoch is filtered out by
     the manifest's ``folded_epochs`` list, so nothing double-counts.
-    A legacy pre-manifest artifact is migrated in place (one
-    rename-based commit, once).
 
     DELETION (``delete_ids`` — a one-column frame of ``id_col`` values
     to remove): merge-on-compact.  An append+fold artifact has no
@@ -442,7 +440,7 @@ def ivf_compact(
     against the pending-delete list (tiny — it joins k rows per query),
     or pre-filter the assignments frame the same way.
 
-    Returns ``{"version", "epochs_folded", "rows", "migrated"}``."""
+    Returns ``{"version", "epochs_folded", "rows", "manifest"}``."""
     from . import manifest as M
 
     apath = path.rstrip("/") + "/assignments"
@@ -1011,8 +1009,8 @@ def ivfpq_load(
     codebooks)`` ready for :func:`ivfpq_topk` / the rerank recipe.
     The base frame is lazy, resolved through the artifact's manifest
     (folded base version ∪ live streamed epochs, replayed-epoch ids
-    filtered — same contract as :func:`ivf_load`; legacy pre-manifest
-    artifacts read as-is), and probes prune on ``centroid_id``.
+    filtered — same contract as :func:`ivf_load`), and probes prune on
+    ``centroid_id``.
     ``with_meta=True`` appends the artifact's meta dict (currently
     ``{"residual": bool}``; artifacts written before the meta table
     existed load as raw-vector codes, which is what they are — only a

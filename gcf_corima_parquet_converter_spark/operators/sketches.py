@@ -361,9 +361,9 @@ def bitmap_or_shards(
 def load_sketch_shards(spark, path: str) -> DataFrame:
     """Read a ``maintain_sketch_shards`` artifact through its manifest
     (``operators.manifest.read_artifact``: folded base version ∪ live
-    streamed epochs, replayed-folded epochs filtered; a legacy flat
-    ``epoch=<id>`` directory reads as-is).  The ``epoch`` bookkeeping
-    column is dropped — the merge functions see shard rows only."""
+    streamed epochs, replayed-folded epochs filtered).  The ``epoch``
+    bookkeeping column is dropped — the merge functions see shard rows
+    only."""
     from .manifest import read_artifact
 
     return read_artifact(spark, path, drop_epoch=True)
@@ -387,11 +387,9 @@ def compact_sketch_shards(spark, path: str, fold_fn) -> dict:
     with its EXISTING checkpoint — a replayed micro-batch that
     re-materializes an epoch this fold consumed is masked by the
     manifest's ``folded_epochs`` filter, so even the SUM-semantics
-    tiers (histogram / top-k) cannot double-count.  A legacy flat
-    ``epoch=<id>`` artifact is migrated in place on its first
-    compaction (one rename-based commit, once).
+    tiers (histogram / top-k) cannot double-count.
 
-    Returns ``{"version", "epochs_folded", "rows", "migrated"}``."""
+    Returns ``{"version", "epochs_folded", "rows", "manifest"}``."""
     from .manifest import compact_artifact
 
     return compact_artifact(spark, path, fold_fn)

@@ -157,8 +157,18 @@ def with_date_parts(df: DataFrame) -> DataFrame:
     )
 
 
-def write_hive_partitioned(df: DataFrame, root: str) -> None:
-    """Hive-layout parquet sink (S7/S8): ``root/alias=…/year=…/month=…/day=…``.
+def write_hive_partitioned(df: DataFrame, root: str, stem: str) -> None:
+    """Hive-layout parquet sink (S7/S8):
+    ``root/alias=…/year=…/month=…/day=…/<stem>-*.parquet``.
+
+    ``stem`` names one acquisition's files, like the reference's
+    ``<name>_<ts>.parquet`` (main.py:121-131): writing a stem replaces
+    that stem's files in each leaf it writes and leaves every other
+    file there alone, so two acquisitions of one alias on one day both
+    survive and re-processing one is idempotent.  The rows are staged
+    under ``root/_stage_<stem>`` (the underscore keeps readers of
+    ``root`` blind to it); then, per leaf, the stem's old files are
+    deleted and the staged files renamed in.
 
     SNAPPY + dictionary encoding are Spark parquet defaults; rows are
     sorted by time *within* each partition so the int64 Time column
@@ -170,20 +180,45 @@ def write_hive_partitioned(df: DataFrame, root: str) -> None:
     out = df
     if not set(PARTITION_COLS) <= set(df.columns):
         out = with_date_parts(df)
+    spark = df.sparkSession
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    root_path = hpath(root)
+    fs = root_path.getFileSystem(spark._jsc.hadoopConfiguration())
+    stage = hpath(root_path, f"_stage_{stem}")
     (
         out.sortWithinPartitions(*PARTITION_COLS, "Time")
         .write.mode("overwrite")
-        # dynamic: overwrite ONLY the partitions present in df.  Static
-        # overwrite (the default) clears the whole root first — writing
-        # acquisition B would delete acquisition A's alias/date
-        # partitions.  Dynamic also preserves the reference's
-        # idempotence: re-processing the same acquisition rewrites
-        # exactly its own partition (main.py:121-131 deterministic path).
-        .option("partitionOverwriteMode", "dynamic")
         .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
         .partitionBy(*PARTITION_COLS)
-        .parquet(root)
+        .parquet(stage.toString())
     )
+    # walk the staged partition dirs level by level: one listStatus per
+    # directory, where a recursive listFiles also fetches block locations
+    leaves = [(stage, ())]
+    for _ in PARTITION_COLS:
+        leaves = [
+            (st.getPath(), rel + (st.getPath().getName(),))
+            for d, rel in leaves
+            for st in fs.listStatus(d)
+            if st.isDirectory()
+        ]
+    prefix = f"{stem}-"
+    for src, rel in leaves:
+        leaf = hpath(root_path, "/".join(rel))
+        if fs.exists(leaf):
+            for st in fs.listStatus(leaf):
+                name = st.getPath().getName()
+                if name.startswith(prefix) and name.endswith(".parquet"):
+                    fs.delete(st.getPath(), False)
+        else:
+            fs.mkdirs(leaf)
+        for st in fs.listStatus(src):
+            name = st.getPath().getName()
+            if name.endswith(".parquet"):
+                dst = hpath(leaf, prefix + name)
+                if not fs.rename(st.getPath(), dst):
+                    raise IOError(f"write_hive_partitioned: rename to {dst} failed")
+    fs.delete(stage, True)
 
 
 def asof_join(

@@ -1476,7 +1476,7 @@ def compact_ngram_lm(
     artifact MUST pass its ``group_cols`` — the global fold would sum
     the per-group models into one.
 
-    Returns ``{"version", "epochs_folded", "rows", "migrated"}``."""
+    Returns ``{"version", "epochs_folded", "rows", "manifest"}``."""
     from .manifest import compact_artifact
 
     return compact_artifact(

@@ -125,7 +125,9 @@ def process_acquisition(
     1 s completeness-gated RMS, both written Hive-partitioned.
 
     Partition values derive from start_time exactly like the reference
-    (main.py:124-131) — one acquisition lands in one partition.
+    (main.py:124-131) — one acquisition lands in one partition, as
+    files named ``<sensor>_<yyyyMMdd_HHmmss>-*`` after its start, so
+    other acquisitions in the same partition survive.
     """
     loaded = load_acquisition(spark, folder, sensor)
     if loaded is None:
@@ -142,6 +144,7 @@ def process_acquisition(
 
     dt = meta.start_time
     parts = {"year": dt.year, "month": dt.month, "day": dt.day}
+    stem = f"{sensor}_{dt:%Y%m%d_%H%M%S}"
     enriched_out = enriched.withColumns({k: F.lit(v) for k, v in parts.items()})
     rms_out = rms.withColumns({k: F.lit(v) for k, v in parts.items()})
 
@@ -155,7 +158,7 @@ def process_acquisition(
     enriched.persist()
     rms_out.persist()
     try:
-        tm.write_hive_partitioned(enriched_out, f"{out_root}/{sensor}")
+        tm.write_hive_partitioned(enriched_out, f"{out_root}/{sensor}", stem)
         n_rms = rms_out.count()
         if n_rms == 0:
             # main.py:154-156: no full 1 s window -> RMS table not written
@@ -163,7 +166,9 @@ def process_acquisition(
         # at most one row per second of acquisition, so one file: the
         # global orderBy in tumbling_rms would otherwise write one small
         # file per shuffle partition
-        tm.write_hive_partitioned(rms_out.coalesce(1), f"{out_root}/{sensor}_rms")
+        tm.write_hive_partitioned(
+            rms_out.coalesce(1), f"{out_root}/{sensor}_rms", stem
+        )
         return {"rms_rows": n_rms, "rms_written": True, "meta": meta}
     finally:
         rms_out.unpersist()

@@ -31,6 +31,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..sources.acquisition import process_acquisition, readiness
+from .ingest import _start_loop
 
 
 def _dir_of(path: str) -> str:
@@ -44,7 +45,6 @@ def stream_acquisitions(
     checkpoint: str,
     sensor: str = "iis3dwb_acc",
     on_processed: Callable[[str, dict], None] | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Watch ``landing_root`` and run the reference pipeline once per
     completed acquisition directory.  Returns the running query; callers
@@ -83,10 +83,4 @@ def stream_acquisitions(
         .option("pathGlobFilter", "*")
         .load(f"{landing_root}/*")
     )
-    writer = (
-        files.writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", os.path.join(checkpoint, "stream"))
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_loop(files, handle_batch, os.path.join(checkpoint, "stream"))

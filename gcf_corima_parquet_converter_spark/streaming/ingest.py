@@ -28,6 +28,7 @@ from collections.abc import Iterator
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BinaryType,
@@ -38,6 +39,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..operators.telemetry import MIN_SPAN_FRAC, NS_PER_S
 from ..sources.dat import DecodeParams, frame_packets, sample_times
 
 CHUNK_SCHEMA = StructType(
@@ -62,6 +64,24 @@ SAMPLE_SCHEMA = StructType(
 _STATE_SCHEMA = StructType(
     [StructField("leftover", BinaryType()), StructField("n_samples", LongType())]
 )
+
+
+def _start_loop(
+    stream: DataFrame, batch_fn, checkpoint: str
+) -> StreamingQuery:
+    """Start ``batch_fn`` as the ``foreachBatch`` sink of ``stream`` —
+    the one way every loop in the streaming tier starts.  The
+    checkpoint makes a restart resume (and a replayed batch re-run)
+    where the last run stopped; ``availableNow`` drains what the
+    source holds at start and then terminates, so each call is one
+    bounded catch-up run.  Returns the started query; callers own
+    ``awaitTermination``."""
+    return (
+        stream.writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def reassemble_packets(
@@ -161,14 +181,13 @@ def streaming_rms(
     samples: DataFrame,
     start_ns: int = 0,
     watermark: str = "2 seconds",
-    min_span_frac: float = 0.999,
 ) -> DataFrame:
     """T4+T5: tumbling 1 s RMS on a streaming sample table.
 
     ``window(ts, "1 second")`` + watermark bounds state; the reference's
-    duration-based completeness gate (span >= 0.999 s, main.py:148-153)
-    is retained as a post-aggregation filter so emitted rows match the
-    batch pipeline exactly.
+    duration-based completeness gate (span >= ``telemetry.MIN_SPAN_FRAC``
+    of a second, main.py:148-153) is retained as a post-aggregation
+    filter so emitted rows match the batch pipeline exactly.
     """
     # Event time must bucket EXACTLY like the batch path, which rounds
     # relative seconds to int64 ns (telemetry.to_absolute_time: rint).
@@ -191,7 +210,7 @@ def streaming_rms(
             F.sqrt(F.avg(F.col("A_z_g") * F.col("A_z_g"))).alias("rms_z"),
             (
                 (F.max("ts_ns") - F.min("ts_ns"))
-                >= F.lit(int(min_span_frac * 1_000_000_000))
+                >= F.lit(MIN_SPAN_FRAC * NS_PER_S)
             ).alias("_full"),
         )
         .where(F.col("_full"))
@@ -199,7 +218,7 @@ def streaming_rms(
     )
     return agg.select(
         "comp_name",
-        (F.unix_timestamp(F.col("w.start")) * F.lit(1_000_000_000)).alias("Time"),
+        (F.unix_timestamp(F.col("w.start")) * F.lit(NS_PER_S)).alias("Time"),
         "rms_x",
         "rms_y",
         "rms_z",
@@ -525,7 +544,6 @@ def maintain_dedup_indexes(
     k: int = 32,
     bands: int = 8,
     n: int = 3,
-    available_now: bool = True,
 ):
     """Continuously maintain the PERSISTED dedup indexes from a
     document stream — the glue that keeps the batch-incremental dedup
@@ -569,13 +587,7 @@ def maintain_dedup_indexes(
             band_path, int(epoch_id), append=True,
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_loop(stream, _batch, checkpoint)
 
 
 def maintain_sketch_shards(
@@ -583,7 +595,6 @@ def maintain_sketch_shards(
     shard_fn,
     path: str,
     checkpoint: str,
-    available_now: bool = True,
 ):
     """Continuously materialize mergeable SKETCH SHARDS from a stream —
     the persisted-artifact loop for the whole sketch family
@@ -618,13 +629,7 @@ def maintain_sketch_shards(
             return
         write_epoch(shard_fn(df), path, int(epoch_id))
 
-    writer = (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_loop(stream, _batch, checkpoint)
 
 
 def maintain_inverted_index(
@@ -634,7 +639,6 @@ def maintain_inverted_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_buckets: int = 64,
-    available_now: bool = True,
 ):
     """Continuously grow the incremental INVERTED INDEX
     (``retrieval.index_append`` artifact) from a document stream — the
@@ -668,13 +672,7 @@ def maintain_inverted_index(
             id_col=id_col,
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_loop(stream, _batch, checkpoint)
 
 
 def maintain_fuzzy_vocab(
@@ -683,7 +681,6 @@ def maintain_fuzzy_vocab(
     checkpoint: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    available_now: bool = True,
 ):
     """Continuously grow the persisted FUZZY-VOCAB artifact
     (``retrieval.write_fuzzy_vocab`` / ``fuzzy_vocab_append``) from a
@@ -718,13 +715,7 @@ def maintain_fuzzy_vocab(
             inverted_index(df, id_col, text_col), path, int(epoch_id)
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_loop(stream, _batch, checkpoint)
 
 
 def maintain_ivf_index(
@@ -733,7 +724,6 @@ def maintain_ivf_index(
     checkpoint: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    available_now: bool = True,
     pq: bool = False,
 ):
     """Continuously grow a persisted IVF index (``similarity.ivf_save``
@@ -807,13 +797,7 @@ def maintain_ivf_index(
             rows, apath, int(epoch_id), partition_cols=("centroid_id",)
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_loop(stream, _batch, checkpoint)
 
 
 def serve_ann_queries(
@@ -827,7 +811,6 @@ def serve_ann_queries(
     shortlist: int | None = None,
     q_id_col: str = "q_id",
     q_vec_col: str = "q_vec",
-    available_now: bool = True,
     adc_only: bool = False,
     _pre_batch_hook=None,
 ):
@@ -924,13 +907,7 @@ def serve_ann_queries(
             .parquet(output_path)
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_loop(stream, _batch, checkpoint)
 
 
 def windowed_fft_stream(
@@ -1056,7 +1033,6 @@ def decontaminate_stream(
     n: int = 8,
     fpp: float = 0.001,
     expected_grams: int | None = None,
-    available_now: bool = True,
 ):
     """Streaming twin of ``pipeline.bloom_ngram_decontaminate``: gate a
     continuously-ingested document stream against a STATIC benchmark
@@ -1104,13 +1080,7 @@ def decontaminate_stream(
         )
         write_epoch(clean, output_path, int(epoch_id))
 
-    writer = (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_loop(stream, _batch, checkpoint)
 
 
 def bloom_dedup_stream(
@@ -1121,7 +1091,6 @@ def bloom_dedup_stream(
     checkpoint: str,
     expected_items: int,
     fpp: float = 0.01,
-    available_now: bool = True,
     pending_deletes: DataFrame | None = None,
 ):
     """Unbounded-horizon seen-keys gate with BOUNDED memory: emit only
@@ -1238,13 +1207,95 @@ def bloom_dedup_stream(
         finally:
             fresh.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
+    return _start_loop(stream, _batch, checkpoint)
+
+
+def _batch_postings(
+    spark,
+    df: DataFrame,
+    caller: str,
+    index_root: str,
+    terms_col: str,
+    id_col: str,
+    max_pruned_terms: int,
+    pending_deletes_path: str | None,
+) -> tuple[list[str], DataFrame | None, DataFrame | None] | None:
+    """Per-batch BM25 prep shared by :func:`serve_bm25_queries` and
+    :func:`serve_search_queries`: the batch's distinct usable query
+    terms and the ``(postings, stats)`` that serve them.
+
+    Returns ``([], None, None)`` when the batch carries no usable term
+    (null/blank elements are dropped — they match no posting, and a
+    null would break ``sorted``), and ``None``, with a warning, while
+    the index artifact is not initialized: such a batch commits with
+    no results instead of wedging the stream, and its queries are not
+    retried once the index appears.  The term pool is capped at
+    ``max_pruned_terms + 1``; past ``max_pruned_terms`` the read falls
+    back to the unpruned manifest read instead of shipping a huge
+    IN-list into the scan.
+
+    The pending-deletes overlay is localized driver-side (one bounded
+    collect) so the batch's task plan never references the overlay
+    files a purge loop may be rewriting.  A missing path means no
+    pending deletions; a read that fails mid-rewrite serves the batch
+    without the overlay and warns (bounded staleness —
+    merge-on-compact deletion stays authoritative)."""
+    import warnings
+
+    from pyspark.errors import AnalysisException
+
+    from ..operators.manifest import manifest_resolve
+    from ..operators.retrieval import (
+        _POSTINGS_SUBDIR,
+        load_postings_artifact,
+        read_index_artifact,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+    term_rows = (
+        df.select(F.explode(terms_col).alias("t"))
+        .where(F.col("t").isNotNull() & (F.col("t") != ""))
+        .distinct()
+        .limit(int(max_pruned_terms) + 1)
+        .collect()
+    )
+    terms = sorted(r["t"] for r in term_rows)
+    if not terms:
+        return [], None, None
+    if manifest_resolve(spark, f"{index_root}/{_POSTINGS_SUBDIR}") is None:
+        warnings.warn(
+            f"{caller}: index artifact {index_root!r} not initialized "
+            "yet; batch served with no results"
+        )
+        return None
+    dels = None
+    if pending_deletes_path is not None:
+        try:
+            overlay = spark.read.option(
+                "ignoreMissingFiles", "true"
+            ).parquet(pending_deletes_path)
+            rows = overlay.collect()
+            if rows:
+                dels = spark.createDataFrame(rows, overlay.schema)
+        except AnalysisException:
+            dels = None  # path absent/cleared: nothing pending
+        except Exception as exc:  # mid-rewrite torn state
+            warnings.warn(
+                f"{caller}: pending-deletes overlay at "
+                f"{pending_deletes_path!r} unreadable this batch "
+                f"({type(exc).__name__}); serving without it "
+                "(bounded staleness — rewrite the overlay "
+                "atomically via temp dir + rename)"
+            )
+            dels = None
+    if len(terms) > max_pruned_terms:
+        post, stats = read_index_artifact(
+            spark, index_root, pending_deletes=dels, id_col=id_col
+        )
+    else:
+        post, stats = load_postings_artifact(
+            spark, index_root, terms, pending_deletes=dels, id_col=id_col
+        )
+    return terms, post, stats
 
 
 def serve_bm25_queries(
@@ -1262,7 +1313,6 @@ def serve_bm25_queries(
     scale: int | None = None,
     max_pruned_terms: int = 10_000,
     pending_deletes_path: str | None = None,
-    available_now: bool = True,
     _pre_batch_hook=None,
 ):
     """Streaming BM25 query serving: answer a STREAM of term queries
@@ -1327,17 +1377,7 @@ def serve_bm25_queries(
     ``_pre_batch_hook(batch_id)`` is the test seam shared with the ANN
     server (inject an append/compaction, assert the batch sees it).
     Returns the started StreamingQuery."""
-    import warnings
-
-    from pyspark.errors import AnalysisException
-
-    from ..operators.manifest import manifest_resolve
-    from ..operators.retrieval import (
-        _POSTINGS_SUBDIR,
-        bm25_topk_batch,
-        load_postings_artifact,
-        read_index_artifact,
-    )
+    from ..operators.retrieval import bm25_topk_batch
 
     spark = stream.sparkSession
 
@@ -1346,66 +1386,15 @@ def serve_bm25_queries(
             _pre_batch_hook(int(epoch_id))
         if not df.head(1):
             return
-        # Null/empty guard (a malformed batch must not poison the
-        # stream: the failed batch replays from the checkpoint forever).
-        # Null terms arrays explode to nothing; null/blank ELEMENTS are
-        # dropped here — they match no posting (the index never stores
-        # '') and a null would break sorted() below.  A batch with no
-        # usable terms at all is a valid no-answer batch: every query
-        # scores zero docs, so it commits with no result rows.
-        term_rows = (
-            df.select(F.explode(terms_col).alias("t"))
-            .where(F.col("t").isNotNull() & (F.col("t") != ""))
-            .distinct()
-            .limit(int(max_pruned_terms) + 1)
-            .collect()
+        # a batch with no usable terms is a valid no-answer batch:
+        # every query scores zero docs, so it commits with no rows
+        got = _batch_postings(
+            spark, df, "serve_bm25_queries", index_root, terms_col,
+            id_col, max_pruned_terms, pending_deletes_path,
         )
-        terms = sorted(r["t"] for r in term_rows)
-        if not terms:
+        if got is None or not got[0]:
             return
-        if manifest_resolve(spark, f"{index_root}/{_POSTINGS_SUBDIR}") is None:
-            # Queries arriving before the first index_append: commit
-            # the batch with no results instead of wedging the stream
-            # on a missing artifact (documented freshness semantics —
-            # these queries are NOT retried once the index appears).
-            warnings.warn(
-                f"serve_bm25_queries: index artifact {index_root!r} not "
-                "initialized yet; batch served with no results"
-            )
-            return
-        dels = None
-        if pending_deletes_path is not None:
-            # Localize the overlay at plan time (see docstring): one
-            # bounded collect, then the batch plan carries the ids as
-            # in-memory rows — no executor-side read of a path a purge
-            # loop may be rewriting underneath us.
-            try:
-                overlay = spark.read.option(
-                    "ignoreMissingFiles", "true"
-                ).parquet(pending_deletes_path)
-                rows = overlay.collect()
-                if rows:
-                    dels = spark.createDataFrame(rows, overlay.schema)
-            except AnalysisException:
-                dels = None  # path absent/cleared: nothing pending
-            except Exception as exc:  # mid-rewrite torn state
-                warnings.warn(
-                    "serve_bm25_queries: pending-deletes overlay at "
-                    f"{pending_deletes_path!r} unreadable this batch "
-                    f"({type(exc).__name__}); serving without it "
-                    "(bounded staleness — rewrite the overlay "
-                    "atomically via temp dir + rename)"
-                )
-                dels = None
-        if len(terms) > max_pruned_terms:
-            post, stats = read_index_artifact(
-                spark, index_root, pending_deletes=dels, id_col=id_col
-            )
-        else:
-            post, stats = load_postings_artifact(
-                spark, index_root, terms, pending_deletes=dels,
-                id_col=id_col,
-            )
+        _, post, stats = got
         out = bm25_topk_batch(
             post, df, k=k, k1=k1, b=b, idf=idf, id_col=id_col,
             q_id_col=q_id_col, terms_col=terms_col, stats=stats, scale=scale,
@@ -1418,13 +1407,7 @@ def serve_bm25_queries(
             .parquet(output_path)
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_loop(stream, _batch, checkpoint)
 
 
 def serve_search_queries(
@@ -1454,7 +1437,6 @@ def serve_search_queries(
     fusion: str = "rrf",
     fusion_weights: tuple[float, float] = (1.0, 1.0),
     fused_span_scope: str = "all",
-    available_now: bool = True,
     _pre_batch_hook=None,
 ):
     """Mixed-mode search serving (r15 verdict #5): one query stream,
@@ -1571,17 +1553,12 @@ def serve_search_queries(
     ``output_path/epoch=<id>/``.  Returns the started StreamingQuery."""
     import warnings
 
-    from pyspark.errors import AnalysisException
     from pyspark.sql import Window
 
-    from ..operators.manifest import manifest_resolve
     from ..operators.retrieval import (
-        _POSTINGS_SUBDIR,
         bm25_topk_batch,
-        load_postings_artifact,
         min_span_batch,
         positional_search_batch,
-        read_index_artifact,
         rrf_fuse_batch,
         score_fuse_batch,
     )
@@ -1730,62 +1707,21 @@ def serve_search_queries(
                     )
                     .drop("_cterms")
                 )
-        term_rows = (
-            df.select(F.explode(terms_col).alias("t"))
-            .where(F.col("t").isNotNull() & (F.col("t") != ""))
-            .distinct()
-            .limit(int(max_pruned_terms) + 1)
-            .collect()
+        got = _batch_postings(
+            spark, df, "serve_search_queries", index_root, terms_col,
+            id_col, max_pruned_terms, pending_deletes_path,
         )
-        terms = sorted(r["t"] for r in term_rows)
+        if got is None:
+            return
+        terms, post, stats = got
         # a batch can legitimately carry no terms at all — e.g. pure
         # vector-only hybrid rows — and must still serve its dense
         # arm: the postings artifact is only needed by the lexical and
-        # positional scorers (pre-r18 the empty term pool returned
-        # early and silently dropped the batch)
+        # positional scorers
         dense_only = not terms
-        post = stats = None
-        if dense_only:
-            if ann_codes_root is None:
-                return
-        else:
-            if manifest_resolve(
-                spark, f"{index_root}/{_POSTINGS_SUBDIR}"
-            ) is None:
-                warnings.warn(
-                    f"serve_search_queries: index artifact "
-                    f"{index_root!r} not initialized yet; batch served "
-                    "with no results"
-                )
-                return
-            dels = None
-            if pending_deletes_path is not None:
-                try:
-                    overlay = spark.read.option(
-                        "ignoreMissingFiles", "true"
-                    ).parquet(pending_deletes_path)
-                    rows = overlay.collect()
-                    if rows:
-                        dels = spark.createDataFrame(rows, overlay.schema)
-                except AnalysisException:
-                    dels = None
-                except Exception as exc:
-                    warnings.warn(
-                        "serve_search_queries: pending-deletes overlay "
-                        f"at {pending_deletes_path!r} unreadable this "
-                        f"batch ({type(exc).__name__}); serving without "
-                        "it"
-                    )
-                    dels = None
-            if len(terms) > max_pruned_terms:
-                post, stats = read_index_artifact(
-                    spark, index_root, pending_deletes=dels, id_col=id_col
-                )
-            else:
-                post, stats = load_postings_artifact(
-                    spark, index_root, terms, pending_deletes=dels,
-                    id_col=id_col,
-                )
+        if dense_only and ann_codes_root is None:
+            return
+        if post is not None:
             # one pruned postings load serves EVERY arm of the union
             # write below — without the persist each arm's subtree
             # re-scans the artifact (measured: mixed-batch p50 ~4x the
@@ -2090,13 +2026,7 @@ def serve_search_queries(
             .parquet(output_path)
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_loop(stream, _batch, checkpoint)
 
 
 def lm_gate_stream(
@@ -2112,7 +2042,6 @@ def lm_gate_stream(
     scale: int = 10**6,
     group_cols: list[str] | None = None,
     salt: int | None = None,
-    available_now: bool = True,
 ):
     """Streaming LM quality gate: score each ingested document against
     a FROZEN n-gram model (``text.ngram_lm_train`` /
@@ -2177,13 +2106,7 @@ def lm_gate_stream(
         finally:
             joined.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
+    query = _start_loop(stream, _batch, checkpoint)
 
     from pyspark.sql.streaming import StreamingQueryListener
 
@@ -2208,7 +2131,7 @@ def lm_gate_stream(
 
     listener = _Release()
     spark.streams.addListener(listener)
-    # the listener registers AFTER writer.start(): a fast availableNow
+    # the listener registers AFTER the query starts: a fast availableNow
     # query can have already terminated, in which case its
     # QueryTerminatedEvent was delivered before we subscribed and the
     # persisted model would leak — the exact leak this listener exists

@@ -246,6 +246,40 @@ def test_multi_acquisition_pipeline(spark, tmp_path):
             np.testing.assert_allclose(got[c], exp[c], rtol=1e-12)
 
 
+def test_same_day_acquisitions_both_survive(spark, tmp_path):
+    """Two acquisitions of one alias on one day land in the same
+    alias/year/month/day leaf: the second must not replace the first,
+    and re-processing one replaces only its own files (the reference
+    writes one <name>_<ts>.parquet per acquisition, main.py:121-131)."""
+    out = str(tmp_path / "dataset")
+    rows = {}
+    for name, start in (("early", "2025-07-11T08:00:00.000Z"),
+                        ("late", "2025-07-11T16:22:17.000Z")):
+        folder = str(tmp_path / name)
+        in_g, _ = write_acquisition(folder, start_time=start, n_seconds=3.5)
+        rows[name] = len(in_g)
+        res = acq.process_acquisition(spark, folder, out)
+        assert res["rms_written"] and res["rms_rows"] == 3
+
+    def leaf_files(table):
+        leaf = f"{out}/{table}/alias=LAF1/year=2025/month=7/day=11"
+        return sorted(os.path.basename(f) for f in glob.glob(f"{leaf}/*.parquet"))
+
+    def counts():
+        return (
+            spark.read.parquet(f"{out}/{SENSOR}").count(),
+            spark.read.parquet(f"{out}/{SENSOR}_rms").count(),
+        )
+
+    assert counts() == (rows["early"] + rows["late"], 6)
+    late_files = [f for f in leaf_files(SENSOR) if "_162217-" in f]
+    assert late_files
+    acq.process_acquisition(spark, str(tmp_path / "early"), out)
+    assert counts() == (rows["early"] + rows["late"], 6)
+    assert [f for f in leaf_files(SENSOR) if "_162217-" in f] == late_files
+    assert not glob.glob(f"{out}/*/_stage_*")
+
+
 def test_incomplete_acquisition_soft_skips(spark, tmp_path):
     write_acquisition(str(tmp_path / "F"), incomplete=True)
     assert acq.load_acquisition(spark, str(tmp_path / "F")) is None

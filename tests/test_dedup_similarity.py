@@ -1380,7 +1380,7 @@ def test_ivf_compact_folds_epochs(spark, tmp_path):
 
     out = S.ivf_compact(spark, idx, shard_lists=1)
     assert {k: v for k, v in out.items() if k != "manifest"} == {
-        "version": 2, "epochs_folded": 2, "rows": n, "migrated": False,
+        "version": 2, "epochs_folded": 2, "rows": n,
     }
 
     loaded2, c3 = S.ivf_load(spark, idx)

@@ -2,11 +2,11 @@
 
 Unit tests: manifest resolution (incl. torn newest file), epoch
 round-trip, folded-epoch replay filtering, deferred GC /
-``keep_versions`` clamping, legacy migration, pinned-snapshot reads
-across a compaction.  Integration test: a maintenance stream keeps
-appending WHILE ``compact_artifact`` runs (injected through the
-``_pre_commit_hook`` seam) and then resumes on its EXISTING
-checkpoint — nothing lost, nothing doubled.
+``keep_versions`` clamping, the rebuild error for a root without a
+manifest, pinned-snapshot reads across a compaction.  Integration
+test: a maintenance stream keeps appending WHILE ``compact_artifact``
+runs (injected through the ``_pre_commit_hook`` seam) and then resumes
+on its EXISTING checkpoint — nothing lost, nothing doubled.
 """
 import glob
 import os
@@ -48,7 +48,7 @@ def test_epoch_roundtrip_compact_and_versioning(spark, tmp_path):
 
     out = M.compact_artifact(spark, root, _fold_distinct)
     assert {k: v for k, v in out.items() if k != "manifest"} == {
-        "version": 1, "epochs_folded": 2, "rows": 8, "migrated": False}
+        "version": 1, "epochs_folded": 2, "rows": 8}
     # the committed manifest rides along (the align_manifest handle)
     assert out["manifest"]["version"] == 1
     assert out["manifest"]["folded_epochs"] == [0, 1]
@@ -151,30 +151,34 @@ def test_gc_defers_epoch_delete_and_keeps_base_versions(spark, tmp_path):
     assert _ids(M.read_artifact(spark, root)) == list(range(8))
 
 
-def test_legacy_artifact_reads_asis_and_migrates_once(spark, tmp_path):
-    """A pre-manifest directory (flat epoch partitions) reads
-    unchanged through read_artifact, and its first compact_artifact
-    migrates it to the versioned layout in place."""
-    root = str(tmp_path / "legacy")
-    for epoch, ids in ((-1, range(0, 5)), (0, range(5, 9))):
-        (
-            _rows(spark, ids).withColumn("epoch", F.lit(epoch))
-            .write.mode("append").partitionBy("epoch").parquet(root)
-        )
-    assert M.manifest_resolve(spark, root) is None
-    assert _ids(M.read_artifact(spark, root)) == list(range(9))
+def test_root_without_manifest_raises_rebuild_error(spark, tmp_path):
+    """The manifest layout is the only artifact layout: a plain parquet
+    directory (no ``_manifests/``) is refused by every reader and the
+    compaction with a rebuild ValueError instead of being read as-is,
+    and write_epoch refuses it with the same message."""
+    from gcf_corima_parquet_converter_spark.operators import dedup as D
+    from gcf_corima_parquet_converter_spark.operators import membership as B
+    from gcf_corima_parquet_converter_spark.operators import sketches as K
 
-    out = M.compact_artifact(spark, root, _fold_distinct)
-    assert out["migrated"] is True and out["version"] == 1
-    assert out["rows"] == 9
-    m = M.manifest_resolve(spark, root)
-    assert m is not None and m["version"] == 1
-    assert _ids(M.read_artifact(spark, root)) == list(range(9))
-    # second compaction takes the normal manifest path
-    M.write_epoch(_rows(spark, range(9, 11)), root, 0)
-    out2 = M.compact_artifact(spark, root, _fold_distinct)
-    assert out2["migrated"] is False and out2["version"] == 2
-    assert _ids(M.read_artifact(spark, root)) == list(range(11))
+    root = str(tmp_path / "plain")
+    (
+        _rows(spark, range(0, 5)).withColumn("epoch", F.lit(0))
+        .write.partitionBy("epoch").parquet(root)
+    )
+    assert M.manifest_resolve(spark, root) is None
+    for call in (
+        lambda: M.read_artifact(spark, root),
+        lambda: M.compact_artifact(spark, root, _fold_distinct),
+        lambda: D.load_dedup_index(spark, root),
+        lambda: K.load_sketch_shards(spark, root),
+        lambda: B.bloom_artifact_load(spark, root),
+        lambda: M.write_epoch(_rows(spark, [9]), root, 1),
+    ):
+        with pytest.raises(ValueError, match="rebuild"):
+            call()
+    # nothing was written or moved: the directory is as it was
+    assert M.manifest_resolve(spark, root) is None
+    assert _ids(spark.read.parquet(root)) == list(range(5))
 
 
 def test_concurrent_append_during_compact_unit(spark, tmp_path):

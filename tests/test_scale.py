@@ -417,36 +417,6 @@ def test_plan_audit_readme_worked_example(spark):
     assert got == want and len(want) > 0
 
 
-def test_atomic_swap_dir_rolls_back_on_failed_swap(spark, tmp_path):
-    """atomic_swap_dir: a missing rewrite directory must FAIL the swap
-    and restore the live tree untouched (the rollback every compaction
-    job relies on); a good swap replaces the tree and leaves no
-    .compact.* residue."""
-    import glob
-    import os
-
-    from gcf_corima_parquet_converter_spark.operators import scale as SC
-
-    live = str(tmp_path / "artifact")
-    spark.range(10).write.parquet(live)
-    before = sorted(r[0] for r in spark.read.parquet(live).collect())
-
-    with pytest.raises(IOError):
-        SC.atomic_swap_dir(spark, live, str(tmp_path / "missing_tmp"))
-    assert os.path.isdir(live)
-    assert sorted(r[0] for r in spark.read.parquet(live).collect()) == before
-    assert not glob.glob(str(tmp_path) + "/*.compact.*")
-
-    tmp = str(tmp_path / "rewrite")
-    spark.range(100, 105).write.parquet(tmp)
-    SC.atomic_swap_dir(spark, live, tmp)
-    assert sorted(r[0] for r in spark.read.parquet(live).collect()) == [
-        100, 101, 102, 103, 104,
-    ]
-    assert not os.path.exists(tmp)
-    assert not glob.glob(str(tmp_path) + "/*.compact.*")
-
-
 def test_sized_write_caps_file_sizes_without_killing_parallelism(
     spark, tmp_path
 ):
@@ -508,31 +478,6 @@ def test_aggregate_spills_and_stays_exact():
     assert out["sum_c"] == n
     assert out["sum_v"] == n * (n - 1) / 2  # sum of 0..n-1, exact
     assert out["spilled_bytes"] > 0, out  # the spill path really ran
-
-
-def test_atomic_swap_dir_recovers_crash_between_renames(spark, tmp_path):
-    """A swap that died between its two renames (live moved aside, tmp
-    never moved in) leaves no live dir and the data at .compact.old;
-    the retried swap must restore-then-swap instead of failing on the
-    missing live path — the crash window costs a retry, never data."""
-    import glob
-    import os
-
-    from gcf_corima_parquet_converter_spark.operators import scale as SC
-
-    live = str(tmp_path / "artifact")
-    spark.range(10).write.parquet(live)
-    # simulate the mid-swap crash state
-    os.rename(live, live + ".compact.old")
-    assert not os.path.exists(live)
-
-    tmp = str(tmp_path / "rewrite")
-    spark.range(100, 103).write.parquet(tmp)
-    SC.atomic_swap_dir(spark, live, tmp)
-    assert sorted(r[0] for r in spark.read.parquet(live).collect()) == [
-        100, 101, 102,
-    ]
-    assert not glob.glob(str(tmp_path) + "/*.compact.*")
 
 
 def test_plan_audit_flags_unguarded_constant_key_rank_window(spark):

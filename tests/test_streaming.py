@@ -1340,23 +1340,28 @@ def test_compact_dedup_indexes_same_answers_fewer_files(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows, sch)
     dig_p, band_p = str(tmp_path / "digidx"), str(tmp_path / "bandidx")
-    # simulate a chatty maintenance loop: 4 appends, two of them replays
-    for batch in (rows[:10], rows[10:], rows[:10], rows[10:]):
+
+    from gcf_corima_parquet_converter_spark.operators import manifest as M
+
+    # simulate a chatty maintenance loop: 4 appends exactly as
+    # maintain_dedup_indexes lands them, two of them re-deliveries
+    for epoch, batch in enumerate((rows[:10], rows[10:], rows[:10], rows[10:])):
         b = spark.createDataFrame(batch, sch).repartition(4)
-        D.exact_dedup_incremental(b, ["text"], "doc_id").select(
-            "digest"
-        ).write.mode("append").parquet(dig_p)
-        D.minhash_index(b, "doc_id", "text").write.mode("append").parquet(
-            band_p
+        M.write_epoch(
+            D.exact_dedup_incremental(b, ["text"], "doc_id").select("digest"),
+            dig_p, epoch, append=True,
         )
-    assert spark.read.parquet(dig_p).count() == 40  # duplicated appends
+        M.write_epoch(
+            D.minhash_index(b, "doc_id", "text"), band_p, epoch, append=True
+        )
+    assert D.load_dedup_index(spark, dig_p).count() == 40  # duplicated appends
 
     out = D.compact_dedup_indexes(
         spark, dig_p, band_p, target_files=2
     )
-    # legacy flat-append dirs take the one-time migration path
     assert out["digest"]["rows"] == 20
-    assert out["digest"]["migrated"] is True
+    assert out["digest"]["version"] == 1
+    assert out["digest"]["epochs_folded"] == 4
     assert out["digest"]["files_before"] > 2
     assert out["band"]["files_before"] > 2
 
@@ -1378,23 +1383,18 @@ def test_compact_dedup_indexes_same_answers_fewer_files(spark, tmp_path):
 
     import glob
 
-    from gcf_corima_parquet_converter_spark.operators import manifest as M
     assert len(glob.glob(M.base_dir(dig_p, 1) + "/epoch=-1/*.parquet")) == 2
     assert len(glob.glob(M.base_dir(band_p, 1) + "/epoch=-1/*.parquet")) == 2
-    assert not glob.glob(dig_p + ".compact.*")
-    assert not glob.glob(dig_p + ".migrate.*")
 
-    # post-migration: a maintenance-shaped epoch append + second
-    # compact take the manifest path (no swap, version increments)
+    # a later maintenance epoch + second compact: the version increments
     M.write_epoch(
         D.exact_dedup_incremental(
             spark.createDataFrame(rows[:5], sch), ["text"], "doc_id"
         ).select("digest"),
-        dig_p, 0, append=True,
+        dig_p, 4, append=True,
     )
     assert D.load_dedup_index(spark, dig_p).count() == 25  # 5 re-appends
     out2 = D.compact_dedup_indexes(spark, dig_p, target_files=2)
-    assert out2["digest"]["migrated"] is False
     assert out2["digest"]["version"] == 2
     assert out2["digest"]["rows"] == 20  # distinct() refolds the dupes
     assert {
@@ -1476,29 +1476,31 @@ def test_compact_sketch_shards_folds_epochs_same_answers(spark, tmp_path):
         assert got == want, tier
         assert not glob.glob(path + ".compact.*")
 
-    # a legacy flat epoch=<id> artifact (pre-manifest layout) migrates
-    # on its first compaction and answers identically
-    legacy = str(tmp_path / "shards_legacy")
+    # the compacted shards answer exactly like one sketch of all rows
+    path = str(tmp_path / "shards_vs_full")
     for e, lo in enumerate((0, 100, 200)):
-        (
+        M.write_epoch(
             K.histogram_shard_sketch(
                 spark.createDataFrame(rows[lo:lo + 100], sch),
                 ["lang"], "score", lo=0.0, hi=11.0, n_bins=8,
-            )
-            .write.mode("overwrite").parquet(f"{legacy}/epoch={e}")
+            ),
+            path, e,
         )
     want = sorted(
         tuple(r) for r in K.histogram_merge(
-            spark.read.parquet(legacy).drop("epoch"), ["lang"]
+            K.histogram_shard_sketch(
+                full, ["lang"], "score", lo=0.0, hi=11.0, n_bins=8
+            ),
+            ["lang"],
         ).collect()
     )
     out = K.compact_sketch_shards(
-        spark, legacy, lambda df: K.histogram_merge(df, ["lang"])
+        spark, path, lambda df: K.histogram_merge(df, ["lang"])
     )
-    assert out["migrated"] is True and out["epochs_folded"] == 3
+    assert out["epochs_folded"] == 3
     got = sorted(
         tuple(r) for r in K.histogram_merge(
-            K.load_sketch_shards(spark, legacy), ["lang"]
+            K.load_sketch_shards(spark, path), ["lang"]
         ).collect()
     )
     assert got == want
@@ -1668,7 +1670,7 @@ def test_index_lifecycle_stream_maintain_compact_serve(spark, tmp_path):
 
     out = S.ivf_compact(spark, idx)
     assert {k: v for k, v in out.items() if k != "manifest"} == {
-        "version": 2, "epochs_folded": 2, "rows": n, "migrated": False,
+        "version": 2, "epochs_folded": 2, "rows": n,
     }
 
     qsch = "q_id long, q_vec array<double>"

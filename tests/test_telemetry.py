@@ -129,7 +129,7 @@ def test_label_samples_interval_join(spark):
 def test_hive_partitioned_write(spark, tmp_path, sensor_pdf):
     sdf = TM.attach_literals(spark.createDataFrame(sensor_pdf), alias="LAF1")
     root = str(tmp_path / "data_parquet")
-    TM.write_hive_partitioned(sdf, root)
+    TM.write_hive_partitioned(sdf, root, "LAF1_20250711_162217")
     # reference layout assertion (test-conversion.yml:97-118)
     import glob
 
@@ -153,12 +153,12 @@ def test_hive_write_preserves_other_partitions(spark, tmp_path):
             pd.DataFrame({"Time": [t0, t0 + 1], "v": [1.0, 2.0], "alias": alias})
         )
 
-    TM.write_hive_partitioned(frame("A", 1), root)
-    TM.write_hive_partitioned(frame("B", 2), root)
+    TM.write_hive_partitioned(frame("A", 1), root, "A")
+    TM.write_hive_partitioned(frame("B", 2), root, "B")
     got = spark.read.parquet(root)
     assert {r.alias for r in got.select("alias").distinct().collect()} == {"A", "B"}
     # idempotent re-write of A: same total rows, A not duplicated
-    TM.write_hive_partitioned(frame("A", 1), root)
+    TM.write_hive_partitioned(frame("A", 1), root, "A")
     assert spark.read.parquet(root).count() == 4
 
 
