@@ -1182,8 +1182,8 @@ def bench_retrieval(spark) -> dict:
     index actually pay for itself?  Over the sf1 documents corpus
     (50k docs, ~2.7M postings) the same 3-term BM25 top-10 runs (a)
     INLINE — index derived from text, re-derived per consumer (the
-    q122 composition), and (b) PERSISTED — load_postings'
-    partition-pruned scan + the one-row stats artifact.  The index
+    q122 composition), and (b) PERSISTED — load_postings_artifact's
+    partition-pruned scan + the persisted stats artifact.  The index
     builds once into .scratch/ and is reused across rounds; build time
     reported the round it happens.  Best-of-2 per path, same JVM."""
     from gcf_corima_parquet_converter_spark.operators import retrieval as R
@@ -1198,7 +1198,7 @@ def bench_retrieval(spark) -> dict:
         os.path.dirname(os.path.abspath(__file__)), ".scratch", "retrieval_idx_sf1"
     )
     build_sec = None
-    if not os.path.exists(os.path.join(root, "postings", "_SUCCESS")):
+    if not os.path.exists(os.path.join(root, "postings", "_manifests")):
         t0 = time.perf_counter()
         R.write_inverted_index(R.inverted_index(docs), root, n_buckets=64)
         build_sec = round(time.perf_counter() - t0, 3)
@@ -1216,14 +1216,14 @@ def bench_retrieval(spark) -> dict:
         lambda: R.bm25_topk(R.inverted_index(docs), terms, k=10)
     )
     def _persisted():
-        post, stats = R.load_postings(spark, root, terms)
+        post, stats = R.load_postings_artifact(spark, root, terms)
         return R.bm25_topk(post, terms, k=10, stats=stats)
 
     persisted_sec, n_pers = best(_persisted)
     assert n_inline == n_pers == 10
     phrase_sec, n_phrase = best(
         lambda: R.phrase_search(
-            R.load_postings(spark, root, ["spark", "window"])[0],
+            R.load_postings_artifact(spark, root, ["spark", "window"])[0],
             "spark window",
         )
     )
@@ -1231,7 +1231,7 @@ def bench_retrieval(spark) -> dict:
     # (slop=2 — the backward-induction window path, zero explodes)
     prox_sec, n_prox = best(
         lambda: R.proximity_search(
-            R.load_postings(spark, root, terms)[0], terms, slop=2
+            R.load_postings_artifact(spark, root, terms)[0], terms, slop=2
         )
     )
     # r16: batched positional search vs the per-query loop it
@@ -1244,7 +1244,7 @@ def bench_retrieval(spark) -> dict:
 
     pool64 = [
         r["term"]
-        for r in spark.read.parquet(os.path.join(root, "postings"))
+        for r in R.read_index_artifact(spark, root)[0]
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), "term")
@@ -1263,14 +1263,14 @@ def bench_retrieval(spark) -> dict:
     all_pos_terms = sorted({t for _, tl, _ in pos_queries for t in tl})
 
     def _loop():
-        post_l, _ = R.load_postings(spark, root, all_pos_terms)
+        post_l, _ = R.load_postings_artifact(spark, root, all_pos_terms)
         n = 0
         for _, tl, sl in pos_queries:
             n += R.proximity_search(post_l, tl, slop=sl).count()
         return n
 
     def _batched():
-        post_l, _ = R.load_postings(spark, root, all_pos_terms)
+        post_l, _ = R.load_postings_artifact(spark, root, all_pos_terms)
         qdf = spark.createDataFrame(
             pos_queries, "q_id long, terms array<string>, slop int"
         )
@@ -1288,9 +1288,7 @@ def bench_retrieval(spark) -> dict:
 
     out = {
         "corpus_docs": docs.count(),
-        "postings_rows": spark.read.parquet(
-            os.path.join(root, "postings")
-        ).count(),
+        "postings_rows": R.read_index_artifact(spark, root)[0].count(),
         "inline_bm25_sec": round(inline_sec, 3),
         "persisted_bm25_sec": round(persisted_sec, 3),
         "persisted_speedup": round(inline_sec / persisted_sec, 2),
@@ -1367,14 +1365,13 @@ def _bench_champion_zipf(spark) -> dict:
         ).parquet(docs_path)
         build["corpus_gen_sec"] = round(time.perf_counter() - t0, 3)
     docs = spark.read.parquet(docs_path)
-    if not os.path.exists(os.path.join(root, "postings", "_SUCCESS")):
+    if not os.path.exists(os.path.join(root, "postings", "_manifests")):
         t0 = time.perf_counter()
         R.write_inverted_index(R.inverted_index(docs), root, n_buckets=64)
         build["index_build_sec"] = round(time.perf_counter() - t0, 3)
-    if not os.path.exists(os.path.join(ch_root, "postings", "_SUCCESS")):
+    if not os.path.exists(os.path.join(ch_root, "postings", "_manifests")):
         t0 = time.perf_counter()
-        full = spark.read.parquet(os.path.join(root, "postings"))
-        stats_full = R.index_stats(full)
+        full, stats_full = R.read_index_artifact(spark, root)
         R.write_inverted_index(
             R.champion_lists(full, m=512, stats=stats_full),
             ch_root,
@@ -1386,7 +1383,7 @@ def _bench_champion_zipf(spark) -> dict:
     # fixed seed; derive rather than hard-code so a generator tweak
     # cannot silently detune the regime)
     tops = (
-        spark.read.parquet(os.path.join(root, "postings"))
+        R.read_index_artifact(spark, root)[0]
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
         .orderBy(F.desc("df"), "term")
@@ -1406,11 +1403,11 @@ def _bench_champion_zipf(spark) -> dict:
         return min(ts), rows
 
     def _exact():
-        post, stats = R.load_postings(spark, root, terms)
+        post, stats = R.load_postings_artifact(spark, root, terms)
         return R.bm25_topk(post, terms, k=10, stats=stats)
 
     exact_sec, exact_rows = best(_exact)
-    post_all, stats_all = R.load_postings(spark, root, terms)
+    post_all, stats_all = R.load_postings_artifact(spark, root, terms)
     n_exact_rows = post_all.count()
     exact_ids = {r["doc_id"] for r in exact_rows}
     qdf = spark.createDataFrame([(0, terms)], "q_id long, terms array<string>")
@@ -1428,8 +1425,8 @@ def _bench_champion_zipf(spark) -> dict:
             # artifact (m=512 lists re-cut to m by the same impact
             # window — a bounded frame), scores exact over the full
             # pruned postings + full stats
-            post, stats = R.load_postings(spark, root, terms)
-            ch_post, _ = R.load_postings(spark, ch_root, terms)
+            post, stats = R.load_postings_artifact(spark, root, terms)
+            ch_post, _ = R.load_postings_artifact(spark, ch_root, terms)
             ch = (
                 R.champion_lists(ch_post, m=m, stats=stats)
                 if m < 512
@@ -1441,8 +1438,8 @@ def _bench_champion_zipf(spark) -> dict:
             )
 
         champ_sec, champ_rows = best(_champ)
-        post, stats = R.load_postings(spark, root, terms)
-        ch_post, _ = R.load_postings(spark, ch_root, terms)
+        post, stats = R.load_postings_artifact(spark, root, terms)
+        ch_post, _ = R.load_postings_artifact(spark, ch_root, terms)
         ch = (
             R.champion_lists(ch_post, m=m, stats=stats)
             if m < 512
@@ -1464,9 +1461,9 @@ def _bench_champion_zipf(spark) -> dict:
     # repeated queries score from memory): with the scan amortized
     # away, what remains is exactly what champion pruning shrinks —
     # the corpus-sized (doc) aggregate + rank vs a candidate-sized one
-    post_hot, stats_hot = R.load_postings(spark, root, terms)
+    post_hot, stats_hot = R.load_postings_artifact(spark, root, terms)
     post_hot = post_hot.persist()
-    ch_hot, _ = R.load_postings(spark, ch_root, terms)
+    ch_hot, _ = R.load_postings_artifact(spark, ch_root, terms)
     ch_hot = ch_hot.persist()
     try:
         post_hot.count()
@@ -1515,7 +1512,7 @@ def _bench_champion(spark, root: str, terms: list[str]) -> dict:
     corpus-sized list)."""
     from gcf_corima_parquet_converter_spark.operators import retrieval as R
 
-    post, stats = R.load_postings(spark, root, terms)
+    post, stats = R.load_postings_artifact(spark, root, terms)
     n_exact_rows = post.count()
     t0 = time.perf_counter()
     exact = R.bm25_topk(post, terms, k=10, stats=stats).collect()
@@ -1610,9 +1607,7 @@ def _bench_bm25_serving(spark, root: str) -> dict:
     ab_root = tempfile.mkdtemp(prefix="bench_serve_ab_idx_")
     work = tempfile.mkdtemp(prefix="bench_serve_")
     try:
-        post_full = spark.read.parquet(
-            os.path.join(root, "postings")
-        ).drop("tbucket")
+        post_full, _ = R.read_index_artifact(spark, root)
         held = post_full.where(F.col("doc_id") % 997 == 0)
         R.index_append(
             post_full.where(F.col("doc_id") % 997 != 0), inc_root, 0,

@@ -1,7 +1,13 @@
 """Manifest-versioned artifact layout — object-store-atomic commits
-for the persisted artifacts that streaming maintenance loops grow and
-compaction jobs fold (IVF/IVF-PQ indexes, dedup digest/band indexes,
-sketch shards).
+for every persisted artifact that a one-shot build lands, a streaming
+maintenance loop grows, or a compaction job folds: the IVF and IVF-PQ
+assignments (``similarity.ivf_save`` / ``ivfpq_save``), the inverted
+index's postings and stats (``retrieval.write_inverted_index`` /
+``index_append``), the fuzzy vocabulary (``retrieval.write_fuzzy_vocab``),
+bloom filters (``membership.bloom_save`` / ``bloom_artifact_init``),
+the dedup digest and band indexes, and the sketch shards.  Build
+parameters (``n_buckets``, ``max_edits``, ``m_bits``/``n_hashes``,
+``residual``) live in the manifest, never in a sidecar table.
 
 Layout under an artifact root::
 
@@ -10,10 +16,11 @@ Layout under an artifact root::
     <root>/epochs/epoch=<B>/...            streaming appends (shared
                                            across versions)
 
-The manifest layout is the only artifact layout: reading or compacting
-a root without ``_manifests/`` raises ``ValueError`` asking for a
-rebuild, and :func:`write_epoch` refuses such a root unless it does not
-exist yet (then it initializes it).
+The manifest layout is the only artifact layout: a one-shot build
+lands through :func:`write_base`; reading or compacting a root without
+``_manifests/`` raises ``ValueError`` asking for a rebuild, and
+:func:`write_epoch` refuses such a root unless it does not exist yet
+(then it initializes it).
 
 Why a manifest instead of swapping a rewritten directory in by rename:
 rename on object stores (GCS/S3) is copy+delete — non-atomic AND
@@ -195,6 +202,31 @@ def init_artifact(spark: SparkSession, root: str, extra: dict | None = None) -> 
     grows from nothing.  Readers serve the epochs union until the
     first compaction writes ``base/v1``."""
     return manifest_commit(spark, root, 0, [], extra)
+
+
+def write_base(
+    df: DataFrame,
+    root: str,
+    partition_cols: tuple[str, ...] = (),
+    extra: dict | None = None,
+) -> dict:
+    """Land a one-shot build as version 1: delete ``root`` (a rebuild
+    resets every version and epoch), write ``df`` as
+    ``base/v1/epoch=-1`` partitioned by ``partition_cols`` below the
+    epoch level, then commit ``manifest-v1`` carrying ``extra`` (the
+    build parameters readers and appenders take back).  The caller
+    shapes the partitioning (e.g. ``repartition`` on the partition
+    column, one file per directory).  Returns the committed
+    manifest."""
+    spark = df.sparkSession
+    _delete(spark, root)
+    (
+        df.withColumn("epoch", F.lit(-1))
+        .write.mode("overwrite")
+        .partitionBy("epoch", *partition_cols)
+        .parquet(base_dir(root, 1))
+    )
+    return manifest_commit(spark, root, 1, [], extra)
 
 
 def list_epochs(

@@ -30,9 +30,10 @@ built from public primitives and stays whole-stage-codegen JVM:
 Build is distributed: keys explode to k (seed, position) rows, the
 positions group-reduce into words with ``bit_or`` — one narrow map +
 one aggregation over positions (≤ k·n rows of 8 bytes), never the raw
-keys to the driver.  The packed filter round-trips through parquet
-(:func:`bloom_save`/:func:`bloom_load`) like every other model-state
-artifact here (centroids, codebooks).
+keys to the driver.  The packed filter persists as one row in the
+manifest-versioned layout (:func:`bloom_save`, read back with
+:func:`bloom_artifact_load`), with its geometry pinned in the manifest
+so a saved filter can keep growing through :func:`bloom_write_epoch`.
 """
 
 from __future__ import annotations
@@ -192,8 +193,9 @@ def bloom_decontaminate(
     the verify join's left side is ~fpp of it.
 
     Pass a prebuilt ``bloom`` (from :func:`bloom_build` /
-    :func:`bloom_load`) to reuse one filter across many corpora; the
-    blocklist frame is still needed for the exact verification.
+    :func:`bloom_artifact_load`) to reuse one filter across many
+    corpora; the blocklist frame is still needed for the exact
+    verification.
 
     Semantics match ``corpus.join(blocklist, key, "left_anti")``
     exactly — including nulls (null never equals null, so null keys
@@ -372,24 +374,17 @@ def decontaminate_auto(
 
 
 def bloom_save(spark: SparkSession, bloom: dict, path: str) -> None:
-    """Persist a built filter as one parquet row (like the ANN model
-    artifacts: small state, any filesystem the session reaches)."""
-    _bloom_row_df(spark, bloom).write.mode("overwrite").parquet(path)
+    """Persist a built filter as the one base row of a bloom artifact
+    (``manifest.write_base``), its ``m_bits``/``n_hashes`` pinned in
+    the manifest so :func:`bloom_write_epoch` can grow it.  Read it
+    back with :func:`bloom_artifact_load`."""
+    from . import manifest as M
 
-
-def bloom_load(spark: SparkSession, path: str) -> dict:
-    rows = spark.read.parquet(path).collect()
-    if len(rows) != 1:
-        raise ValueError(f"bloom artifact at {path!r} must be one row")
-    r = rows[0]
-    if len(r["words"]) * 64 != r["m_bits"]:
-        raise ValueError(f"bloom artifact at {path!r} is corrupt")
-    return {
-        "m_bits": r["m_bits"],
-        "n_hashes": r["n_hashes"],
-        "n_items": r["n_items"],
-        "words": list(r["words"]),
-    }
+    M.write_base(
+        _bloom_row_df(spark, bloom), path,
+        extra={"m_bits": int(bloom["m_bits"]),
+               "n_hashes": int(bloom["n_hashes"])},
+    )
 
 
 # ------------------------------------------------ growing bloom artifact
@@ -532,6 +527,9 @@ def bloom_artifact_load(
     rows = df.select("m_bits", "n_hashes", "n_items", "words").collect()
     if not rows:
         return None
+    # a short words array would broadcast through bloom_or's bitwise OR
+    if any(len(r["words"]) * 64 != r["m_bits"] for r in rows):
+        raise ValueError(f"bloom artifact at {path!r} is corrupt")
     return bloom_or([
         {"m_bits": r["m_bits"], "n_hashes": r["n_hashes"],
          "n_items": r["n_items"], "words": r["words"]}

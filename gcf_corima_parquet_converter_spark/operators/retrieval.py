@@ -17,11 +17,12 @@ Scale posture (the 100 TB story):
   never joins a per-document side table (at 10^11 docs that join is a
   second full-corpus shuffle).
 * **The persisted index** partitions by an md5 term bucket
-  (:func:`write_inverted_index`), and :func:`load_postings` computes
-  the query terms' buckets DRIVER-SIDE (md5 is engine-portable — the
-  same kernel as ``pipeline.shuffle_shards``) so a query's scan
-  carries static ``tbucket`` partition filters: Spark reads only the
-  buckets its terms live in, never the corpus-wide index.
+  (:func:`write_inverted_index`), and :func:`load_postings_artifact`
+  computes the query terms' buckets DRIVER-SIDE (md5 is
+  engine-portable — the same kernel as ``pipeline.shuffle_shards``)
+  so a query's scan carries static ``tbucket`` partition filters:
+  Spark reads only the buckets its terms live in, never the
+  corpus-wide index.
 * **Query time touches postings, never documents**: BM25 scores are
   computed entirely from ``(term, doc, tf, dl)`` rows; the query-terms
   frame broadcasts (queries are human-sized), the only shuffle is the
@@ -61,8 +62,6 @@ __all__ = [
     "bm25_topk",
     "bm25_topk_batch",
     "write_inverted_index",
-    "read_inverted_index",
-    "load_postings",
     "index_append",
     "read_index_artifact",
     "load_postings_artifact",
@@ -211,7 +210,7 @@ def phrase_search(
     ``array_contains(positions, anchor_pos + offset)`` — the
     non-anchor positions arrays never explode, and all joins run over
     postings already filtered to the phrase's terms (partition-pruned
-    when the index is loaded via :func:`load_postings`)."""
+    when the index is loaded via :func:`load_postings_artifact`)."""
     terms = phrase.split() if isinstance(phrase, str) else list(phrase)
     if not terms:
         raise ValueError("phrase must contain at least one term")
@@ -267,7 +266,7 @@ def proximity_search(
     bounds))`` expression over the packed arrays (per-doc cost
     |pos_i| x |T_{i+1}|, term-frequency-bounded), and all joins run
     over postings already filtered to the query's terms
-    (partition-pruned under :func:`load_postings`)."""
+    (partition-pruned under :func:`load_postings_artifact`)."""
     tl = terms.split() if isinstance(terms, str) else list(terms)
     if not tl:
         raise ValueError("terms must contain at least one term")
@@ -330,7 +329,7 @@ def min_span(
     — packed arrays end to end, no explode, no UDF — after the same
     per-term ``id`` equi-joins as ``phrase_search`` (inner, so only
     docs containing every term pay anything), partition-pruned under
-    :func:`load_postings`.
+    :func:`load_postings_artifact`.
 
     Duplicate query terms are collapsed up front (order-preserving):
     MinDist is a per-DISTINCT-term covering measure (Tao & Zhai define
@@ -749,7 +748,6 @@ def _verify_fuzzy(cands: DataFrame, max_edits: int) -> DataFrame:
 
 
 _FUZZY_SUBDIR = "fuzzy_vocab"
-_FUZZY_META_SUBDIR = "fuzzy_meta"
 
 
 def write_fuzzy_vocab(
@@ -760,54 +758,41 @@ def write_fuzzy_vocab(
 ) -> dict:
     """Persist the vocabulary's deletion-variant table so fuzzy
     lookups never re-derive it: ``(variant, term, df)`` partitioned
-    by md5 VARIANT bucket (``vbucket``) — the :func:`load_postings`
-    pattern applied to the SymSpell candidate structure.  A query's
-    variants are computed driver-side, their buckets become static
-    partition filters, and the candidate join reads only those bucket
-    directories — however large the vocabulary (at web scale the
-    variant table is ~|vocab| x (len+1)^e rows; an inline
-    :func:`fuzzy_expand_terms` re-derives and scans ALL of it per
-    query batch).  A ``max_edits=2`` artifact also serves
-    ``max_edits=1`` lookups (the verify re-filters); the reverse
-    raises at load.
+    by md5 VARIANT bucket (``vbucket``) — the
+    :func:`load_postings_artifact` pattern applied to the SymSpell
+    candidate structure.  A query's variants are computed
+    driver-side, their buckets become static partition filters, and
+    the candidate join reads only those bucket directories — however
+    large the vocabulary (at web scale the variant table is ~|vocab|
+    x (len+1)^e rows; an inline :func:`fuzzy_expand_terms` re-derives
+    and scans ALL of it per query batch).  A ``max_edits=2`` artifact
+    also serves ``max_edits=1`` lookups (the verify re-filters); the
+    reverse raises at load.
 
-    Layout (r18 — manifest-versioned, the ``index_append`` /
-    ``ivf_save`` artifact contract from ``operators/manifest.py``):
-    the build lands as ``base/v1/epoch=-1/vbucket=*`` behind one
-    manifest commit; :func:`fuzzy_vocab_append` lands a new corpus
-    slice's vocabulary as a committed epoch under ``epochs/``
-    (epoch-owned overwrite: a replayed micro-batch rewrites exactly
-    itself, exactly-once); readers serve base ∪ live epochs and SUM
-    ``df`` per ``(variant, term)`` after the pruned scan (document
-    frequency is sum-mergeable over disjoint doc slices, the
-    sketch-shard semantics); :func:`fuzzy_vocab_compact` folds the
-    epochs into the next base version behind one manifest PUT —
-    pause-free, invisible to concurrent :func:`fuzzy_match_terms`
-    readers.  A full rebuild (this function) resets the artifact to
-    version 1 and clears every epoch."""
+    Layout (manifest-versioned, the ``index_append`` / ``ivf_save``
+    artifact contract from ``operators/manifest.py``): the build lands
+    as ``base/v1/epoch=-1/vbucket=*`` behind one manifest commit that
+    pins ``n_buckets``/``max_edits``; :func:`fuzzy_vocab_append` lands
+    a new corpus slice's vocabulary as a committed epoch under
+    ``epochs/`` (epoch-owned overwrite: a replayed micro-batch
+    rewrites exactly itself, exactly-once); readers serve base ∪ live
+    epochs and SUM ``df`` per ``(variant, term)`` after the pruned
+    scan (document frequency is sum-mergeable over disjoint doc
+    slices, the sketch-shard semantics); :func:`fuzzy_vocab_compact`
+    folds the epochs into the next base version behind one manifest
+    PUT — pause-free, invisible to concurrent
+    :func:`fuzzy_match_terms` readers.  A full rebuild (this
+    function) resets the artifact to version 1 and clears every
+    epoch."""
     if max_edits not in (1, 2):
         raise ValueError(f"max_edits must be 1 or 2, got {max_edits}")
-    spark = index.sparkSession
-    vroot = f"{path}/{_FUZZY_SUBDIR}"
-    M._delete(spark, vroot)  # a rebuild resets every version and epoch
-    (
-        _fuzzy_variant_rows(index, max_edits, n_buckets)
-        .withColumn("epoch", F.lit(-1))
-        .repartition("vbucket")
-        .write.mode("overwrite")
-        .partitionBy("epoch", "vbucket")
-        .parquet(M.base_dir(vroot, 1))
-    )
-    M.manifest_commit(
-        spark, vroot, 1, [],
+    M.write_base(
+        _fuzzy_variant_rows(index, max_edits, n_buckets).repartition(
+            "vbucket"
+        ),
+        f"{path}/{_FUZZY_SUBDIR}",
+        partition_cols=("vbucket",),
         extra={"n_buckets": int(n_buckets), "max_edits": int(max_edits)},
-    )
-    meta = spark.createDataFrame(
-        [(int(n_buckets), int(max_edits))],
-        "n_buckets int, max_edits int",
-    )
-    meta.coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/{_FUZZY_META_SUBDIR}"
     )
     return {"path": path, "n_buckets": n_buckets, "max_edits": max_edits}
 
@@ -858,27 +843,22 @@ def fuzzy_vocab_append(
     readers and to :func:`fuzzy_vocab_compact`.  ``epoch`` must be
     >= 0 — negative ids are reserved (``epoch=-1`` is the folded
     base, :func:`write_fuzzy_vocab`).  ``max_edits`` / ``n_buckets``
-    come from the artifact's meta — an append can never diverge from
-    the build settings.  A pre-r18 artifact (top-level ``epoch=``
-    dirs, no manifest) refuses the append with a rebuild message
-    instead of producing a mixed layout partition discovery would
-    reject at read time."""
+    come from the artifact's manifest — an append can never diverge
+    from the build settings.  A root without a manifest refuses the
+    append with the manifest layout's rebuild error instead of
+    producing a mixed layout partition discovery would reject at read
+    time."""
     if int(epoch) < 0:
         raise ValueError(
             f"epoch must be >= 0, got {epoch} (negative epochs are "
             "reserved for the write_fuzzy_vocab base)"
         )
-    spark = index_delta.sparkSession
     vroot = f"{path}/{_FUZZY_SUBDIR}"
-    if M.manifest_resolve(spark, vroot) is None:
-        raise ValueError(
-            f"no manifest-versioned fuzzy-vocab artifact at {path!r} "
-            "(missing, or a pre-r18 legacy layout); rebuild with "
-            "write_fuzzy_vocab before appending"
-        )
-    mrow = spark.read.parquet(f"{path}/{_FUZZY_META_SUBDIR}").first()
+    m = M.manifest_resolve(index_delta.sparkSession, vroot)
+    if m is None:
+        raise M._not_versioned(vroot)
     vv = _fuzzy_variant_rows(
-        index_delta, int(mrow["max_edits"]), int(mrow["n_buckets"])
+        index_delta, int(m["max_edits"]), int(m["n_buckets"])
     ).repartition("vbucket")
     M.write_epoch(vv, vroot, int(epoch), partition_cols=("vbucket",))
 
@@ -900,12 +880,6 @@ def fuzzy_vocab_compact(spark: SparkSession, path: str) -> dict:
     landing mid-fold stay live through it, and a crash before the PUT
     leaves the old version intact."""
     vroot = f"{path.rstrip('/')}/{_FUZZY_SUBDIR}"
-    if M.manifest_resolve(spark, vroot) is None:
-        raise ValueError(
-            f"no manifest-versioned fuzzy-vocab artifact at {path!r} "
-            "(missing, or a pre-r18 legacy layout); rebuild with "
-            "write_fuzzy_vocab"
-        )
 
     def fold(df: DataFrame) -> DataFrame:
         return (
@@ -939,9 +913,12 @@ def fuzzy_match_terms(
     tl = [t for t in dict.fromkeys(tl) if t]
     if not tl:
         raise ValueError("terms must contain at least one term")
-    mrow = spark.read.parquet(f"{path}/{_FUZZY_META_SUBDIR}").first()
-    built = int(mrow["max_edits"])
-    n_buckets = int(mrow["n_buckets"])
+    vroot = f"{path}/{_FUZZY_SUBDIR}"
+    m = M.manifest_resolve(spark, vroot)
+    if m is None:
+        raise M._not_versioned(vroot)
+    built = int(m["max_edits"])
+    n_buckets = int(m["n_buckets"])
     e = built if max_edits is None else int(max_edits)
     if e > built:
         raise ValueError(
@@ -956,7 +933,7 @@ def fuzzy_match_terms(
     )
     allv = sorted({v for _, v in qrows})
     vv = (
-        M.read_artifact(spark, f"{path}/{_FUZZY_SUBDIR}", drop_epoch=True)
+        M.read_artifact(spark, vroot, manifest=m, drop_epoch=True)
         .where(F.col("vbucket").isin(buckets) & F.col("variant").isin(allv))
         .withColumnRenamed("variant", "_variant")
         # merge base + live epochs: df is sum-mergeable across the
@@ -1087,8 +1064,8 @@ def bm25_topk_batch(
     :func:`inverted_index` lineage is re-derived per consumer.  Fine
     for ad-hoc corpora; at scale, build the index ONCE with
     :func:`write_inverted_index` and score over
-    :func:`load_postings` (partition-pruned scan) with the persisted
-    ``stats=`` row — then nothing is recomputed.
+    :func:`load_postings_artifact` (partition-pruned scan) with the
+    persisted ``stats=`` row — then nothing is recomputed.
 
     ``stats`` — pass a precomputed/persisted :func:`index_stats` row to
     skip re-deriving ``n_docs``/``avgdl`` from the index.  ``scale`` —
@@ -1118,13 +1095,13 @@ def bm25_topk_batch(
             # A term-pruned frame holds only the query terms' postings:
             # n_docs/avgdl derived from it would be corpus stats over a
             # sliver — every idf, hence every score and rank, silently
-            # wrong.  The pruning loaders return (postings, stats)
-            # pairs AND stamp pruned provenance into the schema
+            # wrong.  The pruning loader returns a (postings, stats)
+            # pair AND stamps pruned provenance into the schema
             # (column metadata — survives filter/select/cache, unlike
             # the r14 Python attribute); pass that stats row through.
             raise ValueError(
                 "stats=None with term-pruned postings: pass the stats "
-                "frame returned by load_postings/load_postings_artifact"
+                "frame returned by load_postings_artifact"
             )
         stats = index_stats(index, id_col)
     if dfreq is None:
@@ -1360,16 +1337,16 @@ def bm25_topk(
 
 # ----------------------------------------------------- persisted index
 
-_STATS_SUBDIR = "_index_stats"
 _POSTINGS_SUBDIR = "postings"
+_STATS_ART = "stats"
 
 
 def _term_bucket_col(n_buckets: int):
     # Engine-portable md5 routing (same kernel family as
     # pipeline.shuffle_shards): leading 32 bits of md5(term) mod
     # n_buckets — reproducible DRIVER-SIDE in _term_bucket_py, which is
-    # what lets load_postings compute static partition filters without
-    # a Spark job.
+    # what lets load_postings_artifact compute static partition filters
+    # without a Spark job.
     return F.pmod(
         F.conv(F.substring(F.md5(F.col("term")), 1, 8), 16, 10).cast("bigint"),
         F.lit(int(n_buckets)),
@@ -1416,80 +1393,39 @@ def write_inverted_index(
     n_buckets: int = 64,
     id_col: str = "doc_id",
 ) -> dict:
-    """Persist the index partitioned by md5 term bucket (`tbucket`) so
-    term lookups prune partitions, plus a one-row stats artifact
-    (``n_docs``, ``avgdl``, ``n_buckets``) scoring reads instead of
-    re-aggregating the postings."""
-    (
+    """Persist the index as version 1 of the manifest-versioned index
+    artifact that :func:`index_append` grows and :func:`index_compact`
+    folds: a one-row ``(n_docs, total_dl)`` stats artifact, then the
+    postings partitioned by md5 term bucket (``tbucket``, with
+    ``n_buckets`` pinned in the postings manifest) so term lookups
+    prune partitions — stats before postings, the :func:`index_append`
+    write order.  A rebuild resets both artifacts.  Read it back with
+    :func:`read_index_artifact` / :func:`load_postings_artifact`."""
+    M.write_base(
+        _batch_stats(index, id_col).coalesce(1), f"{path}/{_STATS_ART}"
+    )
+    M.write_base(
         index.withColumn("tbucket", _term_bucket_col(n_buckets))
-        .repartition("tbucket")
-        .write.partitionBy("tbucket")
-        .mode("overwrite")
-        .parquet(f"{path}/{_POSTINGS_SUBDIR}")
+        .repartition("tbucket"),
+        f"{path}/{_POSTINGS_SUBDIR}",
+        partition_cols=("tbucket",),
+        extra={"n_buckets": int(n_buckets)},
     )
-    stats = index_stats(index, id_col).withColumn(
-        "n_buckets", F.lit(int(n_buckets))
-    )
-    stats.coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/{_STATS_SUBDIR}"
-    )
-    row = stats.first()
+    row = M.read_artifact(index.sparkSession, f"{path}/{_STATS_ART}").first()
     return {
         "path": path,
         "n_docs": int(row["n_docs"]),
-        "avgdl": float(row["avgdl"]),
+        "avgdl": row["total_dl"] / row["n_docs"],
         "n_buckets": int(n_buckets),
     }
 
 
-def read_inverted_index(
-    spark: SparkSession, path: str
-) -> tuple[DataFrame, DataFrame]:
-    """Load a persisted index: ``(postings, stats)``.  For term-bounded
-    access (phrase/BM25 queries) prefer :func:`load_postings`, which
-    partition-prunes."""
-    return (
-        spark.read.parquet(f"{path}/{_POSTINGS_SUBDIR}"),
-        spark.read.parquet(f"{path}/{_STATS_SUBDIR}").drop("n_buckets"),
-    )
-
-
-def load_postings(
-    spark: SparkSession, path: str, terms: list[str] | str
-) -> tuple[DataFrame, DataFrame]:
-    """Postings for ``terms`` only, with STATIC partition pruning: the
-    terms' md5 buckets are computed driver-side (no Spark job) and the
-    scan filters ``tbucket IN (...) AND term IN (...)`` — Spark lists
-    and reads only those bucket directories, however many terms the
-    full index holds.
-
-    Returns ``(postings, stats)`` — the same pair as
-    :func:`load_postings_artifact` — because a PRUNED postings frame
-    must never be scored with scorer-derived stats: ``n_docs``/
-    ``avgdl`` re-derived from only the query terms' postings would be
-    silently wrong for every idf and score.  Pass the returned
-    ``stats`` straight to ``bm25_topk(..., stats=stats)`` (the scorers
-    also refuse ``stats=None`` on frames this loader marks pruned)."""
-    tl = terms.split() if isinstance(terms, str) else list(terms)
-    if not tl:
-        raise ValueError("terms must be non-empty")
-    stats_row = spark.read.parquet(f"{path}/{_STATS_SUBDIR}")
-    n_buckets = int(stats_row.first()["n_buckets"])
-    buckets = sorted({_term_bucket_py(t, n_buckets) for t in tl})
-    post = (
-        spark.read.parquet(f"{path}/{_POSTINGS_SUBDIR}")
-        .where(F.col("tbucket").isin(buckets) & F.col("term").isin(tl))
-        .drop("tbucket")
-    )
-    return _mark_pruned(post), stats_row.drop("n_buckets")
-
-
 # --------------------------------------- incremental index (epochs)
 #
-# The manifest-versioned twin of the one-shot write_inverted_index —
-# the same artifact contract as the dedup band indexes and the IVF
-# lists (operators/manifest.py): each ingested batch lands as a
-# committed epoch, readers serve base ∪ live epochs (partition-
+# write_inverted_index builds version 1 of this artifact; it follows
+# the same contract as the dedup band indexes and the IVF lists
+# (operators/manifest.py): each ingested batch lands as a committed
+# epoch, readers serve base ∪ live epochs (partition-
 # prunable on tbucket in BOTH branches), compaction folds epochs into
 # the next base version behind one manifest PUT while appends continue,
 # and purged documents die via merge-on-compact deletion with a
@@ -1500,8 +1436,6 @@ def load_postings(
 # that contract postings are set-semantics rows (union is the merge)
 # and the stats artifact is SUM-mergeable: one (n_docs, total_dl) row
 # per epoch, corpus stats = the column sums, avgdl derived at read.
-
-_STATS_ART = "stats"
 
 
 def _batch_stats(idx: DataFrame, id_col: str) -> DataFrame:
@@ -1682,8 +1616,8 @@ def load_postings_artifact(
         raise ValueError("terms must be non-empty")
     proot = f"{root}/{_POSTINGS_SUBDIR}"
     m = M.manifest_resolve(spark, proot)
-    if m is None or "n_buckets" not in m:
-        raise ValueError(f"{root!r} is not an incremental index artifact")
+    if m is None:
+        raise M._not_versioned(proot)
     m, live = _postings_snapshot(spark, proot, manifest=m)
     n_buckets = int(m["n_buckets"])
     buckets = sorted({_term_bucket_py(t, n_buckets) for t in tl})

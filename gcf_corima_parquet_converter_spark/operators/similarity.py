@@ -345,29 +345,40 @@ def ivf_save(
     single lists outgrow a comfortable task size (~hundreds of MB)."""
     from . import manifest as M
 
-    spark = emb_assigned.sparkSession
-    aroot = path.rstrip("/") + "/assignments"
-    M._delete(spark, aroot)  # a rebuild resets every version and epoch
-    (
-        emb_assigned.select(id_col, vec_col, "centroid_id")
-        .withColumn("epoch", F.lit(-1))
-        .repartition(
+    M.write_base(
+        emb_assigned.select(id_col, vec_col, "centroid_id").repartition(
             F.col("centroid_id"),
             F.pmod(F.xxhash64(F.col(id_col)), F.lit(int(shard_lists))),
-        )
-        .write.mode("overwrite")
-        .partitionBy("epoch", "centroid_id")
-        .parquet(M.base_dir(aroot, 1))
+        ),
+        path.rstrip("/") + "/assignments",
+        partition_cols=("centroid_id",),
     )
-    M.manifest_commit(spark, aroot, 1, [])
+    _save_centroids(emb_assigned.sparkSession, centroids, path)
+
+
+def _save_centroids(spark, centroids: np.ndarray, path: str) -> None:
     cents = np.asarray(centroids, dtype=np.float64)
-    cdf = spark.createDataFrame(
+    spark.createDataFrame(
         [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)],
         "centroid_id int, centroid array<double>",
-    )
-    cdf.coalesce(1).write.mode("overwrite").parquet(
+    ).coalesce(1).write.mode("overwrite").parquet(
         path.rstrip("/") + "/centroids"
     )
+
+
+def _load_centroids(spark, path: str) -> np.ndarray:
+    """The ``<path>/centroids`` table as a dense ``(n_lists, dim)``
+    array; an empty table or non-contiguous ids raise."""
+    crows = (
+        spark.read.parquet(path.rstrip("/") + "/centroids")
+        .orderBy("centroid_id")
+        .collect()
+    )
+    if not crows:
+        raise ValueError(f"no centroids found under {path!r}")
+    if [r["centroid_id"] for r in crows] != list(range(len(crows))):
+        raise ValueError(f"centroid ids under {path!r} are not contiguous")
+    return np.array([r["centroid"] for r in crows], dtype=np.float64)
 
 
 def ivf_load(spark, path: str) -> tuple[DataFrame, np.ndarray]:
@@ -383,16 +394,7 @@ def ivf_load(spark, path: str) -> tuple[DataFrame, np.ndarray]:
     column rides along and is ignored by the probes."""
     from .manifest import read_artifact
 
-    crows = (
-        spark.read.parquet(path.rstrip("/") + "/centroids")
-        .orderBy("centroid_id")
-        .collect()
-    )
-    if not crows:
-        raise ValueError(f"no centroids found under {path!r}")
-    if [r["centroid_id"] for r in crows] != list(range(len(crows))):
-        raise ValueError(f"centroid ids under {path!r} are not contiguous")
-    cents = np.array([r["centroid"] for r in crows], dtype=np.float64)
+    cents = _load_centroids(spark, path)
     assigned = read_artifact(spark, path.rstrip("/") + "/assignments")
     return assigned, cents
 
@@ -420,7 +422,8 @@ def ivf_compact(
     ``shard_lists`` files per list (exactly 1 at the default), then
     one manifest flip.  Works unchanged on IVF and IVF-PQ artifacts
     (the fold carries whatever data columns the assignments hold —
-    vectors or codes); centroids/codebooks/meta are untouched.
+    vectors or codes); centroids and codebooks are untouched, and the
+    manifest's build parameters (``residual``) carry over.
 
     Concurrency contract (inherited from ``compact_artifact``):
     readers see old-or-new, never a mix; the maintenance stream keeps
@@ -951,10 +954,11 @@ def ivfpq_save(
     (id, codes) — probes prune to the probed lists AND read only m
     code bytes per row — plus ``<path>/centroids`` and
     ``<path>/codebooks`` (one row per (subspace, code): the PQ model
-    is a few KB of parquet) and ``<path>/meta`` recording whether the
-    codes are residual-mode (searches over a residual table need the
-    per-list ADC offset; the flag travels with the artifact so a
-    loader cannot mis-score it).  Same layout contract as
+    is a few KB of parquet).  The assignments manifest records
+    ``residual`` — whether the codes are residual-mode (searches over
+    a residual table need the per-list ADC offset; the flag travels
+    with the artifact and survives every compaction, so a loader
+    cannot mis-score it).  Same layout contract as
     :func:`ivf_save`, so epoch growth
     (``streaming.ingest.maintain_ivf_index(pq=True)``) and compaction
     (:func:`ivf_compact`, one file per list via ``shard_lists``) work
@@ -962,27 +966,16 @@ def ivfpq_save(
     from . import manifest as M
 
     spark = base.sparkSession
-    aroot = path.rstrip("/") + "/assignments"
-    M._delete(spark, aroot)  # a rebuild resets every version and epoch
-    (
-        base.select(id_col, "codes", "centroid_id")
-        .withColumn("epoch", F.lit(-1))
-        .repartition(
+    M.write_base(
+        base.select(id_col, "codes", "centroid_id").repartition(
             F.col("centroid_id"),
             F.pmod(F.xxhash64(F.col(id_col)), F.lit(int(shard_lists))),
-        )
-        .write.mode("overwrite")
-        .partitionBy("epoch", "centroid_id")
-        .parquet(M.base_dir(aroot, 1))
+        ),
+        path.rstrip("/") + "/assignments",
+        partition_cols=("centroid_id",),
+        extra={"residual": bool(residual)},
     )
-    M.manifest_commit(spark, aroot, 1, [])
-    cents = np.asarray(centroids, dtype=np.float64)
-    spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)],
-        "centroid_id int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        path.rstrip("/") + "/centroids"
-    )
+    _save_centroids(spark, centroids, path)
     books = np.asarray(codebooks, dtype=np.float64)
     m, n_codes, sub = books.shape
     spark.createDataFrame(
@@ -995,9 +988,6 @@ def ivfpq_save(
     ).coalesce(1).write.mode("overwrite").parquet(
         path.rstrip("/") + "/codebooks"
     )
-    spark.createDataFrame(
-        [("residual", "true" if residual else "false")], "key string, value string"
-    ).coalesce(1).write.mode("overwrite").parquet(path.rstrip("/") + "/meta")
 
 
 def ivfpq_load(
@@ -1011,18 +1001,11 @@ def ivfpq_load(
     (folded base version ∪ live streamed epochs, replayed-epoch ids
     filtered — same contract as :func:`ivf_load`), and probes prune on
     ``centroid_id``.
-    ``with_meta=True`` appends the artifact's meta dict (currently
-    ``{"residual": bool}``; artifacts written before the meta table
-    existed load as raw-vector codes, which is what they are — only a
-    MISSING meta table falls back, any real read error propagates)."""
-    crows = (
-        spark.read.parquet(path.rstrip("/") + "/centroids")
-        .orderBy("centroid_id")
-        .collect()
-    )
-    if [r["centroid_id"] for r in crows] != list(range(len(crows))):
-        raise ValueError(f"centroid ids under {path!r} are not contiguous")
-    cents = np.array([r["centroid"] for r in crows], dtype=np.float64)
+    ``with_meta=True`` appends the artifact's meta dict
+    ``{"residual": bool}``, read from the assignments manifest; an
+    artifact whose manifest lacks it raises the rebuild error rather
+    than guessing a mode that would mis-rank every search."""
+    cents = _load_centroids(spark, path)
     brows = (
         spark.read.parquet(path.rstrip("/") + "/codebooks")
         .orderBy("subspace", "code")
@@ -1040,20 +1023,14 @@ def ivfpq_load(
         books[r["subspace"], r["code"]] = r["center"]
     from . import manifest as M
 
-    base = M.read_artifact(spark, path.rstrip("/") + "/assignments")
+    aroot = path.rstrip("/") + "/assignments"
+    m = M.manifest_resolve(spark, aroot)
+    base = M.read_artifact(spark, aroot, manifest=m)
     if not with_meta:
         return base, cents, books
-    meta = {"residual": False}
-    meta_path = path.rstrip("/") + "/meta"
-    # missing-only fallback: a pre-meta artifact holds raw-vector codes
-    # by construction, but a CORRUPT or unreadable meta must raise —
-    # silently defaulting residual=False would mis-rank every
-    # residual-mode search.
-    if M._exists(spark, meta_path):
-        for r in spark.read.parquet(meta_path).collect():
-            if r["key"] == "residual":
-                meta["residual"] = r["value"] == "true"
-    return base, cents, books, meta
+    if "residual" not in m:
+        raise M._not_versioned(aroot)
+    return base, cents, books, {"residual": bool(m["residual"])}
 
 
 def ivfpq_topk(

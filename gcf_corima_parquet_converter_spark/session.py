@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def apply_runtime_conf(spark: SparkSession) -> SparkSession:
     """Session-level confs that must hold even on an externally-built
@@ -44,5 +46,10 @@ def get_spark(app_name: str = "spark-graft", cpus: int | None = None) -> SparkSe
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        # Python workers skip the per-task re-read of every zip on their
+        # path (pyworker_daemon docstring); the package root goes on
+        # the worker path so the daemon imports from any working dir.
+        .config("spark.python.daemon.module", f"{__package__}.pyworker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     return apply_runtime_conf(builder.getOrCreate())

@@ -700,7 +700,7 @@ def maintain_fuzzy_vocab(
     and a half-written epoch is invisible to readers — the commit
     marker lands only after the data write, so a correction can never
     see a partial epoch's df.  The artifact must exist
-    (``write_fuzzy_vocab`` bootstrap — its meta pins
+    (``write_fuzzy_vocab`` bootstrap — its manifest pins
     max_edits/n_buckets; appends can never diverge).  Serving reads
     through ``fuzzy_match_terms`` re-resolve the manifest per call, so
     ``serve_search_queries``' per-batch correction sees every

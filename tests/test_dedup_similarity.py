@@ -231,6 +231,29 @@ def test_ivf_save_load_roundtrip_and_pruned_probe(spark, emb, tmp_path):
     assert m and "centroid_id" in m.group(1), plan
 
 
+def test_ivf_and_ivfpq_load_refuse_an_empty_centroid_table(spark, tmp_path):
+    """Both loaders read the centroid table through one helper, so an
+    IVF-PQ artifact with an empty centroid table raises like an IVF
+    one instead of loading a (0,) codebook every probe would miss."""
+    rng = np.random.default_rng(9)
+    pts = rng.normal(size=(12, 4))
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in pts[i]]) for i in range(12)],
+        "vec_id long, embedding array<double>",
+    )
+    cents, books = pts[:2], rng.normal(size=(2, 4, 2))
+    ivf, pq = str(tmp_path / "ivf"), str(tmp_path / "pq")
+    S.ivf_save(S.ivf_assign(emb, cents), cents, ivf)
+    S.ivfpq_save(S.ivfpq_encode(emb, cents, books), cents, books, pq)
+    empty = spark.createDataFrame(
+        [], "centroid_id int, centroid array<double>"
+    )
+    for path, load in ((ivf, S.ivf_load), (pq, S.ivfpq_load)):
+        empty.write.mode("overwrite").parquet(path + "/centroids")
+        with pytest.raises(ValueError, match="no centroids found"):
+            load(spark, path)
+
+
 def test_kmeans_refine_scans_input_lineage_once(spark):
     """kmeans_refine must persist its (id, vector) projection: the
     upstream lineage is evaluated once, not once per Lloyd iteration.

@@ -176,9 +176,84 @@ def test_root_without_manifest_raises_rebuild_error(spark, tmp_path):
     ):
         with pytest.raises(ValueError, match="rebuild"):
             call()
+    # the index and fuzzy-vocab readers and appenders word it the same
+    # way for a root without ``_manifests/`` (here: nothing at all)
+    from gcf_corima_parquet_converter_spark.operators import retrieval as R
+
+    gone = str(tmp_path / "gone")
+    idx = R.inverted_index(
+        spark.createDataFrame([(1, "spark")], "doc_id long, text string")
+    )
+    for call in (
+        lambda: R.load_postings_artifact(spark, gone, ["spark"]),
+        lambda: R.read_index_artifact(spark, gone),
+        lambda: R.fuzzy_match_terms(spark, gone, ["spark"]),
+        lambda: R.fuzzy_vocab_append(idx, gone, epoch=0),
+    ):
+        with pytest.raises(ValueError, match="no manifest-versioned artifact"):
+            call()
     # nothing was written or moved: the directory is as it was
     assert M.manifest_resolve(spark, root) is None
     assert _ids(spark.read.parquet(root)) == list(range(5))
+
+
+def test_one_shot_builds_write_manifest_roots(spark, tmp_path):
+    """Every one-shot build lands through ``write_base``: each artifact
+    root resolves a version-1 manifest whose extra fields carry the
+    build parameters, and no sidecar table sits next to it."""
+    import numpy as np
+
+    from gcf_corima_parquet_converter_spark.operators import membership as B
+    from gcf_corima_parquet_converter_spark.operators import retrieval as R
+    from gcf_corima_parquet_converter_spark.operators import similarity as S
+
+    docs = spark.createDataFrame(
+        [(1, "spark window merge"), (2, "spark stream join")],
+        "doc_id long, text string",
+    )
+    idx = R.inverted_index(docs)
+    lex, fz = str(tmp_path / "lex"), str(tmp_path / "fz")
+    bloom_p = str(tmp_path / "bloom")
+    ivf, pq = str(tmp_path / "ivf"), str(tmp_path / "pq")
+    R.write_inverted_index(idx, lex, n_buckets=8)
+    B.bloom_save(
+        spark, B.bloom_build(docs, "text", m_bits=128, n_hashes=3), bloom_p
+    )
+    R.write_fuzzy_vocab(idx, fz, max_edits=2, n_buckets=4)
+    rng = np.random.default_rng(5)
+    pts = rng.normal(size=(24, 4))
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in pts[i]]) for i in range(24)],
+        "vec_id long, embedding array<double>",
+    )
+    cents = pts[:2]
+    S.ivf_save(S.ivf_assign(emb, cents), cents, ivf)
+    books = rng.normal(size=(2, 4, 2))
+    S.ivfpq_save(
+        S.ivfpq_encode(emb, cents, books, residual=True), cents, books, pq,
+        residual=True,
+    )
+
+    def extra(root):
+        m = M.manifest_resolve(spark, root)
+        assert m is not None and m["version"] == 1, root
+        assert m["folded_epochs"] == [] and glob.glob(
+            M.base_dir(root, 1) + "/epoch=-1"
+        ), root
+        return {
+            k: v for k, v in m.items()
+            if k not in ("version", "folded_epochs", "folded_watermark")
+        }
+
+    assert extra(lex + "/postings") == {"n_buckets": 8}
+    assert extra(lex + "/stats") == {}
+    assert extra(bloom_p) == {"m_bits": 128, "n_hashes": 3}
+    assert extra(fz + "/fuzzy_vocab") == {"n_buckets": 4, "max_edits": 2}
+    assert extra(ivf + "/assignments") == {}
+    assert extra(pq + "/assignments") == {"residual": True}
+    for side in ("_index_stats", "fuzzy_meta", "meta"):
+        for root in (lex, fz, ivf, pq):
+            assert not os.path.exists(os.path.join(root, side)), (root, side)
 
 
 def test_concurrent_append_during_compact_unit(spark, tmp_path):

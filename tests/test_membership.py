@@ -79,7 +79,7 @@ def test_bloom_decontaminate_exact_and_reusable(spark, tmp_path):
     )
     p = str(tmp_path / "bloom")
     B.bloom_save(spark, bloom, p)
-    loaded = B.bloom_load(spark, p)
+    loaded = B.bloom_artifact_load(spark, p)
     assert loaded == bloom
     out2 = B.bloom_decontaminate(
         corpus, block, "k", block_col="bk", bloom=loaded
@@ -174,6 +174,30 @@ def test_bloom_or_merge_and_artifact_geometry(spark, tmp_path):
     q = str(tmp_path / "empty")
     B.bloom_artifact_init(spark, q, expected_items=10)
     assert B.bloom_artifact_load(spark, q) is None
+
+
+def test_bloom_artifact_load_refuses_corrupt_row(spark, tmp_path):
+    """A stored row whose words array does not cover ``m_bits`` raises
+    at load — OR-merging it would broadcast its one word into every
+    word of the filter and turn misses into hits."""
+    from gcf_corima_parquet_converter_spark.operators import (
+        manifest as M,
+    )
+
+    bloom = B.bloom_build(
+        spark.createDataFrame([("x1",), ("x2",)], "k string"), "k",
+        m_bits=256, n_hashes=3,
+    )
+    p = str(tmp_path / "bloom")
+    B.bloom_save(spark, bloom, p)
+    assert B.bloom_artifact_load(spark, p) == bloom
+    short = spark.createDataFrame(
+        [(256, 3, 1, [-1])],
+        "m_bits long, n_hashes int, n_items long, words array<long>",
+    )
+    M.write_epoch(short, p, 0)
+    with pytest.raises(ValueError, match="corrupt"):
+        B.bloom_artifact_load(spark, p)
 
 
 # ------------------------------------------------ path auto-selection

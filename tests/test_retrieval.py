@@ -199,11 +199,13 @@ def test_persisted_index_prunes_partitions_and_matches(spark, idx):
     try:
         info = R.write_inverted_index(idx, d, n_buckets=16)
         assert info["n_docs"] == R.index_stats(idx).first()["n_docs"]
-        post, stats = R.read_inverted_index(spark, d)
+        post, stats = R.read_index_artifact(spark, d)
         assert post.count() == idx.count()
         # term-bounded load: static tbucket partition filters + term
         # pushdown reach the scan
-        pruned, pruned_stats = R.load_postings(spark, d, ["quick", "dog"])
+        pruned, pruned_stats = R.load_postings_artifact(
+            spark, d, ["quick", "dog"]
+        )
         assert [tuple(r) for r in pruned_stats.collect()] == [
             tuple(r) for r in stats.collect()
         ]
@@ -246,7 +248,7 @@ def test_persisted_index_prunes_partitions_and_matches(spark, idx):
             t: R._term_bucket_py(t, 16) for t in spark_b
         }
         with pytest.raises(ValueError, match="non-empty"):
-            R.load_postings(spark, d, [])
+            R.load_postings_artifact(spark, d, [])
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -828,7 +830,7 @@ def test_inverted_index_analyzers_and_query_twin(spark):
     dpath = tempfile.mkdtemp()
     try:
         R.write_inverted_index(simp, dpath, n_buckets=8)
-        post, stats = R.load_postings(
+        post, stats = R.load_postings_artifact(
             spark, dpath, R.analyze_terms(["SPARK!", "Café,"], "simple")
         )
         assert {(r["term"], r["doc_id"]) for r in post.collect()} == {
@@ -943,7 +945,7 @@ def test_pruned_marker_is_structural(spark, idx):
     d = tempfile.mkdtemp()
     try:
         R.write_inverted_index(idx, d, n_buckets=8)
-        pruned, stats = R.load_postings(spark, d, ["quick", "dog"])
+        pruned, stats = R.load_postings_artifact(spark, d, ["quick", "dog"])
         assert not hasattr(pruned, "_gcfspark_pruned")  # attribute gone
         transformed = [
             pruned.where(F.col("dl") > 0),
@@ -962,7 +964,7 @@ def test_pruned_marker_is_structural(spark, idx):
             > 0
         )
         # a full (unpruned) index is unmarked: stats=None stays allowed
-        full = spark.read.parquet(f"{d}/postings").drop("tbucket")
+        full, _ = R.read_index_artifact(spark, d)
         assert R.bm25_topk(full, ["quick"], k=3).count() > 0
     finally:
         shutil.rmtree(d, ignore_errors=True)
@@ -1114,7 +1116,7 @@ def test_proximity_over_persisted_pruned_index_matches_inline(spark, idx):
     d = tempfile.mkdtemp()
     try:
         R.write_inverted_index(idx, d, n_buckets=16)
-        pruned, _ = R.load_postings(spark, d, ["quick", "fox"])
+        pruned, _ = R.load_postings_artifact(spark, d, ["quick", "fox"])
         a = sorted(
             map(tuple, R.proximity_search(idx, "quick fox", slop=1).collect())
         )
@@ -1660,7 +1662,7 @@ def test_fuzzy_vocab_artifact_prunes_and_matches_inline(spark):
     """The persisted fuzzy-vocab artifact (write_fuzzy_vocab /
     fuzzy_match_terms) answers identically to the inline operator,
     with STATIC vbucket partition filters + variant pushdown reaching
-    the scan — the load_postings pattern applied to the SymSpell
+    the scan — the load_postings_artifact pattern applied to the SymSpell
     candidate table.  A max_edits=2 artifact serves e=1 lookups; the
     reverse raises."""
     import random

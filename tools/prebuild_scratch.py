@@ -46,7 +46,7 @@ def main() -> None:
 
     docs = spark.read.parquet(os.path.join(sf1_dir, "documents.parquet"))
     root = os.path.join(SCRATCH, "retrieval_idx_sf1")
-    if not os.path.exists(os.path.join(root, "postings", "_SUCCESS")):
+    if not os.path.exists(os.path.join(root, "postings", "_manifests")):
         t0 = time.perf_counter()
         R.write_inverted_index(R.inverted_index(docs), root, n_buckets=64)
         print(f"retrieval_idx_sf1 ({time.perf_counter() - t0:.0f}s)", flush=True)
@@ -215,15 +215,14 @@ def main() -> None:
         print(f"champion_zipf docs ({time.perf_counter() - t0:.0f}s)",
               flush=True)
     zdocs = spark.read.parquet(docs_path)
-    if not os.path.exists(os.path.join(zroot, "postings", "_SUCCESS")):
+    if not os.path.exists(os.path.join(zroot, "postings", "_manifests")):
         t0 = time.perf_counter()
         R.write_inverted_index(R.inverted_index(zdocs), zroot, n_buckets=64)
         print(f"champion_zipf idx ({time.perf_counter() - t0:.0f}s)",
               flush=True)
-    if not os.path.exists(os.path.join(ch_root, "postings", "_SUCCESS")):
+    if not os.path.exists(os.path.join(ch_root, "postings", "_manifests")):
         t0 = time.perf_counter()
-        full = spark.read.parquet(os.path.join(zroot, "postings"))
-        stats_full = R.index_stats(full)
+        full, stats_full = R.read_index_artifact(spark, zroot)
         R.write_inverted_index(
             R.champion_lists(full, m=512, stats=stats_full),
             ch_root,
