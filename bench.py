@@ -1795,12 +1795,14 @@ def _bench_mixed_serving(spark, inc_root: str, work: str, pool) -> dict:
         cents = S.train_centroids_sample(emb, n_centroids=32)
         S.ivf_save(S.ivf_assign(emb, cents), cents, hyb_root)
     # covers the mixed batches AND the per-mode floor batches (qid
-    # keeps counting up through the floor loop)
+    # keeps counting up through the floor loop); vec_ids are 0..n-1,
+    # so the modulus is the corpus's embedding count at any scale
+    n_emb = emb.count()
     qvecs = {
         r["vec_id"]: r["embedding"]
         for r in emb.where(
             F.col("vec_id").isin(
-                *{(q * 37) % 20_000 for q in range(10_000, 10_200)}
+                *{(q * 37) % n_emb for q in range(10_000, 10_200)}
             )
         ).collect()
     }
@@ -1826,7 +1828,7 @@ def _bench_mixed_serving(spark, inc_root: str, work: str, pool) -> dict:
             rows.append((
                 qid, mode, terms,
                 2 if mode == "proximity" else None,
-                qvecs[(qid * 37) % 20_000] if mode == "hybrid" else None,
+                qvecs[(qid * 37) % n_emb] if mode == "hybrid" else None,
             ))
             qid += 1
         stage = os.path.join(work, f"mixed_stage{bch}")
@@ -1900,7 +1902,7 @@ def _bench_mixed_serving(spark, inc_root: str, work: str, pool) -> dict:
             rows.append((
                 qid, mode, terms,
                 2 if mode == "proximity" else None,
-                qvecs[(qid * 37) % 20_000] if mode == "hybrid" else None,
+                qvecs[(qid * 37) % n_emb] if mode == "hybrid" else None,
             ))
             qid += 1
         msrc = os.path.join(work, f"floor_src_{mode}")

@@ -470,7 +470,7 @@ def semantic_contaminated_ids(
 
     Exposed for pipelines that apply the semantic drop to a DIFFERENT
     frame carrying the same ids (q111: the span-stripped survivors) —
-    anti-joining one broadcast id set evaluates the survivor subtree
+    anti-joining one id set evaluates the survivor subtree
     ONCE, where the split-join-union shape (with-embedding half
     through :func:`semantic_decontaminate`, no-embedding half anti-
     joined, union) would inline and recompute it per branch.  Flagged

@@ -33,6 +33,11 @@ Scale posture (the 100 TB story):
   already-term-filtered postings with a JVM ``array_contains``
   adjacency predicate on the positions arrays — no position explode
   for the non-anchor terms, no regex over text.
+* **A single query is a batch of one**: :func:`bm25_topk`,
+  :func:`proximity_search` and :func:`min_span` are one-row calls of
+  their batch operators, so each has one implementation.
+  :func:`phrase_search` and :func:`rrf_fuse` keep their own plans,
+  which are cheaper for one query (their docstrings say why).
 
 Float parity (the repo's graded-oracle contract, queries.py module
 docstring): BM25's standard Robertson idf is ``ln``-based and libm
@@ -196,6 +201,22 @@ def index_stats(index: DataFrame, id_col: str = "doc_id") -> DataFrame:
 # ------------------------------------------------------------- phrase
 
 
+def _one_query(spark: SparkSession, terms: list[str]) -> DataFrame:
+    """The one-row ``(q_id, terms)`` frame a single-query operator
+    hands its batch operator — a single query is a batch of one.
+    ``spark.range`` plus literal terms plans as a ``Range`` scan: no
+    Python-built row, no Python task.  ``q_id`` is the range's ``id``
+    column, never a literal: a literal key is constant-folded out of
+    the batch operator's per-query window, which then loses its
+    ``hashpartitioning(q_id)`` exchange and ranks in one partition."""
+    return spark.range(0, 1, 1, 1).select(
+        F.col("id").alias("q_id"),
+        F.array(*[F.lit(t) for t in terms])
+        .cast("array<string>")
+        .alias("terms"),
+    )
+
+
 def phrase_search(
     index: DataFrame,
     phrase: str | list[str],
@@ -210,7 +231,13 @@ def phrase_search(
     ``array_contains(positions, anchor_pos + offset)`` — the
     non-anchor positions arrays never explode, and all joins run over
     postings already filtered to the phrase's terms (partition-pruned
-    when the index is loaded via :func:`load_postings_artifact`)."""
+    when the index is loaded via :func:`load_postings_artifact`).
+
+    Not a one-row :func:`positional_search_batch` call, unlike
+    :func:`proximity_search`: for adjacency this chain is cheaper per
+    query — a batch of one pays for its query-frame broadcast, the
+    ``(q_id, doc)`` regroup and more driver-side plan building, which
+    one query does not amortize."""
     terms = phrase.split() if isinstance(phrase, str) else list(phrase)
     if not terms:
         raise ValueError("phrase must contain at least one term")
@@ -252,54 +279,23 @@ def proximity_search(
     C@5 at slop=1): an occurrence of the FIRST term at position ``p``
     is one match iff SOME ordered chain ``p < p_2 < ... < p_k``
     exists with every consecutive gap ``p_i - p_{i-1}`` in
-    ``[1, slop + 1]``.  Computed by backward induction over the
-    positions arrays: ``T_k`` = last term's positions, ``T_i`` =
-    positions of term ``i`` with a ``T_{i+1}`` continuation in
-    bounds, matches = ``T_1``.
+    ``[1, slop + 1]``.
 
-    Returns ``(id, n_matches, first_pos)`` — the same shape as
-    ``phrase_search``, so :func:`snippets` hydrates either.
+    Returns ``(id, n_matches, first_pos)``, the shape
+    :func:`snippets` hydrates.
 
-    Plan: NO explode anywhere (tighter than ``phrase_search``'s
-    anchor explode) — each induction step is one ``id`` equi-join of
-    the term's postings plus a ``filter(positions, x -> exists(T,
-    bounds))`` expression over the packed arrays (per-doc cost
-    |pos_i| x |T_{i+1}|, term-frequency-bounded), and all joins run
-    over postings already filtered to the query's terms
-    (partition-pruned under :func:`load_postings_artifact`)."""
+    A one-row :func:`positional_search_batch`.  The index is filtered
+    to the query's terms first, so an inline :func:`inverted_index`
+    builds only their postings (the filter pushes below its groupBy)
+    and a persisted one is partition-pruned under
+    :func:`load_postings_artifact`."""
     tl = terms.split() if isinstance(terms, str) else list(terms)
     if not tl:
         raise ValueError("terms must contain at least one term")
-    if slop < 0:
-        raise ValueError(f"slop must be >= 0, got {slop}")
-    step = int(slop) + 1
-    cur = index.where(F.col("term") == tl[-1]).select(
-        F.col(id_col), F.col("positions").alias("_T")
-    )
-    for t in reversed(tl[:-1]):
-        nxt = index.where(F.col("term") == t).select(
-            F.col(id_col), F.col("positions").alias("_pos")
-        )
-        cur = (
-            nxt.join(cur, id_col)
-            .withColumn(
-                "_T",
-                F.filter(
-                    F.col("_pos"),
-                    lambda x: F.exists(
-                        F.col("_T"),
-                        lambda y: (y > x) & (y <= x + F.lit(step)),
-                    ),
-                ),
-            )
-            .where(F.size("_T") > 0)
-            .select(id_col, "_T")
-        )
-    return cur.select(
-        F.col(id_col),
-        F.size("_T").cast("long").alias("n_matches"),
-        F.array_min("_T").alias("first_pos"),
-    )
+    q = _one_query(index.sparkSession, tl)
+    return positional_search_batch(
+        index.where(F.col("term").isin(tl)), q, slop=slop, id_col=id_col
+    ).drop("q_id")
 
 
 def min_span(
@@ -313,7 +309,7 @@ def min_span(
     containing ALL query terms, the length of the shortest position
     window containing at least one occurrence of every term, any
     order.  Smaller = tighter co-occurrence = stronger relevance
-    signal; the unordered companion to :func:`proximity_search`'s
+    signal; the unordered counterpart of :func:`proximity_search`'s
     ordered windows.
 
     Returns ``(id, min_span, first_pos)`` — ``first_pos`` is the
@@ -321,86 +317,20 @@ def min_span(
     among equal spans the smallest start wins), so :func:`snippets`
     hydrates the tightest cluster directly.
 
-    Exact by the standard sweep: sort the union of the terms'
-    positions; at each candidate window END, the minimal window
-    ending there spans back to the OLDEST of the per-term latest
-    positions; the global minimum over ends is the answer.  The sweep
-    runs as ONE ``aggregate`` fold over a per-doc sorted struct array
-    — packed arrays end to end, no explode, no UDF — after the same
-    per-term ``id`` equi-joins as ``phrase_search`` (inner, so only
-    docs containing every term pay anything), partition-pruned under
-    :func:`load_postings_artifact`.
+    Duplicate query terms collapse (order-preserving): MinDist is a
+    per-DISTINCT-term covering measure (Tao & Zhai define it over the
+    set of matched query terms), and without the dedupe a single
+    occurrence would satisfy both duplicate slots.
 
-    Duplicate query terms are collapsed up front (order-preserving):
-    MinDist is a per-DISTINCT-term covering measure (Tao & Zhai define
-    it over the set of matched query terms), and without the dedupe a
-    single occurrence would silently satisfy both duplicate slots —
-    pinned here rather than left incidental (ADVICE r15)."""
+    A one-row :func:`min_span_batch`, over the index filtered to the
+    query's terms as in :func:`proximity_search`."""
     tl = terms.split() if isinstance(terms, str) else list(terms)
-    tl = list(dict.fromkeys(tl))
     if not tl:
         raise ValueError("terms must contain at least one term")
-    k = len(tl)
-    cur = index.where(F.col("term") == tl[0]).select(
-        F.col(id_col), F.col("positions").alias("_pos0")
-    )
-    for i, t in enumerate(tl[1:], start=1):
-        cur = cur.join(
-            index.where(F.col("term") == t).select(
-                F.col(id_col), F.col("positions").alias(f"_pos{i}")
-            ),
-            id_col,
-        )
-    def _tagger(i: int):
-        # a factory, NOT a defaulted lambda: F.transform treats a
-        # 2-parameter callable as (element, index) and would bind the
-        # array index over the default (ngram_lm_train's trap)
-        return lambda p: F.struct(p.alias("p"), F.lit(i).alias("t"))
-
-    union = F.array_sort(
-        F.concat(
-            *[F.transform(F.col(f"_pos{i}"), _tagger(i)) for i in range(k)]
-        )
-    )
-    # fold state: per-term latest position (0 = unseen), running best
-    # (span, start); BIG sentinel keeps comparisons integer-only
-    big = 1 << 30
-    init = F.struct(
-        *[F.lit(0).alias(f"l{i}") for i in range(k)],
-        F.lit(big).alias("best"),
-        F.lit(0).alias("bestp"),
-    )
-
-    def _step(acc, e):
-        ls = [
-            F.when(e["t"] == i, e["p"]).otherwise(acc[f"l{i}"]).alias(
-                f"l{i}"
-            )
-            for i in range(k)
-        ]
-        upd = [
-            F.when(e["t"] == i, e["p"]).otherwise(acc[f"l{i}"])
-            for i in range(k)
-        ]
-        oldest = upd[0] if k == 1 else F.least(*upd)
-        all_seen = oldest > 0
-        span = e["p"] - oldest + F.lit(1)
-        better = all_seen & (span < acc["best"])
-        return F.struct(
-            *ls,
-            F.when(better, span).otherwise(acc["best"]).alias("best"),
-            F.when(better, oldest).otherwise(acc["bestp"]).alias("bestp"),
-        )
-
-    folded = cur.select(
-        F.col(id_col),
-        F.aggregate(union, init, _step).alias("_st"),
-    )
-    return folded.select(
-        F.col(id_col),
-        F.col("_st")["best"].cast("int").alias("min_span"),
-        F.col("_st")["bestp"].cast("int").alias("first_pos"),
-    )
+    q = _one_query(index.sparkSession, tl)
+    return min_span_batch(
+        index.where(F.col("term").isin(tl)), q, id_col=id_col
+    ).drop("q_id")
 
 
 # ------------------------------------------- batched positional search
@@ -412,16 +342,27 @@ def _query_postings(
     id_col: str,
     q_id_col: str,
     extra_cols: list[str],
+    fold,
     candidates: DataFrame | None = None,
 ) -> DataFrame:
     """Shared batch-positional base: explode each query's terms with
     their ordinal, resolve ALL queries' postings through ONE broadcast
-    equi-join on ``term``, and regroup per ``(q_id, doc)`` into an
-    ordinal-sorted array of ``(ti, pos)`` structs — keeping only docs
-    containing EVERY query term (``size == n_terms``; a repeated term
-    matches the same posting row once per ordinal, so presence
-    semantics match the single-query join chains).  ``extra_cols``
-    ride from the query frame to the output via ``first()``.
+    equi-join on ``term``, regroup per ``(q_id, doc)`` into an
+    ordinal-sorted array of ``(ti, pos)`` structs, and apply ``fold``
+    to that array — for docs containing EVERY query term only
+    (``n_terms`` rows; a repeated term matches the same posting row
+    once per ordinal, so every ordinal slot needs the term present).
+    Returns ``(q_id, id, _nt, *extra_cols, _f)``, ``_f`` being the
+    fold's value (null for a doc missing a term).  ``_nt`` and
+    ``extra_cols`` are per-query values, so they ride as grouping
+    keys and ``fold`` may read them as columns.
+
+    The fold runs inside the aggregation, once per ``(q_id, doc)``.
+    As a projection over the regrouped frame it would run once per
+    reference: a filter on its result is pushed below the projection
+    with the fold substituted in, and each output column derived from
+    it evaluates it again.
+
     ``candidates`` (``(q_id, id)``) restricts each query to the given
     documents BEFORE the ``(q_id, doc)`` shuffle and the packed-array
     fold — the broadcast join lands on the term-join output, so
@@ -442,21 +383,18 @@ def _query_postings(
             ),
             [q_id_col, id_col],
         )
-    return (
-        j.groupBy(q_id_col, id_col)
-        .agg(
-            F.first("_nt").alias("_nt"),
-            *[F.first(c).alias(c) for c in extra_cols],
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("_ti").alias("ti"),
-                        F.col("positions").alias("pos"),
-                    )
-                )
-            ).alias("_a"),
+    # sort_array, not array_sort: array_sort's default comparator is
+    # an interpreted lambda
+    a = F.sort_array(
+        F.collect_list(
+            F.struct(
+                F.col("_ti").alias("ti"),
+                F.col("positions").alias("pos"),
+            )
         )
-        .where(F.size("_a") == F.col("_nt"))
+    )
+    return j.groupBy(q_id_col, id_col, "_nt", *extra_cols).agg(
+        F.when(F.count(F.lit(1)) == F.col("_nt"), fold(a)).alias("_f")
     )
 
 
@@ -470,22 +408,21 @@ def positional_search_batch(
     slop_col: str | None = None,
 ) -> DataFrame:
     """Ordered proximity matching for EVERY query in ``queries`` in
-    one set-based pass — the batch companion to
-    :func:`proximity_search` exactly as :func:`bm25_topk_batch` is to
-    :func:`bm25_topk` (``slop=0`` rows are phrase queries:
-    adjacency ≡ :func:`phrase_search`, pinned by the single-query
-    tests).  ``queries`` carries ``(q_id, terms array<string>)`` plus
+    one set-based pass — the one implementation behind
+    :func:`proximity_search`, which is its one-row call (``slop=0``
+    rows are phrase queries: adjacency ≡ :func:`phrase_search`).
+    ``queries`` carries ``(q_id, terms array<string>)`` plus
     optionally ``slop_col`` for per-query slop (null → the ``slop``
-    default).  Returns ``(q_id, id, n_matches, first_pos)`` — one row
-    per (query, matching doc), the single-query output shape keyed by
-    query.
+    default).  Returns ``(q_id, id, n_matches, first_pos)`` — one row per
+    (query, matching doc).
 
-    Same exact-existence semantics as the single-query operator, via
-    the same backward induction — but since the term count is only
-    known per ROW here, the induction runs as ONE ``aggregate`` fold
-    over the ordinal-sorted ``(ti, positions)`` structs (state = the
-    surviving continuation positions, exactly the join chain's ``_T``)
-    instead of a plan-time join chain.
+    Exact-existence semantics (:func:`proximity_search`) by backward
+    induction: ``T_k`` = last term's positions, ``T_i`` = positions of
+    term ``i`` with a ``T_{i+1}`` continuation in bounds, matches =
+    ``T_1``.  The term count is only known per ROW, so the induction
+    runs as ONE ``aggregate`` fold over the ordinal-sorted
+    ``(ti, positions)`` structs (state = the surviving continuation
+    positions).
 
     Scale posture: ONE broadcast term join resolves every query's
     postings (queries are human-sized — the bm25_topk_batch
@@ -522,27 +459,28 @@ def positional_search_batch(
             & (F.col("_slop") >= 0)
         )
     )
-    per = _query_postings(index, q, id_col, q_id_col, ["_slop"])
     step = F.col("_slop") + F.lit(1)
-    arr = F.col("_a")
-    surviving = F.aggregate(
-        F.reverse(F.slice(arr, F.lit(1), F.size(arr) - F.lit(1))),
-        F.element_at(arr, -1)["pos"],
-        lambda acc, e: F.filter(
-            e["pos"],
-            lambda x: F.exists(
-                acc, lambda y: (y > x) & (y <= x + step)
+
+    def surviving(arr):
+        return F.aggregate(
+            F.reverse(F.slice(arr, F.lit(1), F.size(arr) - F.lit(1))),
+            F.element_at(arr, -1)["pos"],
+            lambda acc, e: F.filter(
+                e["pos"],
+                lambda x: F.exists(
+                    acc, lambda y: (y > x) & (y <= x + step)
+                ),
             ),
-        ),
-    )
-    return (
-        per.select(
-            F.col(q_id_col),
-            F.col(id_col),
-            F.size(surviving).cast("long").alias("n_matches"),
-            F.array_min(surviving).alias("first_pos"),
         )
-        .where(F.col("n_matches") > 0)
+
+    per = _query_postings(
+        index, q, id_col, q_id_col, ["_slop"], surviving
+    )
+    return per.where(F.size("_f") > 0).select(
+        F.col(q_id_col),
+        F.col(id_col),
+        F.size("_f").cast("long").alias("n_matches"),
+        F.array_min("_f").alias("first_pos"),
     )
 
 
@@ -555,19 +493,23 @@ def min_span_batch(
     candidates: DataFrame | None = None,
 ) -> DataFrame:
     """Minimum covering span for EVERY query in ``queries`` in one
-    set-based pass — the batch companion to :func:`min_span` (same
-    MinDist semantics: duplicate terms collapse, smallest window
-    containing every distinct term, smallest start among equal spans).
-    Returns ``(q_id, id, min_span, first_pos)``.
+    set-based pass — the one implementation behind :func:`min_span`,
+    which is its one-row call (MinDist semantics: duplicate terms
+    collapse, smallest window containing every distinct term,
+    smallest start among equal spans).  Returns
+    ``(q_id, id, min_span, first_pos)``.
 
-    The single-query sweep folds with one state SLOT per term — a
-    plan-time struct width.  Per-row term counts make the state an
-    ARRAY instead: per-term latest positions start as
-    ``array_repeat(0, n_terms)`` and each sorted (position, term)
-    event updates its slot via an index-aware ``transform`` — the
-    identical sweep, variable-width.  Plan shape matches
+    Exact by the standard sweep: sort the union of the terms'
+    positions; at each candidate window END, the minimal window
+    ending there spans back to the OLDEST of the per-term latest
+    positions; the global minimum over ends is the answer.  Per-row
+    term counts make the fold state an ARRAY: per-term latest
+    positions start as ``array_repeat(0, n_terms)`` and each sorted
+    (position, term) event updates its slot via an index-aware
+    ``transform``.  Plan shape matches
     :func:`positional_search_batch`: one broadcast term join, one
-    ``(q_id, doc)`` shuffle, per-row packed-array fold, no explode.
+    ``(q_id, doc)`` shuffle, per-row packed-array fold, no positions
+    explode.
 
     ``candidates`` (``(q_id, id)``, r17 verdict #4) restricts each
     query's span computation to the given documents — the
@@ -586,23 +528,7 @@ def min_span_batch(
         F.col(q_id_col),
         F.array_distinct(F.col(terms_col)).alias("_tl"),
     ).where(F.col("_tl").isNotNull() & (F.size("_tl") > 0))
-    per = _query_postings(index, q, id_col, q_id_col, [], candidates)
-    tagged = F.flatten(
-        F.transform(
-            F.col("_a"),
-            lambda s: F.transform(
-                s["pos"],
-                lambda p: F.struct(p.alias("p"), s["ti"].alias("t")),
-            ),
-        )
-    )
-    union = F.array_sort(tagged)
     big = 1 << 30
-    init = F.struct(
-        F.array_repeat(F.lit(0), F.col("_nt")).alias("ls"),
-        F.lit(big).alias("best"),
-        F.lit(0).alias("bestp"),
-    )
 
     def _step(acc, e):
         ls2 = F.transform(
@@ -618,12 +544,31 @@ def min_span_batch(
             F.when(better, oldest).otherwise(acc["bestp"]).alias("bestp"),
         )
 
-    st = F.aggregate(union, init, _step)
-    return per.select(
+    def sweep(arr):
+        union = F.sort_array(  # native sort, as in _query_postings
+            F.flatten(
+                F.transform(
+                    arr,
+                    lambda s: F.transform(
+                        s["pos"],
+                        lambda p: F.struct(p.alias("p"), s["ti"].alias("t")),
+                    ),
+                )
+            )
+        )
+        init = F.struct(
+            F.array_repeat(F.lit(0), F.col("_nt")).alias("ls"),
+            F.lit(big).alias("best"),
+            F.lit(0).alias("bestp"),
+        )
+        return F.aggregate(union, init, _step)
+
+    per = _query_postings(index, q, id_col, q_id_col, [], sweep, candidates)
+    return per.where(F.col("_f").isNotNull()).select(
         F.col(q_id_col),
         F.col(id_col),
-        st["best"].cast("int").alias("min_span"),
-        st["bestp"].cast("int").alias("first_pos"),
+        F.col("_f")["best"].cast("int").alias("min_span"),
+        F.col("_f")["bestp"].cast("int").alias("first_pos"),
     )
 
 
@@ -1330,9 +1275,8 @@ def bm25_topk(
     """Single-query BM25 top-k — a one-row :func:`bm25_topk_batch`.
     Returns ``(rank, id, score)``."""
     tl = terms.split() if isinstance(terms, str) else list(terms)
-    spark = index.sparkSession
-    queries = spark.createDataFrame([(0, tl)], "q_id long, terms array<string>")
-    return bm25_topk_batch(index, queries, k=k, **kwargs).drop("q_id")
+    q = _one_query(index.sparkSession, tl)
+    return bm25_topk_batch(index, q, k=k, **kwargs).drop("q_id")
 
 
 # ----------------------------------------------------- persisted index
@@ -1920,7 +1864,12 @@ def rrf_fuse(
     (the window's constant partition key is deliberate: its input is
     already k·|rankings| rows, not corpus-sized).  ``scale`` fixes
     each 1/(k+rank) contribution to an exact integer before the
-    cross-ranking sum (the graded hash-stable mode, as in BM25)."""
+    cross-ranking sum (the graded hash-stable mode, as in BM25).
+
+    Not a one-row :func:`rrf_fuse_batch` call: giving the lists a
+    query id costs a broadcast join and one more Spark job per call,
+    and over one query the ranking window needs no per-query
+    partitioning."""
     if not rankings:
         raise ValueError("rankings must be non-empty")
     parts = []

@@ -3718,7 +3718,7 @@ def q111(spark, sf_dir):
     bad = P.semantic_contaminated_ids(
         cemb, bemb, id_col="doc_id", vec_col="embedding", threshold=0.9
     )
-    final = s2.join(F.broadcast(bad), "doc_id", "left_anti")
+    final = s2.join(bad, "doc_id", "left_anti")
     norm = F.array_join(X.tokens("text"), " ")
     return (
         final.select("doc_id", norm.alias("text"))

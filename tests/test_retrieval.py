@@ -1199,7 +1199,9 @@ def test_min_span_plan_no_explode_no_python(spark):
             R.min_span(idx, "a b")
             ._jdf.queryExecution().executedPlan().toString()
         )
-        assert "Generate" not in plan  # zero explodes: packed-array sweep
+        # packed-array sweep: no positions explode (the one Generate
+        # is the posexplode of the literal query terms)
+        assert "explode(positions" not in plan
         for marker in ("BatchEvalPython", "ArrowEvalPython", "InPandas"):
             assert marker not in plan
     finally:
@@ -1390,10 +1392,12 @@ def test_proximity_and_min_span_analyzer_composition(spark):
 
 def test_positional_search_batch_matches_per_query_operators(spark):
     """The batched positional pass (one term join + per-row induction
-    fold) equals running proximity_search per query — over a
+    fold) equals the Python existence model run per query — over a
     randomized corpus and a query mix covering per-row slop, k=1,
     repeated terms, a missing term, and malformed rows (null/empty
-    terms arrays are skipped per contract)."""
+    terms arrays are skipped per contract).  proximity_search is the
+    batch operator's one-row call, so the model is the independent
+    side."""
     import random
 
     rnd = random.Random(77)
@@ -1424,12 +1428,12 @@ def test_positional_search_batch_matches_per_query_operators(spark):
             idx, qdf, slop_col="slop"
         ).collect()
     }
-    want = {}
-    for qid, tl, sl in queries:
-        if not tl:
-            continue
-        for r in R.proximity_search(idx, tl, slop=sl).collect():
-            want[(qid, r["doc_id"])] = (r["n_matches"], r["first_pos"])
+    want = {
+        (qid, d): v
+        for qid, tl, sl in queries
+        if tl
+        for d, v in _py_proximity(docs, tl, sl).items()
+    }
     assert got == want
     assert got  # the fixture really produces matches
 
@@ -1438,12 +1442,12 @@ def test_positional_search_batch_matches_per_query_operators(spark):
         (r["q_id"], r["doc_id"]): (r["n_matches"], r["first_pos"])
         for r in R.positional_search_batch(idx, qdf, slop=1).collect()
     }
-    want1 = {}
-    for qid, tl, _ in queries:
-        if not tl:
-            continue
-        for r in R.proximity_search(idx, tl, slop=1).collect():
-            want1[(qid, r["doc_id"])] = (r["n_matches"], r["first_pos"])
+    want1 = {
+        (qid, d): v
+        for qid, tl, _ in queries
+        if tl
+        for d, v in _py_proximity(docs, tl, 1).items()
+    }
     assert got1 == want1
     with pytest.raises(ValueError):
         R.positional_search_batch(idx, qdf, slop=-1)
@@ -1451,8 +1455,10 @@ def test_positional_search_batch_matches_per_query_operators(spark):
 
 def test_min_span_batch_matches_per_query_operator(spark):
     """min_span_batch (array-state sweep, variable per-row term count)
-    equals per-query min_span — including duplicate-term collapse and
-    all-terms-present filtering — over the randomized corpus."""
+    equals the brute-force Python model run per query — including
+    duplicate-term collapse and all-terms-present filtering — over
+    the randomized corpus.  min_span is the batch operator's one-row
+    call, so the model is the independent side."""
     import random
 
     rnd = random.Random(78)
@@ -1478,12 +1484,12 @@ def test_min_span_batch_matches_per_query_operator(spark):
         (r["q_id"], r["doc_id"]): (r["min_span"], r["first_pos"])
         for r in R.min_span_batch(idx, qdf).collect()
     }
-    want = {}
-    for qid, tl in queries:
-        if not tl:
-            continue
-        for r in R.min_span(idx, tl).collect():
-            want[(qid, r["doc_id"])] = (r["min_span"], r["first_pos"])
+    want = {
+        (qid, d): v
+        for qid, tl in queries
+        if tl
+        for d, v in _py_min_span(docs, tl).items()
+    }
     assert got == want
     assert got
     # single-term spans are 1 at the term's first occurrence
@@ -1522,13 +1528,15 @@ def test_rrf_fuse_batch_matches_per_query_fuse(spark):
 
 def test_positional_batch_plan_one_term_join_no_explode_no_python(spark):
     """The batch operators' plan shape IS the point: ONE postings
-    equi-join regardless of query count or term count (the
-    single-query operators build one join per term per query), no
-    positions explode, no Python stages — so a 100-query batch costs
-    three joins total, not hundreds."""
-    docs = spark.createDataFrame(
-        [(i, "a b c d e f g") for i in range(10)],
-        "doc_id long, text string",
+    equi-join regardless of query count or term count, no positions
+    explode, no Python stages — so a 100-query batch costs three
+    joins total, not hundreds.  proximity_search, min_span and
+    bm25_topk are one-row calls of the batch operators and inherit
+    the shape: no positions explode, no Python stage, and no
+    ``ExistingRDD`` scan (their one-row query is a ``Range``, not a
+    Python-built row) — nor does rrf_fuse over their rankings."""
+    docs = spark.range(10).select(
+        F.col("id").alias("doc_id"), F.lit("a b c d e f g").alias("text")
     )
     idx = R.inverted_index(docs)
 
@@ -1554,6 +1562,21 @@ def test_positional_batch_plan_one_term_join_no_explode_no_python(spark):
         assert js == jb, (js, jb)
         phys = op(big)._jdf.queryExecution().executedPlan().toString()
         assert "Generate explode(positions" not in phys
+        for marker in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF"):
+            assert marker not in phys
+
+    def ranking(terms):
+        return R.bm25_topk(idx, terms, k=3).select("doc_id", "rank")
+
+    for single in (
+        R.proximity_search(idx, "a c e", slop=1),
+        R.min_span(idx, "b a"),
+        R.bm25_topk(idx, ["a", "b"], k=3),
+        R.rrf_fuse([ranking(["a"]), ranking(["b", "c"])], topk=3),
+    ):
+        phys = single._jdf.queryExecution().executedPlan().toString()
+        assert "Generate explode(positions" not in phys
+        assert "ExistingRDD" not in phys
         for marker in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF"):
             assert marker not in phys
 

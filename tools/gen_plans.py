@@ -262,15 +262,11 @@ QUERIES = [
     (
         "q131_proximity_rrf",
         "proximity-evidence ranked retrieval (r15): BM25 top-50 + the "
-        "MinDist tightness ranking fused by RRF — both arms end "
-        "bounded (TakeOrdered / LIMIT-50) and fusion touches only two "
-        "<= 50-row lists.  Measured at sf0.1: fused 3.11s vs 2.57s "
-        "for the two arms run separately (1.21x) — the arms' index "
-        "subtrees do NOT currently share exchanges (different "
-        "aggregation shapes defeat reuse), so the composition cost is "
-        "the sum of arms plus bounded fusion; at serving scale both "
-        "arms read the PERSISTED pruned index instead of re-deriving "
-        "it, which removes the shared-subtree question entirely",
+        "MinDist tightness ranking fused by RRF — both arms read one "
+        "shared_index and end bounded (TakeOrdered / LIMIT-50), and "
+        "fusion touches only two <= 50-row lists; min_span is a "
+        "one-row min_span_batch over the index filtered to the query "
+        "terms",
     ),
     (
         "q128_ann_ablation",
@@ -307,10 +303,13 @@ QUERIES = [
         "q132_analyzed_proximity",
         "analyzer-composed proximity (r16): the 'simple'-analyzed "
         "index feeds BOTH the ordered-slop chain and the MinDist "
-        "sweep with analyze_terms at the call sites — same zero-"
-        "explode packed-array shapes as proximity_search/min_span, "
-        "positions assigned after analysis so adjacency holds on the "
-        "analyzed stream",
+        "sweep with analyze_terms at the call sites — proximity_search "
+        "and min_span are one-row calls of positional_search_batch and "
+        "min_span_batch (q134/q135's packed-array folds, no positions "
+        "explode) over the index filtered to the query terms, which "
+        "pushes below the inline index's groupBy; positions are "
+        "assigned after analysis so adjacency holds on the analyzed "
+        "stream",
     ),
     (
         "q134_positional_search_batch",
@@ -319,8 +318,7 @@ QUERIES = [
         "one (q_id, doc) shuffle collects ordinal-sorted (ti, "
         "positions) structs, and the backward induction runs as a "
         "per-row aggregate fold — join count is independent of query "
-        "and term count (the single-query chain builds one join per "
-        "term per query), zero explodes of positions",
+        "and term count, zero explodes of positions",
     ),
     (
         "q135_min_span_batch",
