@@ -1050,9 +1050,10 @@ def bench_facade(spark) -> dict:
     (60 s at 26.667 kHz-shaped framing scaled to 2 kHz x 3 axes, the
     fixture rate) through process_acquisition — .dat decode, enrich,
     1 s completeness-gated RMS, two Hive-partitioned parquet sinks.
-    This is the flagship ETL the r4 persist fix (decode runs once)
-    landed on; a regression floor belongs in the bench like every
-    other query.  Fixture generation is OUTSIDE the timing."""
+    The decode runs once per call and nothing is cached: the RMS reads
+    back the enriched files the first sink placed.  A regression floor
+    belongs in the bench like every other query.  Fixture generation
+    is OUTSIDE the timing."""
     import shutil
     import tempfile
 

@@ -157,9 +157,10 @@ def with_date_parts(df: DataFrame) -> DataFrame:
     )
 
 
-def write_hive_partitioned(df: DataFrame, root: str, stem: str) -> None:
+def write_hive_partitioned(df: DataFrame, root: str, stem: str) -> list[str]:
     """Hive-layout parquet sink (S7/S8):
-    ``root/alias=…/year=…/month=…/day=…/<stem>-*.parquet``.
+    ``root/alias=…/year=…/month=…/day=…/<stem>-*.parquet``.  Returns
+    the paths of the files it placed (empty when ``df`` has no rows).
 
     ``stem`` names one acquisition's files, like the reference's
     ``<name>_<ts>.parquet`` (main.py:121-131): writing a stem replaces
@@ -168,7 +169,9 @@ def write_hive_partitioned(df: DataFrame, root: str, stem: str) -> None:
     survive and re-processing one is idempotent.  The rows are staged
     under ``root/_stage_<stem>`` (the underscore keeps readers of
     ``root`` blind to it); then, per leaf, the stem's old files are
-    deleted and the staged files renamed in.
+    deleted (or the missing leaf made) and the staged files renamed in.
+    Writing no rows leaves ``root`` as it was: a root the write had to
+    create is removed again.
 
     SNAPPY + dictionary encoding are Spark parquet defaults; rows are
     sorted by time *within* each partition so the int64 Time column
@@ -184,6 +187,7 @@ def write_hive_partitioned(df: DataFrame, root: str, stem: str) -> None:
     hpath = spark._jvm.org.apache.hadoop.fs.Path
     root_path = hpath(root)
     fs = root_path.getFileSystem(spark._jsc.hadoopConfiguration())
+    root_existed = fs.exists(root_path)
     stage = hpath(root_path, f"_stage_{stem}")
     (
         out.sortWithinPartitions(*PARTITION_COLS, "Time")
@@ -203,6 +207,7 @@ def write_hive_partitioned(df: DataFrame, root: str, stem: str) -> None:
             if st.isDirectory()
         ]
     prefix = f"{stem}-"
+    placed = []
     for src, rel in leaves:
         leaf = hpath(root_path, "/".join(rel))
         if fs.exists(leaf):
@@ -218,7 +223,11 @@ def write_hive_partitioned(df: DataFrame, root: str, stem: str) -> None:
                 dst = hpath(leaf, prefix + name)
                 if not fs.rename(st.getPath(), dst):
                     raise IOError(f"write_hive_partitioned: rename to {dst} failed")
+                placed.append(dst.toString())
     fs.delete(stage, True)
+    if not placed and not root_existed and len(fs.listStatus(root_path)) == 0:
+        fs.delete(root_path, False)
+    return placed
 
 
 def asof_join(

@@ -11,22 +11,24 @@ seconds to absolute epoch ns (P2) and attaches the alias (P3).
 
 ``process_acquisition`` completes the reference pipeline: write the
 enriched table and the 1-second completeness-gated RMS aggregate into
-the Hive ``alias=/year=/month=/day=`` layout (S7/S8).  Unlike the
-reference there is no intermediate parquet materialization and no
-driver-side data pass — one lazy lineage end to end; many acquisitions
-can be unioned and processed in one job (the reference serializes one
-per 2 GB function instance).
+the Hive ``alias=/year=/month=/day=`` layout (S7/S8).  The enriched
+table goes to its sink in one decode -> enrich -> sort -> write job;
+the RMS reads back exactly the files that write placed, so the decode
+runs once and nothing is cached in executor storage.  There is no
+driver-side data pass: the RMS row count comes from an observed metric
+of the RMS sink's own write.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from ..operators import telemetry as tm
 from ..schema.dtdl import decode_params_from_status
@@ -34,6 +36,7 @@ from ..schema.sanitize import sanitize_columns
 from .dat import DecodeParams, decode_dat
 
 NS_PER_S = 1_000_000_000
+_GLOB_CHARS = re.compile(r"([\\{}\[\]*?])")
 _EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
 
@@ -133,43 +136,47 @@ def process_acquisition(
     if loaded is None:
         return None
     enriched, meta = loaded
-    axis_cols = [c for c in enriched.columns if c not in ("Time", "alias")]
+    dt = meta.start_time
+    parts = {"year": dt.year, "month": dt.month, "day": dt.day}
+    stem = f"{sensor}_{dt:%Y%m%d_%H%M%S}"
+
+    # One job decodes, enriches, sorts and writes; RMS then reads back
+    # exactly the files that write placed.  The .dat decode runs once
+    # and nothing is held in executor storage: a lost executor
+    # recomputes from the .dat or the written files.
+    files = tm.write_hive_partitioned(
+        enriched.withColumns({k: F.lit(v) for k, v in parts.items()}),
+        f"{out_root}/{sensor}",
+        stem,
+    )
+    if not files:
+        # no whole packet in the .dat: nothing to aggregate
+        return {"rms_rows": 0, "rms_written": False, "meta": meta}
+    # the written files hold the enriched columns less the partition
+    # keys (alias among them); the given schema spares inference.  The
+    # reader globs its paths, so glob characters in out_root are escaped
+    written = spark.read.schema(enriched.drop("alias").schema).parquet(
+        *(_GLOB_CHARS.sub(r"\\\1", f) for f in files)
+    )
+    samples = tm.attach_literals(written, alias=meta.alias)
+    axis_cols = [c for c in samples.columns if c not in ("Time", "alias")]
     rename = {}
     for c in axis_cols:
         low = c.lower()
         for ax in ("x", "y", "z"):
             if f"_{ax}_" in low or low.endswith(f"_{ax}"):
                 rename[c] = f"rms_{ax}"
-    rms = tm.tumbling_rms(enriched, value_cols=axis_cols, rename=rename, group_cols=["alias"])
+    rms = tm.tumbling_rms(samples, value_cols=axis_cols, rename=rename, group_cols=["alias"])
 
-    dt = meta.start_time
-    parts = {"year": dt.year, "month": dt.month, "day": dt.day}
-    stem = f"{sensor}_{dt:%Y%m%d_%H%M%S}"
-    enriched_out = enriched.withColumns({k: F.lit(v) for k, v in parts.items()})
-    rms_out = rms.withColumns({k: F.lit(v) for k, v in parts.items()})
-
-    # Both sinks and the empty-check (main.py:154-156) consume the same
-    # decode->enrich lineage; without caching, the mapInArrow .dat
-    # decode (one task per packet-aligned range, spread over every
-    # core) would run 3x (enriched write, RMS count, RMS write).
-    # Persist the shared ancestor once (spills to disk if the
-    # acquisition exceeds executor memory) and the tiny RMS aggregate,
-    # so decode and the RMS agg each execute exactly once.
-    enriched.persist()
-    rms_out.persist()
-    try:
-        tm.write_hive_partitioned(enriched_out, f"{out_root}/{sensor}", stem)
-        n_rms = rms_out.count()
-        if n_rms == 0:
-            # main.py:154-156: no full 1 s window -> RMS table not written
-            return {"rms_rows": 0, "rms_written": False, "meta": meta}
-        # at most one row per second of acquisition, so one file: the
-        # global orderBy in tumbling_rms would otherwise write one small
-        # file per shuffle partition
-        tm.write_hive_partitioned(
-            rms_out.coalesce(1), f"{out_root}/{sensor}_rms", stem
-        )
-        return {"rms_rows": n_rms, "rms_written": True, "meta": meta}
-    finally:
-        rms_out.unpersist()
-        enriched.unpersist()
+    # the RMS sink's own write counts its rows
+    seen = Observation()
+    rms_out = rms.withColumns({k: F.lit(v) for k, v in parts.items()}).observe(
+        seen, F.count(F.lit(1)).alias("rows")
+    )
+    # at most one row per second of acquisition, so one file: the global
+    # orderBy in tumbling_rms would otherwise write one small file per
+    # shuffle partition.  No full 1 s window writes no rows and leaves
+    # no RMS table (main.py:154-156).
+    tm.write_hive_partitioned(rms_out.coalesce(1), f"{out_root}/{sensor}_rms", stem)
+    n_rms = seen.get["rows"]
+    return {"rms_rows": n_rms, "rms_written": n_rms > 0, "meta": meta}

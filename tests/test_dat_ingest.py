@@ -280,6 +280,71 @@ def test_same_day_acquisitions_both_survive(spark, tmp_path):
     assert not glob.glob(f"{out}/*/_stage_*")
 
 
+def test_process_acquisition_without_full_window(spark, tmp_path, monkeypatch):
+    """main.py:154-156: an acquisition with no full 1 s window writes
+    its enriched table and no RMS table.  A 0.5 s acquisition's RMS
+    write observes zero rows and leaves no ``<sensor>_rms`` directory;
+    a .dat cut below one packet places no enriched file, so the RMS
+    never reads (``spark.read.parquet`` with no paths)."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    write_acquisition(str(tmp_path / "half"), n_seconds=0.5)
+    out = tmp_path / "out_half"
+    res = acq.process_acquisition(spark, str(tmp_path / "half"), str(out))
+    assert res["rms_rows"] == 0 and res["rms_written"] is False
+    assert glob.glob(f"{out}/{SENSOR}/alias=LAF1/year=2025/month=7/day=11/*.parquet")
+    assert not (out / f"{SENSOR}_rms").exists()
+    assert not glob.glob(f"{out}/*/_stage_*")
+
+    real_parquet = DataFrameReader.parquet
+
+    def parquet(self, *paths, **options):
+        assert paths, "spark.read.parquet() called with no paths"
+        return real_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    write_acquisition(str(tmp_path / "cut"))
+    dat = tmp_path / "cut" / f"{SENSOR}.dat"
+    dat.write_bytes(dat.read_bytes()[: P.packet_len - 1])
+    out = tmp_path / "out_cut"
+    res = acq.process_acquisition(spark, str(tmp_path / "cut"), str(out))
+    assert res["rms_rows"] == 0 and res["rms_written"] is False
+    assert not glob.glob(f"{out}/**/*.parquet", recursive=True)
+    assert not glob.glob(f"{out}/*/_stage_*")
+
+
+def test_process_acquisition_out_root_with_glob_characters(spark, tmp_path):
+    """The RMS reads the enriched files back by path, and the parquet
+    reader globs its paths: an output root holding glob characters
+    must still convert to the full RMS."""
+    write_acquisition(str(tmp_path / "A"))
+    out = str(tmp_path / "run[1]{a,b}*?")
+    res = acq.process_acquisition(spark, str(tmp_path / "A"), out)
+    assert res["rms_written"] and res["rms_rows"] == 5
+    leaf = "alias=LAF1/year=2025/month=7/day=11"
+    assert len(os.listdir(os.path.join(out, SENSOR, leaf))) >= 1
+    assert len(os.listdir(os.path.join(out, f"{SENSOR}_rms", leaf))) >= 1
+
+
+def test_process_acquisition_uses_no_executor_storage(spark, tmp_path, monkeypatch):
+    """The conversion caches nothing: with persist, cache and
+    localCheckpoint raising, a 40 s 26 667 Hz acquisition still
+    converts, and the RMS it reports is the RMS it wrote."""
+    cls = type(spark.range(1))
+
+    def refuse(self, *args, **kwargs):
+        raise AssertionError("process_acquisition used executor storage")
+
+    for name in ("persist", "cache", "localCheckpoint"):
+        monkeypatch.setattr(cls, name, refuse)
+    in_g, _ = write_acquisition(str(tmp_path / "S"), n_seconds=40, odr=26667)
+    out = str(tmp_path / "out")
+    res = acq.process_acquisition(spark, str(tmp_path / "S"), out)
+    assert res["rms_written"] and res["rms_rows"] == 39
+    assert spark.read.parquet(f"{out}/{SENSOR}").count() == len(in_g)
+    assert spark.read.parquet(f"{out}/{SENSOR}_rms").count() == res["rms_rows"]
+
+
 def test_incomplete_acquisition_soft_skips(spark, tmp_path):
     write_acquisition(str(tmp_path / "F"), incomplete=True)
     assert acq.load_acquisition(spark, str(tmp_path / "F")) is None
@@ -348,12 +413,12 @@ def test_decode_params_from_status():
 
 def test_process_acquisition_decodes_once(spark, tmp_path, monkeypatch):
     """The flagship conversion path must execute the .dat decode exactly
-    once.  Three actions consume the decode lineage (enriched write, RMS
-    empty-check count, RMS write — main.py:121-156); without the persist
-    in process_acquisition the mapInArrow decode would run 3x.  An
-    accumulator ticks once per (partition, execution) of a stage grafted
-    directly above the decode; one pass == one tick per partition, and
-    each packet-aligned range lands in its own partition."""
+    once: the enriched write is the only job over the decode lineage,
+    and the RMS reads the files that write placed instead of decoding
+    again.  An accumulator ticks once per (partition, execution) of a
+    stage grafted directly above the decode; one pass == one tick per
+    partition, and each packet-aligned range lands in its own
+    partition."""
     from gcf_corima_parquet_converter_spark.sources.dat import RANGE_FLOOR_BYTES
 
     acc = spark.sparkContext.accumulator(0)

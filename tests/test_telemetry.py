@@ -162,6 +162,71 @@ def test_hive_write_preserves_other_partitions(spark, tmp_path):
     assert spark.read.parquet(root).count() == 4
 
 
+def test_hive_write_lands_new_leaves_beside_another_stem(spark, tmp_path):
+    """A frame spanning two days of alias A and two of a new alias B,
+    where A's first day already holds another stem's file: that leaf
+    gets the new files renamed in beside it and the missing leaves are
+    made.  Every leaf lands, the other stem's file survives, the
+    returned paths are exactly the placed files and no stage is left."""
+    import glob
+    import os
+
+    root = str(tmp_path / "two_days")
+
+    def frame(rows):
+        return spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "Time": [
+                        int(pd.Timestamp(f"2025-07-{d:02d} 12:00", tz="UTC").value)
+                        for _, d in rows
+                    ],
+                    "v": [float(d) for _, d in rows],
+                    "alias": [a for a, _ in rows],
+                }
+            )
+        )
+
+    TM.write_hive_partitioned(frame([("A", 1)]), root, "other")
+    placed = TM.write_hive_partitioned(
+        frame([("A", 1), ("A", 2), ("B", 1), ("B", 2)]), root, "mine"
+    )
+
+    def names(alias, day):
+        leaf = f"{root}/alias={alias}/year=2025/month=7/day={day}"
+        return sorted(os.path.basename(f) for f in glob.glob(f"{leaf}/*.parquet"))
+
+    assert [n.split("-")[0] for n in names("A", 1)] == ["mine", "other"]
+    for alias, day in (("A", 2), ("B", 1), ("B", 2)):
+        assert [n.split("-")[0] for n in names(alias, day)] == ["mine"]
+    assert sorted(placed) == sorted(glob.glob(f"{root}/*/*/*/*/mine-*.parquet"))
+    assert not glob.glob(f"{root}/_stage_*")
+    back = spark.read.parquet(root)
+    assert back.count() == 5
+    assert sorted((r.alias, r.day) for r in back.collect()) == [
+        ("A", 1), ("A", 1), ("A", 2), ("B", 1), ("B", 2)
+    ]
+
+
+def test_hive_write_of_no_rows_leaves_root_alone(spark, tmp_path):
+    """An empty frame places no file and returns no path; a root the
+    write had to create is gone again, an existing one keeps its files."""
+    import os
+
+    sdf = spark.createDataFrame(
+        pd.DataFrame({"Time": [START_NS], "v": [1.0], "alias": ["A"]})
+    )
+    fresh = str(tmp_path / "fresh")
+    assert TM.write_hive_partitioned(sdf.limit(0), fresh, "s") == []
+    assert not os.path.exists(fresh)
+    kept = str(tmp_path / "kept")
+    first = TM.write_hive_partitioned(sdf, kept, "s")
+    assert len(first) == 1
+    assert TM.write_hive_partitioned(sdf.limit(0), kept, "t") == []
+    assert [os.path.exists(p) for p in first] == [True]
+    assert os.listdir(kept) == ["alias=A"]
+
+
 def test_asof_join_matches_pandas_merge_asof(spark):
     """Backward/forward/tolerance parity with pandas merge_asof on a
     two-key dataset with unmatched rows on both ends."""
