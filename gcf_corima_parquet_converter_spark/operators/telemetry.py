@@ -92,26 +92,27 @@ def tumbling_rms(
     bucket-start timestamp; the reference's isin() semi-join collapses
     into a HAVING predicate on the same aggregate.  Output columns:
     ``rms_<name>`` per value col (or ``rename`` mapping), ``rms_mod``,
-    ``Time`` (bucket start, int64 ns), plus ``group_cols``.
+    ``Time`` (bucket start, int64 ns), plus ``group_cols``.  The rows
+    come out UNORDERED: a caller that needs them in time order sorts
+    them itself (a global sort here would add a range-sampling job and
+    a second shuffle for a handful of rows per second of input).
     """
     rename = rename or {}
     bucket = (F.col("Time") - (F.col("Time") % F.lit(NS_PER_S))) / F.lit(NS_PER_S)
     out_names = [rename.get(c, f"rms_{c}") for c in value_cols]
     aggs = [_rms(c).alias(n) for c, n in zip(value_cols, out_names)]
     aggs.append((F.max("Time") - F.min("Time")).alias("_span_ns"))
+    mod = F.sqrt(sum((F.col(n) * F.col(n) for n in out_names), F.lit(0.0)))
     return (
-        df.withColumn("_bucket", bucket.cast("long"))
-        .groupBy(*group_cols, "_bucket")
+        df.groupBy(*group_cols, bucket.cast("long").alias("_bucket"))
         .agg(*aggs)
         .where(F.col("_span_ns") >= F.lit(MIN_SPAN_FRAC * NS_PER_S))
-        .drop("_span_ns")
-        .withColumn(
-            "rms_mod",
-            F.sqrt(sum((F.col(n) * F.col(n) for n in out_names), F.lit(0.0))),
+        .select(
+            *group_cols,
+            *out_names,
+            mod.alias("rms_mod"),
+            (F.col("_bucket") * F.lit(NS_PER_S)).cast("long").alias("Time"),
         )
-        .withColumn("Time", (F.col("_bucket") * F.lit(NS_PER_S)).cast("long"))
-        .drop("_bucket")
-        .orderBy(*group_cols, "Time")
     )
 
 

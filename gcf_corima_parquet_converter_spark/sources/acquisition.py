@@ -173,10 +173,10 @@ def process_acquisition(
     rms_out = rms.withColumns({k: F.lit(v) for k, v in parts.items()}).observe(
         seen, F.count(F.lit(1)).alias("rows")
     )
-    # at most one row per second of acquisition, so one file: the global
-    # orderBy in tumbling_rms would otherwise write one small file per
-    # shuffle partition.  No full 1 s window writes no rows and leaves
-    # no RMS table (main.py:154-156).
+    # at most one row per second of acquisition, so one file: the sink
+    # sorts inside its one partition, which writes the unordered
+    # aggregate in Time order.  No full 1 s window writes no rows and
+    # leaves no RMS table (main.py:154-156).
     tm.write_hive_partitioned(rms_out.coalesce(1), f"{out_root}/{sensor}_rms", stem)
     n_rms = seen.get["rows"]
     return {"rms_rows": n_rms, "rms_written": n_rms > 0, "meta": meta}

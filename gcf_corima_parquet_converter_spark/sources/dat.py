@@ -12,10 +12,11 @@ Scale design: fixed packet length means any multiple of it is a clean
 framing boundary, so files decode as packet-aligned BYTE RANGES — a
 ``mapInArrow`` kernel (numpy ``frombuffer``, zero-copy reshape, Arrow
 record batches out) per range, ranged reads (local seek /
-``pyarrow.fs`` object-store GET), no shuffle of sample data.  Ranges
-are sized from the session's ``defaultParallelism``, so one file
-spreads over every core, and never fall below ``RANGE_FLOOR_BYTES`` (a
-small file stays one range) nor exceed ``split_bytes``.
+``pyarrow.fs`` object-store GET), no shuffle at all.  The driver plans
+the ranges from the file's length alone: they are sized from the
+session's ``defaultParallelism``, so one file spreads over every core,
+never fall below ``RANGE_FLOOR_BYTES`` (a small file stays one range)
+nor exceed ``split_bytes``, and each is one id of a ``spark.range``.
 Per-sample timestamps are derived from packet timestamps (the packet
 stamp is the time of its last sample [inferred from the missing-core
 converter's per-sample Time output, main.py:84-101]) so clock drift
@@ -29,7 +30,6 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pyarrow as pa
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -168,27 +168,21 @@ def decode_schema(params: DecodeParams) -> StructType:
 
 
 def _read_range(path: str, start: int, length: int) -> bytes:
-    """Read ``length`` bytes at ``start`` from a binaryFile path URI.
-    Local ``file:`` URIs use plain seek/read; anything else (gs://,
+    """Read ``length`` bytes at ``start`` from a qualified Hadoop path
+    URI.  Local ``file:`` URIs use plain seek/read; anything else (gs://,
     s3://, hdfs://) goes through ``pyarrow.fs`` — the same ranged-GET
     primitive every object store serves, so a split never downloads
     the whole blob."""
     if path.startswith("file:"):
-        # binaryFile path values are Hadoop URIs: special characters
-        # arrive percent-encoded (space -> %20), so decode before open
-        # or ranged reads fail on such filenames while the
-        # whole-file path (which never round-trips through a URI)
-        # works.
+        # a Hadoop URI carries special characters percent-encoded
+        # (space -> %20), so decode before open or ranged reads fail
+        # on such filenames
         from urllib.parse import unquote
 
         local = unquote(path[5:])
         while local.startswith("//"):
             local = local[1:]
         with open(local, "rb") as f:
-            f.seek(start)
-            return f.read(length)
-    if "://" not in path and path.startswith("/"):
-        with open(path, "rb") as f:
             f.seek(start)
             return f.read(length)
     import pyarrow.fs as pafs
@@ -203,7 +197,7 @@ def decode_dat(
     spark: SparkSession,
     path: str,
     params: DecodeParams,
-    split_bytes: int | None = 64 << 20,
+    split_bytes: int = 64 << 20,
 ) -> DataFrame:
     """Distributed ``.dat`` scan decoded over PACKET-ALIGNED byte
     ranges: packets are fixed-length (``params.packet_len``), so any
@@ -221,92 +215,55 @@ def decode_dat(
     Output: relative ``Time`` (float64 s) + one double column per axis,
     emitted by a ``mapInArrow`` kernel as Arrow record batches of at
     most ``CHUNK_ROWS`` rows.  Downstream enrichment (sanitize/abs-time/
-    alias) stays lazy on top.  ``split_bytes=None`` falls back to
-    one-task-per-file via binaryFile content rows (no seekable reads
-    needed).
+    alias) stays lazy on top.
 
-    The listing pass projects binaryFile's (path, length) only —
-    content is never read twice; range tasks fetch their own bytes
-    with ranged reads (local seek or ``pyarrow.fs`` for object
-    stores).  The tiny (path, start, length) range frame is dealt
-    round-robin over ``defaultParallelism`` partitions: AQE never
-    coalesces a repartition by explicit count, round-robin cannot
-    collide the way hashing (path, start) does, and Spark sorts the
-    input first, so a retried task gets the same ranges."""
+    The ranges are planned on the driver from one Hadoop
+    ``getFileStatus`` (so any Hadoop filesystem, gs:// included, works):
+    range ``i`` of ``n`` is the ``i``-th id of ``spark.range(n)`` over
+    ``min(n, defaultParallelism)`` partitions, and its task reads
+    ``[i*per*packet_len, (i+1)*per*packet_len)`` itself with a ranged
+    read (local seek or ``pyarrow.fs`` for object stores).  No listing
+    job and no shuffle precede the decode, and ``spark.range`` slices
+    its ids deterministically, so a retried task gets the same ranges."""
     schema = decode_schema(params)
     arrow_schema = pa.schema([(f.name, pa.float64()) for f in schema.fields])
     plen = params.packet_len
 
-    def _decode_buf(content: bytes, base_packet: int) -> Iterator[pa.RecordBatch]:
-        # a trailing partial packet is legal mid-stream (file cut) and
-        # leaves the decoded rows unaffected
-        samples, ts, _leftover = frame_packets(content, params)
-        n = len(samples)
-        if n == 0:
-            return
-        if params.samples_per_ts == 0:
-            # stampless wire format: the k/odr grid must use the
-            # GLOBAL sample index, not the range-local one
-            t = np.arange(base_packet, base_packet + n, dtype=np.float64) / params.odr
-        else:
-            t = sample_times(ts, params, n)
-        cols = [t, *np.ascontiguousarray(samples.T)]
-        for s in range(0, n, CHUNK_ROWS):
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c[s : s + CHUNK_ROWS]) for c in cols], schema=arrow_schema
-            )
-
-    if split_bytes is None:
-
-        def _decode(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            for batch in it:
-                for content in batch.column("content").to_pylist():
-                    yield from _decode_buf(content, 0)
-
-        return (
-            spark.read.format("binaryFile")
-            .load(path)
-            .select("content")
-            .mapInArrow(_decode, schema)
-        )
-
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    status = fs.getFileStatus(hpath)
+    # qualified and percent-encoded; _read_range unquotes a file: URI
+    uri = status.getPath().toUri().toString()
     par = spark.sparkContext.defaultParallelism
-    packets = F.ceil(F.col("length") / F.lit(plen))
-    per = F.least(
-        F.lit(max(int(split_bytes) // plen, 1)),
-        F.greatest(
-            F.lit(max(RANGE_FLOOR_BYTES // plen, 1)), F.ceil(packets / F.lit(par))
-        ),
-    ).cast("long")
-    files = spark.read.format("binaryFile").load(path).select("path", "length")
-    ranges = (
-        files.select("path", packets.alias("_packets"), per.alias("_per"))
-        .select(
-            "path",
-            "_per",
-            F.explode(
-                F.sequence(
-                    F.lit(0).cast("long"),
-                    F.greatest(
-                        F.ceil(F.col("_packets") / F.col("_per")) - F.lit(1),
-                        F.lit(0),
-                    ).cast("long"),
-                )
-            ).alias("_ri"),
-        )
-        .select(
-            "path",
-            (F.col("_ri") * F.col("_per") * F.lit(plen)).alias("_start"),
-            (F.col("_per") * F.lit(plen)).alias("_len"),
-        )
-        .repartition(par)
+    packets = -(-status.getLen() // plen)
+    per = min(
+        max(split_bytes // plen, 1),
+        max(RANGE_FLOOR_BYTES // plen, 1, -(-packets // par)),
     )
+    n = max(-(-packets // per), 1)
 
     def _decode_ranges(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
-            cols = (batch.column(c).to_pylist() for c in ("path", "_start", "_len"))
-            for fpath, start, length in zip(*cols):
-                buf = _read_range(fpath, start, length)
-                yield from _decode_buf(buf, start // plen)
+            for i in batch.column("id").to_pylist():
+                # a trailing partial packet is legal mid-stream (file
+                # cut) and leaves the decoded rows unaffected
+                samples, ts, _leftover = frame_packets(
+                    _read_range(uri, i * per * plen, per * plen), params
+                )
+                rows = len(samples)
+                if rows == 0:
+                    continue
+                if params.samples_per_ts == 0:
+                    # stampless wire format: the k/odr grid must use
+                    # the GLOBAL sample index, not the range-local one
+                    t = np.arange(i * per, i * per + rows, dtype=np.float64) / params.odr
+                else:
+                    t = sample_times(ts, params, rows)
+                cols = [t, *np.ascontiguousarray(samples.T)]
+                for s in range(0, rows, CHUNK_ROWS):
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array(c[s : s + CHUNK_ROWS]) for c in cols],
+                        schema=arrow_schema,
+                    )
 
-    return ranges.mapInArrow(_decode_ranges, schema)
+    return spark.range(0, n, 1, min(n, par)).mapInArrow(_decode_ranges, schema)

@@ -23,7 +23,7 @@ from gcf_corima_parquet_converter_spark.sources.dat import (
     frame_packets,
     sample_times,
 )
-from tests.fixtures import SENSOR, make_dat_bytes, write_acquisition
+from tests.fixtures import SENSOR, decode_reference, make_dat_bytes, write_acquisition
 
 P = DecodeParams(
     dim=3, data_type="int16", samples_per_ts=64, sensitivity=0.000061, odr=2000.0
@@ -345,6 +345,32 @@ def test_process_acquisition_uses_no_executor_storage(spark, tmp_path, monkeypat
     assert spark.read.parquet(f"{out}/{SENSOR}_rms").count() == res["rms_rows"]
 
 
+def test_process_acquisition_runs_three_jobs(spark, tmp_path):
+    """One conversion is three Spark jobs: decode -> enrich -> sort ->
+    write, the RMS partial aggregate, and the final RMS with its write.
+    The .dat ranges are planned on the driver (no listing job, no range
+    shuffle) and the RMS aggregate is not globally sorted; the RMS sink
+    orders its one file by Time instead."""
+    import pyarrow.parquet as pq
+
+    write_acquisition(str(tmp_path / "J"), n_seconds=40, odr=26667)
+    out = str(tmp_path / "out")
+    sc = spark.sparkContext
+    group = "test_process_acquisition_runs_three_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        res = acq.process_acquisition(spark, str(tmp_path / "J"), out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res["rms_written"] and res["rms_rows"] == 39
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+    (rms_file,) = glob.glob(
+        f"{out}/{SENSOR}_rms/alias=LAF1/year=2025/month=7/day=11/*.parquet"
+    )
+    times = pq.read_table(rms_file, columns=["Time"]).column("Time").to_numpy()
+    assert len(times) == 39 and (np.diff(times) > 0).all()
+
+
 def test_incomplete_acquisition_soft_skips(spark, tmp_path):
     write_acquisition(str(tmp_path / "F"), incomplete=True)
     assert acq.load_acquisition(spark, str(tmp_path / "F")) is None
@@ -428,9 +454,8 @@ def test_process_acquisition_decodes_once(spark, tmp_path, monkeypatch):
         df = real_decode(spark_, path, params)
 
         def tick(it):
-            # tick once per NON-EMPTY partition: the ranged decode
-            # repartitions over defaultParallelism, so empty partitions
-            # exist and must not count as decode work
+            # tick once per NON-EMPTY partition: a partition that
+            # decodes no rows must not count as decode work
             first = True
             for pdf in it:
                 if first:
@@ -465,16 +490,14 @@ def test_process_acquisition_decodes_once(spark, tmp_path, monkeypatch):
 
 def test_decode_dat_ranged_split_parity(spark, tmp_path):
     """r12 packet-aligned range decode: forcing many small ranges over
-    one file yields exactly the whole-file decode — samples, per-packet
-    stamp times, trailing-garbage tolerance."""
+    one file yields exactly the whole-file decode (numpy over the whole
+    file's bytes) — samples, per-packet stamp times, trailing-garbage
+    tolerance."""
     from gcf_corima_parquet_converter_spark.sources.dat import decode_dat
 
     in_g, t = write_acquisition(str(tmp_path / "R"), trailing_garbage=37)
     path = str(tmp_path / "R" / f"{SENSOR}.dat")
-    whole = (
-        decode_dat(spark, path, P, split_bytes=None)
-        .toPandas().sort_values("Time").reset_index(drop=True)
-    )
+    whole = decode_reference(path, P)
     # split at ~4 packets per range -> dozens of ranges
     ranged = (
         decode_dat(spark, path, P, split_bytes=P.packet_len * 4)
@@ -516,11 +539,24 @@ def test_decode_dat_ranges_fill_every_partition(spark, tmp_path):
     assert parts == par
 
 
+def test_decode_dat_plan_is_range_then_kernel(spark, tmp_path):
+    """The decode's ranges come from a driver-planned ``spark.range``:
+    its executed plan scans no file and shuffles nothing."""
+    from gcf_corima_parquet_converter_spark.sources.dat import decode_dat
+
+    write_acquisition(str(tmp_path / "K"))
+    df = decode_dat(spark, str(tmp_path / "K" / f"{SENSOR}.dat"), P)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Range (" in plan and "MapInArrow" in plan
+    assert "Exchange" not in plan
+    assert "binaryfile" not in plan.lower() and "FileScan" not in plan
+
+
 def test_decode_dat_ranged_handles_percent_encoded_paths(spark, tmp_path):
-    """r13 (ADVICE): binaryFile hands executors Hadoop URIs with
-    percent-encoded special characters (space -> %20); the ranged
+    """r13 (ADVICE): the range tasks read a qualified Hadoop URI, whose
+    special characters are percent-encoded (space -> %20); the ranged
     decoder must unquote before open() or it FileNotFoundErrors on
-    such filenames while the whole-file path works."""
+    such filenames."""
     import shutil
 
     from gcf_corima_parquet_converter_spark.sources.dat import decode_dat

@@ -479,10 +479,12 @@ def test_ranged_decode_equals_whole_file(
 ):
     """r12 S4 invariant: for ANY wire format (dim/spts/dtype), trailing
     garbage, and packet-aligned split size, the ranged decode emits
-    exactly the whole-file decode's rows."""
+    exactly the whole-file decode's rows (numpy over the whole file's
+    bytes)."""
     import os
 
     from gcf_corima_parquet_converter_spark.sources.dat import decode_dat
+    from tests.fixtures import decode_reference
 
     p = DecodeParams(
         dim=dim,
@@ -523,15 +525,11 @@ def test_ranged_decode_equals_whole_file(
     with open(f, "wb") as fh:
         fh.write(buf)
 
-    def rows(split):
-        out = (
-            decode_dat(spark, f, p, split_bytes=split)
-            .toPandas().sort_values("Time").reset_index(drop=True)
-        )
-        return out
-
-    whole = rows(None)
-    ranged = rows(p.packet_len * split_packets)
+    whole = decode_reference(f, p)
+    ranged = (
+        decode_dat(spark, f, p, split_bytes=p.packet_len * split_packets)
+        .toPandas().sort_values("Time").reset_index(drop=True)
+    )
     assert len(whole) == len(ranged) == n
     np.testing.assert_allclose(
         ranged["Time"].to_numpy(), whole["Time"].to_numpy(), atol=1e-12
