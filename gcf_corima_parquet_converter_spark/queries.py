@@ -3025,16 +3025,12 @@ def q94(spark, sf_dir):
     )
     return (
         tm.interval_join_binned(
-            # r18: half the interval span (was 600s = the span).  The
-            # bench's three-width A/B at sf0.1+sf1 (bench_scaling's
-            # bin_width_ab, r17 verdict #5 — asserts all widths return
-            # identical rows) measured 300s fastest at sf1 (12.0s vs
-            # 13.3s at 600s, 19.3s at 2400s).  Narrower bins emit more
+            # bin_width is half the interval span, the fastest of the
+            # widths bench_scaling's bin_width_ab compares (every width
+            # returns identical rows).  Narrower bins emit more
             # (interval, bin) replicas but funnel fewer points per
-            # bin-pair through the residual range filter; this
-            # fixture's density makes the filter the binding term, and
-            # the main q94 scaling row's work-normalized decade ratio
-            # had crept to 9.8 of the <= 10 rule at 600s.
+            # bin-pair through the residual range filter, which this
+            # fixture's density makes the binding term.
             points, ivs, bin_width=300_000_000, time_col="t"
         )
         .select("pid", "iv_id")
